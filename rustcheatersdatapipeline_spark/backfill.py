@@ -34,6 +34,7 @@ import datetime as _dt
 from typing import Callable
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from .pipeline import BatchResult, run_batch
 from .warehouse.persist import GoldStore, publish_with_retry
@@ -79,6 +80,20 @@ def completed_intervals(store: GoldStore) -> set[str]:
     }
 
 
+def _progress_row(spark: SparkSession, iso: str, loaded: list[str], failed: list[str]):
+    """The one-row progress frame, built from literals: a local Python
+    list would go through a Python RDD and start Python workers."""
+
+    def names(xs):
+        return F.array(*[F.lit(x) for x in xs]).cast("array<string>")
+
+    return spark.range(1, numPartitions=1).select(
+        F.lit(iso).alias("interval_end"),
+        names(loaded).alias("loaded"),
+        names(failed).alias("failed"),
+    )
+
+
 def run_interval_range(
     spark: SparkSession,
     store: GoldStore,
@@ -101,6 +116,10 @@ def run_interval_range(
     recorded committed (the reference's none_failed_min_one_success end
     rule). A batch that raises outright leaves no progress row and no
     gold change — the rerun picks up exactly there.
+
+    Each interval's bronze caches are released once its publish
+    resolves, and a build that lost the CAS race releases its own before
+    the rebuild, so the rebuild reads the bronze as it is then.
     """
     ran: list[tuple[_dt.datetime, BatchResult, int]] = []
     done = completed_intervals(store)
@@ -118,8 +137,6 @@ def run_interval_range(
             # duplicate progress row
             prior_progress = tables.get(PROGRESS_TABLE)
             if prior_progress is not None:
-                from pyspark.sql import functions as F
-
                 hit = (
                     prior_progress
                     .filter(F.col("interval_end") == _iso)
@@ -127,6 +144,8 @@ def run_interval_range(
                 )
                 if hit:
                     raise _IntervalAlreadyCommitted(_iso)
+            if "res" in holder:
+                holder["res"].release()  # the attempt that lost the CAS race
             existing = {k: v for k, v in tables.items() if k != PROGRESS_TABLE}
             res = run_batch(
                 spark,
@@ -136,11 +155,7 @@ def run_interval_range(
                 **run_batch_kwargs,
             )
             holder["res"] = res
-            row = spark.createDataFrame(
-                [(_iso, sorted(res.gold), sorted(res.failed))],
-                "interval_end string, loaded array<string>, "
-                "failed array<string>",
-            )
+            row = _progress_row(spark, _iso, sorted(res.gold), sorted(res.failed))
             prior = tables.get(PROGRESS_TABLE)
             progress = row if prior is None else prior.unionByName(row)
             # the progress row publishes IN the same commit as the gold
@@ -151,6 +166,9 @@ def run_interval_range(
             version = publish_with_retry(store, build)
         except _IntervalAlreadyCommitted:
             continue  # a racing driver committed it — skip, don't re-run
+        finally:
+            if "res" in holder:
+                holder["res"].release()
         ran.append((interval_end, holder["res"], version))
     return ran
 

@@ -4,8 +4,10 @@ The reference fails the whole task on contract violations
 (rust_twitter_steam_dims.py:49-50 "Data Contains Duplicate Rows",
 rust_twitter_steam_facts.py:53-54 "...Missing Data NaN/Null"); here the
 assertions are testable check functions that raise ``ValidationError``.
-Both are single-aggregate jobs — cheap at any scale (count + distinct
-count shuffle once with partial aggregation).
+D2 and D3 share one aggregate (``quality_counts``): the frame is grouped
+on its full row once and folded to (rows, distinct rows, null rows), so
+checking both costs one action — one pass over the transform chain —
+not one per count.
 """
 
 from __future__ import annotations
@@ -38,15 +40,51 @@ def keyed_dedup(df: DataFrame, keys: list[str], order_by: list[str] | None = Non
     )
 
 
-def assert_no_duplicates(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """D2 duplicate-row assertion (reference rust_twitter_steam_dims.py:49-50)."""
-    total = df.count()
-    distinct = (df.select(*keys) if keys else df).distinct().count()
-    if total != distinct:
+def quality_counts(
+    df: DataFrame, keys: list[str] | None = None, null_cols: list[str] | None = None
+) -> tuple[int, int, int]:
+    """(rows, distinct ``keys`` tuples, rows with a NULL in any of
+    ``null_cols``) from one aggregate: group on ``keys`` (default: every
+    column), count each group and the null rows inside it, then fold the
+    groups in the same plan. One collect, so the transform chain behind
+    ``df`` runs once for both contracts."""
+    keys = list(keys or df.columns)
+    has_null = F.lit(False)
+    for c in null_cols or []:
+        has_null = has_null | F.col(c).isNull()
+    groups = df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("__rows"),
+        F.sum(has_null.cast("long")).alias("__null_rows"),
+    )
+    r = groups.agg(
+        F.sum("__rows").alias("total"),
+        F.count(F.lit(1)).alias("distinct"),
+        F.sum("__null_rows").alias("null_rows"),
+    ).collect()[0]
+    return int(r["total"] or 0), int(r["distinct"]), int(r["null_rows"] or 0)
+
+
+def assert_quality(
+    df: DataFrame,
+    keys: list[str] | None = None,
+    null_cols: list[str] | None = None,
+    duplicates: bool = True,
+) -> DataFrame:
+    """D2 (when ``duplicates``) then D3 over ``null_cols``, from one
+    ``quality_counts`` aggregate; a frame violating both raises D2."""
+    total, distinct, null_rows = quality_counts(df, keys, null_cols)
+    if duplicates and total != distinct:
         raise ValidationError(
             f"Data Contains Duplicate Rows: {total - distinct} duplicates"
         )
+    if null_rows:
+        raise ValidationError(f"Data Contains Missing Data NaN/Null: {null_rows} rows")
     return df
+
+
+def assert_no_duplicates(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
+    """D2 duplicate-row assertion (reference rust_twitter_steam_dims.py:49-50)."""
+    return assert_quality(df, keys)
 
 
 def assert_no_nulls(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -56,12 +94,4 @@ def assert_no_nulls(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     per transform (unlock_ts at facts.py:53; steam_id-only checks at
     :516,:631) — so the column list is explicit here too.
     """
-    cols = cols or df.columns
-    pred = None
-    for c in cols:
-        p = F.col(c).isNull()
-        pred = p if pred is None else (pred | p)
-    n = df.filter(pred).count()
-    if n:
-        raise ValidationError(f"Data Contains Missing Data NaN/Null: {n} rows")
-    return df
+    return assert_quality(df, null_cols=cols or df.columns, duplicates=False)

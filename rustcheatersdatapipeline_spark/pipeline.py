@@ -15,7 +15,9 @@ a batch summary.
 Scale notes: bronze is partitioned by ingest date (the reference's
 YYYY/MM/DD S3 layout → partitionBy('year','month','day'), giving
 partition pruning); silver/gold persist as Parquet. Every transform is
-one lazy plan — the only materializations are the gold writes.
+one lazy plan. A batch materializes in three places: the cached bronze
+reads (one corrupt-record count each), one D2/D3 aggregate per silver
+table, and the gold publish.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ from pyspark.sql.utils import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .operators.dedup import ValidationError, assert_no_duplicates, assert_no_nulls
+from .operators.dedup import ValidationError, assert_quality
 from .schemas import BRONZE_SCHEMAS
 from .transforms.builders import DIM_TRANSFORMS, FACT_TRANSFORMS
 from .warehouse.loads import build_warehouse
@@ -55,13 +57,14 @@ NULL_CHECK_EXEMPT: dict[str, list[str]] = {
 
 
 def validate_silver(name: str, df: DataFrame) -> None:
-    """Apply the reference's runtime contracts to one silver table."""
-    assert_no_duplicates(df)  # D2: all 16 transforms
+    """Apply the reference's runtime contracts to one silver table: D2
+    on all 16 transforms, D3 on facts and player_dim, both from one
+    aggregate job."""
+    null_cols: list[str] = []
     if name.endswith("_fact") or name == "player_dim":
         exempt = set(NULL_CHECK_EXEMPT.get(name, []))
-        cols = [c for c in df.columns if c not in exempt]
-        if cols:
-            assert_no_nulls(df, cols)  # D3
+        null_cols = [c for c in df.columns if c not in exempt]
+    assert_quality(df, null_cols=null_cols)
 
 
 @dataclass
@@ -75,6 +78,9 @@ class BatchResult:
     #: branches that failed once and succeeded on the bounded re-attempt
     #: (reference retries: 1, rust_twitter_steam_pipeline.py:40-41)
     retried: list[str] = field(default_factory=list)
+    #: the cached bronze reads behind ``gold``; the caller releases them
+    #: (``release``) once the gold is written
+    cached: list[DataFrame] = field(default_factory=list)
 
     @property
     def succeeded(self) -> bool:
@@ -82,10 +88,27 @@ class BatchResult:
         (rust_twitter_steam_pipeline.py:877)."""
         return len(self.gold) > 0 and not self.failed
 
+    def release(self) -> None:
+        """Unpersist the batch's bronze caches. ``gold`` stays readable:
+        its frames recompute from the bronze files."""
+        for df in self.cached:
+            df.unpersist()
+        self.cached = []
+
+
+class BronzeFrames(dict):
+    """Bronze frames by endpoint name. ``cached`` holds the cached reads
+    behind them, which the batch hands to its caller to release; a dict,
+    so ``read_bronze`` keeps its ``(tables, failed)`` return shape."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.cached: list[DataFrame] = []
+
 
 def read_bronze(
     spark: SparkSession, bronze_dir: str
-) -> tuple[dict[str, DataFrame], dict[str, str]]:
+) -> tuple[BronzeFrames, dict[str, str]]:
     """Schema-pinned bronze reads.
 
     - Missing endpoint file → skipped branch (S15 soft-fail semantics).
@@ -93,9 +116,10 @@ def read_bronze(
       ``_corrupt_record`` (SURVEY.md §1.4). Without this check a corrupt
       document parses as one all-null row, explode_outer drops it, and
       the batch reports success with silently-empty tables — worse than
-      the reference's hard json.loads failure.
+      the reference's hard json.loads failure. A corrupt read's cache is
+      released at once; the others ride on ``out.cached``.
     """
-    out: dict[str, DataFrame] = {}
+    out = BronzeFrames()
     failed: dict[str, str] = {}
     for name, schema in BRONZE_SCHEMAS.items():
         if name == "twitter_timeline":
@@ -114,8 +138,10 @@ def read_bronze(
             n_corrupt = df.filter(F.col("_corrupt_record").isNotNull()).count()
             if n_corrupt:
                 failed[name] = f"{n_corrupt} corrupt bronze record(s)"
+                df.unpersist()
             else:
                 out[name] = df.drop("_corrupt_record")
+                out.cached.append(df)
         except AnalysisException:
             pass  # sensor-skip semantics
     return out, failed
@@ -142,10 +168,13 @@ def run_batch(
     none_failed_min_one_success end rule + per-task loads): a failed or
     skipped branch holds back only the loads that depend on it —
     build_warehouse carries prior state for those and loads the rest.
+
+    The bronze reads stay cached on ``result.cached`` until the caller
+    calls ``result.release()``, once it has written the gold.
     """
     date_end = date_end or (interval_end.date() + _dt.timedelta(days=365))
     bronze, bad_bronze = read_bronze(spark, bronze_dir)
-    result = BatchResult(gold={})
+    result = BatchResult(gold={}, cached=bronze.cached)
 
     silver: dict[str, DataFrame] = {}
     for name, (fn, src) in {**DIM_TRANSFORMS, **FACT_TRANSFORMS}.items():
@@ -197,11 +226,17 @@ def run_batch_transactional(
     holder: dict[str, BatchResult] = {}
 
     def build(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        if "res" in holder:
+            holder["res"].release()  # the attempt that lost the CAS race
         res = run_batch(
             spark, bronze_dir, interval_end, existing=tables or None, **kwargs
         )
         holder["res"] = res
         return res.gold
 
-    version = publish_with_retry(store, build)
+    try:
+        version = publish_with_retry(store, build)
+    finally:
+        if "res" in holder:
+            holder["res"].release()
     return holder["res"], version

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 
@@ -142,8 +143,11 @@ class GoldStore:
     - **write**: each publish lands its tables in an immutable
       ``_data/<txn>/`` directory; nothing references it yet, so a crashed
       or rejected publish leaves gold untouched (orphans are vacuumed).
-    - **audit**: staged tables are read back (schema + row count) before
-      they can be referenced — a torn write can never become visible.
+    - **audit**: every staged file's parquet footer is parsed (row count
+      + column stats) before the table can be referenced — a torn write
+      can never become visible. The recorded schema is the one Spark's
+      read-back would report; only tables with expectations or declared
+      constraints are read back through Spark, to evaluate them.
     - **publish**: a root ``_manifest.json`` names the exact directory of
       every table version. Commit = fsync a new manifest + atomic
       ``os.replace``, performed under a compare-and-swap on the base
@@ -1114,12 +1118,17 @@ class GoldStore:
         (success: the manifest now references the dir; rejection: the
         dir is a plain orphan, reclaimable after the retention age).
 
+        The audit reads metadata only: ``_file_stats`` parses every
+        staged file's footer (a torn file raises here, before any
+        manifest exists), ``rows`` is the sum of the footer row counts,
+        and ``schema`` is derived by ``_staged_schema`` — no Spark job.
+
         ``expectations`` maps table name → SQL predicates every row must
         satisfy (the Delta-constraints shape, public design): violations
-        are counted on the AUDIT read-back — what actually landed, not
-        the logical plan — and any violation raises ``ExpectationError``
-        before a manifest exists, so a bad batch can never become
-        visible."""
+        are counted on a read-back of the staged dir — what actually
+        landed, not the logical plan — and any violation raises
+        ``ExpectationError`` before a manifest exists, so a bad batch can
+        never become visible."""
         from pyspark.sql import functions as F
 
         self._mark_staged(txn)
@@ -1128,14 +1137,21 @@ class GoldStore:
             rel = os.path.join("_data", txn, name)
             target = os.path.join(self.path, rel)
             w = df.write.mode("error")
+            part_col = None
             if partitioned and name in PARTITIONED_FACTS and "date_sk" in df.columns:
-                w = w.partitionBy("date_sk")
+                part_col = "date_sk"
+                w = w.partitionBy(part_col)
             w.parquet(target)
-            # audit: reread what actually landed — a table that cannot be
-            # scanned (torn file, schema corruption) must never publish
-            back = self.spark.read.parquet(target)
+            files = self._file_stats(target, self.path)
+            staged[name] = {
+                "dir": rel,
+                "rows": sum(f["rows"] for f in files),
+                "files": files,
+                "schema": self._staged_schema(df.schema.jsonValue(), files, part_col),
+            }
             exprs = (expectations or {}).get(name) or []
             if exprs:
+                back = self._read_staged(staged[name])
                 # one job for all predicates: count rows violating each
                 viol = back.agg(
                     *[
@@ -1155,13 +1171,64 @@ class GoldStore:
                             f"expectation {e!r} — publish rejected, store "
                             "untouched"
                         )
-            staged[name] = {
-                "dir": rel,
-                "rows": back.count(),
-                "files": self._file_stats(target, self.path),
-                "schema": back.schema.jsonValue(),
-            }
         return staged
+
+    @classmethod
+    def _staged_schema(cls, schema: dict, files: list[dict], part_col: str | None) -> dict:
+        """The schema ``spark.read.parquet`` reports for a staged dir,
+        from the written frame's schema (JSON form) and the staged files:
+        file sources read every field nullable, and a partition column
+        comes last, typed by ``_partition_type`` over its directory
+        values. With no files to infer from (an empty partitioned write)
+        it keeps the frame's type."""
+
+        def nullable(t):
+            if not isinstance(t, dict):
+                return t
+            if t["type"] == "struct":
+                return {**t, "fields": [
+                    {**f, "nullable": True, "type": nullable(f["type"])} for f in t["fields"]
+                ]}
+            if t["type"] == "array":
+                return {**t, "containsNull": True, "elementType": nullable(t["elementType"])}
+            if t["type"] == "map":
+                return {**t, "valueContainsNull": True,
+                        "keyType": nullable(t["keyType"]),
+                        "valueType": nullable(t["valueType"])}
+            return t
+
+        out = nullable(schema)
+        if part_col is None:
+            return out
+        fields = [f for f in out["fields"] if f["name"] != part_col]
+        (col,) = [f for f in out["fields"] if f["name"] == part_col]
+        if files:
+            col = {**col, "type": cls._partition_type(
+                [f["partition"][part_col] for f in files]
+            )}
+        return {**out, "fields": fields + [col]}
+
+    @staticmethod
+    def _partition_type(values: list[str]) -> str:
+        """Spark's partition-value type inference, over the integral date
+        keys this store partitions by: int, widened to bigint past 32
+        bits; a non-integral value makes the column string. The null
+        partition takes any type; a column of only nulls is string."""
+        vals = [v for v in values if v != "__HIVE_DEFAULT_PARTITION__"]
+        if not vals or not all(re.fullmatch(r"[+-]?[0-9]+", v) for v in vals):
+            return "string"
+        if all(-(2**31) <= int(v) < 2**31 for v in vals):
+            return "integer"
+        return "long" if all(-(2**63) <= int(v) < 2**63 for v in vals) else "string"
+
+    def _read_staged(self, entry: dict) -> DataFrame:
+        """Spark read of a staged table with its recorded schema (no
+        schema-inference job; an empty partitioned dir reads as empty)."""
+        from pyspark.sql.types import StructType
+
+        return self.spark.read.schema(StructType.fromJson(entry["schema"])).parquet(
+            os.path.join(self.path, entry["dir"])
+        )
 
     def _mark_staged(self, txn: str) -> None:
         txn_dir = os.path.join(self.path, "_data", txn)
@@ -1277,14 +1344,9 @@ class GoldStore:
             return
         current = self.current_manifest()["tables"]
 
-        def staged_df(n):
-            return self.spark.read.parquet(
-                os.path.join(self.path, staged[n]["dir"])
-            )
-
         def resolver(t):
             if t in staged:
-                df = staged_df(t)
+                df = self._read_staged(staged[t])
                 if append_to_existing and t in current:
                     # an appended sibling contributes its delta ON TOP of
                     # the prior rows (a replace-published sibling IS the
@@ -1301,7 +1363,7 @@ class GoldStore:
             if append_to_existing and pk and name in current:
                 existing_keys = self.read(name).select(*pk)
             self._enforce_relational(
-                name, staged_df(name), cons, resolver, existing_keys
+                name, self._read_staged(staged[name]), cons, resolver, existing_keys
             )
 
     def publish(
@@ -1342,11 +1404,8 @@ class GoldStore:
                     for c, _ in self._referencing_fks(t)
                 ):
                     continue
-                post = self.spark.read.parquet(
-                    os.path.join(self.path, staged[t]["dir"])
-                )
                 self._audit_referencing_children(
-                    t, post, skip_children=staged_names
+                    t, self._read_staged(staged[t]), skip_children=staged_names
                 )
         except ConstraintError:
             self._unmark_staged(txn)

@@ -2,7 +2,10 @@
 (reference: dags/rust_twitter_steam_pipeline.py:44-51 hourly schedule,
 max_active_runs=1, Airflow catchup semantics)."""
 
+import copy
 import datetime as dt
+import json
+import os
 
 import pytest
 
@@ -12,8 +15,8 @@ from rustcheatersdatapipeline_spark.backfill import (
     interval_ends,
     run_interval_range,
 )
-from rustcheatersdatapipeline_spark.warehouse.persist import GoldStore
-from tests.fixtures import write_fixtures
+from rustcheatersdatapipeline_spark.warehouse.persist import ConcurrentWriteError, GoldStore
+from tests.fixtures import FIXTURES, write_fixtures
 
 START = dt.datetime(2021, 10, 2, 0, 0, 0)
 STEP = dt.timedelta(hours=1)
@@ -139,6 +142,63 @@ def test_racing_driver_skips_interval_committed_after_resume_check(
     assert calls["n"] == 0  # the batch itself never executed
     rows = store.read(PROGRESS_TABLE).collect()
     assert len(rows) == 1  # exactly one progress row for the interval
+
+
+def test_first_publish_commits_an_empty_partitioned_fact(spark, tmp_path):
+    """With no profile in game, game_playing_banned_fact is empty: its
+    partitioned write lands no file. A fresh store's first publish still
+    commits it, with ``rows: 0`` and the fact's schema, and reads it back
+    as an empty frame."""
+    doc = copy.deepcopy(FIXTURES["player_summaries"])
+    for r in doc["responses"]:
+        for p in r["response"]["players"]:
+            p.pop("gameid", None)
+    paths = write_fixtures(tmp_path)
+    with open(paths["player_summaries"], "w") as fh:
+        fh.write(json.dumps(doc))
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    ((_, res, version),) = run_interval_range(
+        spark, store, lambda _: str(tmp_path), START, START + STEP
+    )
+    assert res.succeeded and not res.not_loaded
+    entry = store.manifest_at(version)["tables"]["game_playing_banned_fact"]
+    assert (entry["rows"], entry["files"]) == (0, [])
+    empty = store.read("game_playing_banned_fact")
+    assert empty.count() == 0
+    assert empty.schema == spark.createDataFrame(
+        [], "player_sk int, game_sk int, date_sk int"
+    ).schema
+
+
+def test_backfill_releases_its_bronze_caches(spark, tmp_path, bronze, monkeypatch):
+    """Every interval's bronze caches are unpersisted once its publish
+    resolves. A build that lost the CAS race releases its caches before
+    the rebuild, so the rebuild reads the bronze as it is now: here a
+    profile renamed while the lost attempt was in flight."""
+    real_publish = GoldStore.publish
+    lost = []
+
+    def publish_losing_once(self, *a, **k):
+        if not lost:
+            lost.append(1)
+            doc = copy.deepcopy(FIXTURES["player_summaries"])
+            doc["responses"][0]["response"]["players"][0]["personaname"] = "renamed"
+            with open(os.path.join(bronze, "player_summaries.json"), "w") as fh:
+                fh.write(json.dumps(doc))
+            raise ConcurrentWriteError("simulated lost race")
+        return real_publish(self, *a, **k)
+
+    monkeypatch.setattr(GoldStore, "publish", publish_losing_once)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    ran = run_interval_range(spark, store, lambda _: bronze, START, START + 2 * STEP)
+    assert lost and len(ran) == 2 and all(res.succeeded for _, res, _ in ran)
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
+    # the rebuild of interval 1 itself saw the rename, not a stale cache
+    first = store.read_at("player_dim", ran[0][2])
+    names = {r["persona_name"] for r in first.collect()}
+    assert "renamed" in names and "cheater_one" not in names
 
 
 @pytest.mark.slow
