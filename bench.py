@@ -20,13 +20,14 @@ all reps of one.
 
 Cold-invocation reps, r14 methodology (VERDICT r13 next-round #3).
 Before r14, ``plan_cache.cached()`` intermediates (shingle/df/prefix/
-signature/pair-set/CDC tables) and the sizing-scalar memos
-(``choose_shingle_k``, ``_emb_count``) survived across reps, so reps
-2..N of the near-dup/embed/LSH family skipped those builds and the
-median was a warm-steady-state number — a cold invocation of e.g.
+signature/pair-set/CDC tables) and the sizing scalars (shingle width,
+embedding count) survived across reps, so reps 2..N of the
+near-dup/embed/LSH family skipped those builds and the median was a
+warm-steady-state number — a cold invocation of e.g.
 dedup_ngram_jaccard costs more than the r13-reported 2.09 s. Now
-``_cold_reset`` (plan_cache.release + clear_session_memos) runs
-BETWEEN reps, so every rep prices a cold invocation. For series
+``_cold_reset`` runs BETWEEN reps: one ``plan_cache.release`` drops
+every cached table, checkpoint and sizing scalar the registry owns,
+so every rep prices a cold invocation. For series
 continuity the sweep ends with ONE extra warm pass over all queries
 (no reset — reusing the last rep's intermediates exactly as the old
 loop's reps 2+ did), reported as ``queries_warm_pass`` /
@@ -41,7 +42,7 @@ cold invocations, so it is directly comparable to r13's ``value``
 only through ``value_warm_pass`` (one warm sample per query) or the
 per-query deltas of unaffected queries. None of the 10 ruler queries
 touches a cross-rep cache or memo (verified: cached()/checkpointed()
-consumers are the near-dup family; _emb_count consumers are
+consumers are the near-dup family; embedding-count consumers are
 embed_neardup_cosine and the LSH queries), so the ruler references
 and host-factor arithmetic are unchanged by the cold loop.
 
@@ -235,18 +236,15 @@ def _job_probe(spark) -> float:
 
 def _cold_reset(spark, sf_dir: str) -> int:
     """Drop every cross-invocation intermediate so the next rep prices
-    a COLD query invocation: release the plan-cache registry's handles
-    (cached shingle/signature/pair tables, registry-owned checkpoints)
-    and the sizing-scalar memos (shingle k, embedding count). Returns
-    the number of plan-cache handles released (0 when nothing was
-    registered — e.g. between reps of a subset sweep that never builds
-    them)."""
+    a COLD query invocation: ``plan_cache.release`` frees everything
+    the registry owns for ``sf_dir`` — cached shingle/signature/pair
+    tables, registry-owned checkpoints and the sizing scalars (shingle
+    k, embedding count). Returns the number of entries released (0
+    when nothing was registered — e.g. between reps of a subset sweep
+    that never builds them)."""
     from rustcheatersdatapipeline_spark import plan_cache
-    from rustcheatersdatapipeline_spark.plans import training as _tr
 
-    n = plan_cache.release(spark, sf_dir)
-    _tr.clear_session_memos(spark, sf_dir)
-    return n
+    return plan_cache.release(spark, sf_dir)
 
 
 def main() -> None:

@@ -30,6 +30,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plan_cache import checkpoint
+
 #: default vocabulary bound — the model stays broadcastable
 NB_VOCAB_SIZE = 50_000
 #: Laplace smoothing mass
@@ -225,66 +227,70 @@ def lr_train(
     feature rows contribute sigmoid(0)−y to nothing (no rows → no
     gradient mass), matching the replica.
     """
-    spark = feats.sparkSession
-    feats = feats.join(labels, "doc_id").select("doc_id", "bucket", "x", "y")
-    feats = feats.localCheckpoint()  # one materialization; iterations re-scan
-    n_docs = feats.select("doc_id").distinct().count()
-    if n_docs == 0:
-        raise ValueError(
-            "lr_train: no labeled documents with feature rows "
-            "(labels join produced an empty training set)"
-        )
-    weights = [0.0] * buckets
-    losses: list[float] = []
-    for _ in range(n_iter):
-        wlit = F.array(*[F.lit(float(w)) for w in weights])
-        contrib = F.floor(
-            F.lit(_LR_SCALE)
-            * F.col("x")
-            * F.element_at(wlit, F.col("bucket").cast("int") + 1)
-        ).cast("long")
-        margins = feats.groupBy("doc_id").agg(
-            F.sum(contrib).alias("ms"), F.min("y").alias("y")
-        )
-        m = F.col("ms") / F.lit(_LR_SCALE)
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-m))
-        # the REPORTED loss clamps p into [eps, 1-eps]: under the
-        # aggressive default rate a saturated sigmoid sends log(p) /
-        # log1p(-p) to ±inf/NaN and poisons the whole loss scalar
-        # (ADVICE r12). The gradient keeps the UNclamped p — clamping
-        # there would change the trained weights.
-        eps = F.lit(1e-15)
-        pc = F.least(F.greatest(p, eps), F.lit(1.0) - eps)
-        # cached: the loss scalar AND the gradient join both read the
-        # margin aggregate — uncached, the heaviest stage (the full
-        # feature-table groupBy) would run twice per iteration (r13
-        # review); one row per labeled doc, released before the next
-        # iteration rebuilds it with fresh weights
-        scored = margins.select(
-            "doc_id", "y", (p - F.col("y")).alias("err"),
-            (-F.col("y") * F.log(pc) - (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - pc)).alias(
-                "nll"
-            ),
-        ).cache()
-        try:
-            # loss: mean nll over labeled docs (driver-side scalar)
-            loss_row = scored.agg(F.sum("nll").alias("s")).first()
-            losses.append(float(loss_row["s"]) / n_docs)
-            grad_rows = (
-                feats.join(scored.select("doc_id", "err"), "doc_id")
-                .select(
-                    "bucket",
-                    F.floor(F.lit(_LR_SCALE) * F.col("err") * F.col("x")).cast("long").alias("gc"),
-                )
-                .groupBy("bucket")
-                .agg(F.sum("gc").alias("g"))
-                .collect()
+    # one materialization the iterations re-scan, released before
+    # returning: the result is a driver-side list
+    feats_h = checkpoint(feats.join(labels, "doc_id").select("doc_id", "bucket", "x", "y"))
+    feats = feats_h.value
+    try:
+        n_docs = feats.select("doc_id").distinct().count()
+        if n_docs == 0:
+            raise ValueError(
+                "lr_train: no labeled documents with feature rows "
+                "(labels join produced an empty training set)"
             )
-        finally:
-            scored.unpersist(blocking=False)
-        for r in grad_rows:
-            weights[int(r["bucket"])] -= rate * (r["g"] / _LR_SCALE) / n_docs
-    return weights, losses
+        weights = [0.0] * buckets
+        losses: list[float] = []
+        for _ in range(n_iter):
+            wlit = F.array(*[F.lit(float(w)) for w in weights])
+            contrib = F.floor(
+                F.lit(_LR_SCALE)
+                * F.col("x")
+                * F.element_at(wlit, F.col("bucket").cast("int") + 1)
+            ).cast("long")
+            margins = feats.groupBy("doc_id").agg(
+                F.sum(contrib).alias("ms"), F.min("y").alias("y")
+            )
+            m = F.col("ms") / F.lit(_LR_SCALE)
+            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-m))
+            # the REPORTED loss clamps p into [eps, 1-eps]: under the
+            # aggressive default rate a saturated sigmoid sends log(p) /
+            # log1p(-p) to ±inf/NaN and poisons the whole loss scalar
+            # (ADVICE r12). The gradient keeps the UNclamped p — clamping
+            # there would change the trained weights.
+            eps = F.lit(1e-15)
+            pc = F.least(F.greatest(p, eps), F.lit(1.0) - eps)
+            # cached: the loss scalar AND the gradient join both read the
+            # margin aggregate — uncached, the heaviest stage (the full
+            # feature-table groupBy) would run twice per iteration (r13
+            # review); one row per labeled doc, released before the next
+            # iteration rebuilds it with fresh weights
+            scored = margins.select(
+                "doc_id", "y", (p - F.col("y")).alias("err"),
+                (-F.col("y") * F.log(pc) - (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - pc)).alias(
+                    "nll"
+                ),
+            ).cache()
+            try:
+                # loss: mean nll over labeled docs (driver-side scalar)
+                loss_row = scored.agg(F.sum("nll").alias("s")).first()
+                losses.append(float(loss_row["s"]) / n_docs)
+                grad_rows = (
+                    feats.join(scored.select("doc_id", "err"), "doc_id")
+                    .select(
+                        "bucket",
+                        F.floor(F.lit(_LR_SCALE) * F.col("err") * F.col("x")).cast("long").alias("gc"),
+                    )
+                    .groupBy("bucket")
+                    .agg(F.sum("gc").alias("g"))
+                    .collect()
+                )
+            finally:
+                scored.unpersist(blocking=False)
+            for r in grad_rows:
+                weights[int(r["bucket"])] -= rate * (r["g"] / _LR_SCALE) / n_docs
+        return weights, losses
+    finally:
+        feats_h.unpersist()
 
 
 def lr_margins(
@@ -368,94 +374,99 @@ def softmax_train(
     probabilities.
 
     ``labels``: (doc_id, y) with y ∈ {0..K−1} (int)."""
-    feats = feats.join(labels, "doc_id").select(
-        "doc_id", "bucket", "x", F.col("y").cast("int").alias("y")
+    feats_h = checkpoint(  # re-scanned per iteration, released (see lr_train)
+        feats.join(labels, "doc_id").select(
+            "doc_id", "bucket", "x", F.col("y").cast("int").alias("y")
+        )
     )
-    feats = feats.localCheckpoint()  # one materialization; iterations re-scan
-    n_docs = feats.select("doc_id").distinct().count()
-    if n_docs == 0:
-        raise ValueError(
-            "softmax_train: no labeled documents with feature rows "
-            "(labels join produced an empty training set)"
-        )
-    if feats.filter(F.col("y").isNull()).limit(1).count():
-        # a NULL label would silently act as a negative example for
-        # EVERY class (err = p - NULL-indicator -> p) while dropping
-        # out of the loss numerator — corrupt training, no error
-        # (r13 review). Fail loudly instead.
-        raise ValueError(
-            "softmax_train: NULL labels in the training set (a label "
-            "value outside the class mapping, or missing source labels)"
-        )
-    K = int(n_classes)
-    if K < 2:
-        raise ValueError("softmax_train: n_classes must be >= 2")
-    weights = [[0.0] * buckets for _ in range(K)]
-    losses: list[float] = []
-    idx = F.col("bucket").cast("int") + 1
-    for _ in range(n_iter):
-        wlits = [F.array(*[F.lit(float(w)) for w in wk]) for wk in weights]
-        margins = feats.groupBy("doc_id").agg(
-            *[
-                F.sum(
-                    F.floor(
-                        F.lit(_LR_SCALE) * F.col("x") * F.element_at(wlits[k], idx)
-                    ).cast("long")
-                ).alias(f"m{k}")
-                for k in range(K)
-            ],
-            F.min("y").alias("y"),
-        )
-        m_arr = F.array(*[F.col(f"m{k}") / F.lit(_LR_SCALE) for k in range(K)])
-        mx = F.array_max(m_arr)
-        ex = F.transform(m_arr, lambda v: F.exp(v - mx))
-        denom = F.aggregate(ex, F.lit(0.0), lambda a, b: a + b)
-        p_arr = F.transform(ex, lambda v: v / denom)
-        p_y = F.element_at(p_arr, F.col("y") + 1)
-        # cached like lr_train's scored frame: the loss scalar and the
-        # gradient join must not re-run the K-sum margin aggregate
-        # (r13 review); one row per labeled doc, released per iteration
-        scored = margins.select(
-            "doc_id",
-            "y",
-            p_arr.alias("p"),
-            (-F.log(F.greatest(p_y, F.lit(1e-15)))).alias("nll"),
-        ).cache()
-        try:
-            loss_row = scored.agg(F.sum("nll").alias("s")).first()
-            losses.append(float(loss_row["s"]) / n_docs)
-            err = F.transform(
-                F.col("p"),
-                lambda v, i: v
-                - F.when(F.col("y") == i.cast("int"), F.lit(1.0)).otherwise(F.lit(0.0)),
+    feats = feats_h.value
+    try:
+        n_docs = feats.select("doc_id").distinct().count()
+        if n_docs == 0:
+            raise ValueError(
+                "softmax_train: no labeled documents with feature rows "
+                "(labels join produced an empty training set)"
             )
-            errs = scored.select("doc_id", err.alias("err"))
-            grad_rows = (
-                feats.join(errs, "doc_id")
-                .select(
-                    "bucket",
-                    *[
+        if feats.filter(F.col("y").isNull()).limit(1).count():
+            # a NULL label would silently act as a negative example for
+            # EVERY class (err = p - NULL-indicator -> p) while dropping
+            # out of the loss numerator — corrupt training, no error
+            # (r13 review). Fail loudly instead.
+            raise ValueError(
+                "softmax_train: NULL labels in the training set (a label "
+                "value outside the class mapping, or missing source labels)"
+            )
+        K = int(n_classes)
+        if K < 2:
+            raise ValueError("softmax_train: n_classes must be >= 2")
+        weights = [[0.0] * buckets for _ in range(K)]
+        losses: list[float] = []
+        idx = F.col("bucket").cast("int") + 1
+        for _ in range(n_iter):
+            wlits = [F.array(*[F.lit(float(w)) for w in wk]) for wk in weights]
+            margins = feats.groupBy("doc_id").agg(
+                *[
+                    F.sum(
                         F.floor(
-                            F.lit(_LR_SCALE)
-                            * F.element_at(F.col("err"), k + 1)
-                            * F.col("x")
-                        )
-                        .cast("long")
-                        .alias(f"gc{k}")
-                        for k in range(K)
-                    ],
-                )
-                .groupBy("bucket")
-                .agg(*[F.sum(f"gc{k}").alias(f"g{k}") for k in range(K)])
-                .collect()
+                            F.lit(_LR_SCALE) * F.col("x") * F.element_at(wlits[k], idx)
+                        ).cast("long")
+                    ).alias(f"m{k}")
+                    for k in range(K)
+                ],
+                F.min("y").alias("y"),
             )
-        finally:
-            scored.unpersist(blocking=False)
-        for r in grad_rows:
-            b = int(r["bucket"])
-            for k in range(K):
-                weights[k][b] -= rate * (r[f"g{k}"] / _LR_SCALE) / n_docs
-    return weights, losses
+            m_arr = F.array(*[F.col(f"m{k}") / F.lit(_LR_SCALE) for k in range(K)])
+            mx = F.array_max(m_arr)
+            ex = F.transform(m_arr, lambda v: F.exp(v - mx))
+            denom = F.aggregate(ex, F.lit(0.0), lambda a, b: a + b)
+            p_arr = F.transform(ex, lambda v: v / denom)
+            p_y = F.element_at(p_arr, F.col("y") + 1)
+            # cached like lr_train's scored frame: the loss scalar and the
+            # gradient join must not re-run the K-sum margin aggregate
+            # (r13 review); one row per labeled doc, released per iteration
+            scored = margins.select(
+                "doc_id",
+                "y",
+                p_arr.alias("p"),
+                (-F.log(F.greatest(p_y, F.lit(1e-15)))).alias("nll"),
+            ).cache()
+            try:
+                loss_row = scored.agg(F.sum("nll").alias("s")).first()
+                losses.append(float(loss_row["s"]) / n_docs)
+                err = F.transform(
+                    F.col("p"),
+                    lambda v, i: v
+                    - F.when(F.col("y") == i.cast("int"), F.lit(1.0)).otherwise(F.lit(0.0)),
+                )
+                errs = scored.select("doc_id", err.alias("err"))
+                grad_rows = (
+                    feats.join(errs, "doc_id")
+                    .select(
+                        "bucket",
+                        *[
+                            F.floor(
+                                F.lit(_LR_SCALE)
+                                * F.element_at(F.col("err"), k + 1)
+                                * F.col("x")
+                            )
+                            .cast("long")
+                            .alias(f"gc{k}")
+                            for k in range(K)
+                        ],
+                    )
+                    .groupBy("bucket")
+                    .agg(*[F.sum(f"gc{k}").alias(f"g{k}") for k in range(K)])
+                    .collect()
+                )
+            finally:
+                scored.unpersist(blocking=False)
+            for r in grad_rows:
+                b = int(r["bucket"])
+                for k in range(K):
+                    weights[k][b] -= rate * (r[f"g{k}"] / _LR_SCALE) / n_docs
+        return weights, losses
+    finally:
+        feats_h.unpersist()
 
 
 def softmax_margins(

@@ -25,12 +25,19 @@ dup-family clustering:
 ``localCheckpoint`` truncates lineage so round N's plan does not replay
 rounds 1..N-1.  State per round is the edge quotient plus one
 (node, label) composition map — linear in nodes, uniform shuffle keys.
+
+Every per-round checkpoint in this module is a ``plan_cache.checkpoint``
+handle. A generation is released as soon as the next one is
+materialized (nothing reads it any more); an operator's final
+generation stays only when the frame it returns plans onto it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plan_cache import _Handle, checkpoint
 
 #: Max quotient size (cached-block bytes) handed to the driver-side
 #: union-find finish: 96 MiB of checkpointed deserialized blocks ≈ the
@@ -40,34 +47,28 @@ from pyspark.sql import functions as F
 #: (catalog.BROADCAST_MEMORY_BUDGET) that the root map rides back on.
 #: r14 (§1.2 job-count): the fit test reads the freshly checkpointed
 #: RDD's block sizes from the driver's BlockManager metadata
-#: (getRDDStorageInfo) — ZERO Spark jobs — where the r13 loop paid one
-#: ``limit(budget+1).count()`` job per round (incl. the final one).
+#: (getRDDStorageInfo, by the checkpoint handle's RDD id) — ZERO Spark
+#: jobs — where the r13 loop paid one ``limit(budget+1).count()`` job
+#: per round (incl. the final one).
 #: Floor: an EMPTY cached RDD still reports ~16 B/partition of block
 #: overhead, so the budget must stay well above numPartitions*16 or
 #: the loop could contract an already-empty quotient forever.
 CC_FINISH_BYTE_BUDGET = 96 * 1024 * 1024
+#: Cached bytes per quotient edge the budget is stated in (the measured
+#: ~84 B rounded up): when the BlockManager reports no size for a
+#: checkpoint, the finish collects at most
+#: ``CC_FINISH_BYTE_BUDGET // _CACHED_EDGE_BYTES`` edges (1 Mi at the
+#: default budget) and refuses a larger quotient.
+_CACHED_EDGE_BYTES = 96
 
 
-def _ckpt_rdd_id(df: DataFrame) -> int | None:
-    """The persistent RDD id behind a localCheckpoint'ed DataFrame
-    (None when the internal accessor breaks — the caller then leaves
-    that generation to driver GC, the pre-r14 behavior)."""
-    try:
-        from ..plan_cache import _analyzed_rdd_id
-
-        return _analyzed_rdd_id(df)
-    except Exception:  # noqa: BLE001 — internal accessor
-        return None
-
-
-def _unpersist_rdd(sc, rdd_id: int | None) -> None:
-    """Release one checkpoint generation's blocks by RDD id (no-op for
-    None/already-gone ids)."""
-    if rdd_id is None:
-        return
-    jrdd = sc._jsc.getPersistentRDDs().get(rdd_id)
-    if jrdd is not None:
-        jrdd.unpersist(False)
+def _stored_bytes(handle: _Handle) -> int | None:
+    """Memory + disk bytes the BlockManager holds for a checkpoint
+    handle's RDD (driver metadata, no Spark job); None when it reports
+    no blocks for it (e.g. a zero-partition checkpoint)."""
+    jsc = handle.value.sparkSession.sparkContext._jsc
+    infos = [i for i in jsc.sc().getRDDStorageInfo() if i.id() in handle.rdd_ids]
+    return sum(i.memSize() + i.diskSize() for i in infos) if infos else None
 
 
 def _union_find_roots(pairs: list[tuple[int, int]]) -> dict[int, int]:
@@ -127,64 +128,25 @@ def connected_components(
     # node -> current contracted label; starts as the identity and
     # composes one contraction per round. Only materialized (and only
     # re-shuffled) when a contraction round actually happens.
-    mapping: DataFrame | None = None
-    sc = spark.sparkContext
-    # r14 (§5): each round's checkpoint used to STRAND the previous
-    # generation's blocks until driver GC (the ContextCleaner), so a
-    # long contraction held O(rounds) quotient+mapping generations of
-    # executor storage. Once generation k is materialized, generation
-    # k-1's blocks have no remaining reader (every lazy plan of round k
-    # reads generation k), so they are released eagerly. The FINAL
-    # mapping stays persisted — the returned DataFrame plans onto it.
-    prev_q_id: int | None = None
-    prev_m_id: int | None = None
+    mapping: _Handle | None = None
+    q: _Handle | None = None
     while True:
         # Materialize once per round, THEN probe: the quotient feeds
         # the size test plus (if contracting) three subtrees below
         # (groupBy + both relabel joins), and probing the raw plan
         # would recompute the whole upstream subtree a second time per
         # round. The fit test itself costs NO job (r14, §1.2): the
-        # eager localCheckpoint has just registered the quotient's
-        # blocks with the BlockManager, so the driver reads their
-        # total size from getRDDStorageInfo metadata — the r13 loop's
-        # limit(budget+1).count() was one extra (if cheap) job per
-        # round, including the final one. The checkpoint RDD is
-        # identified as the newest id registered across the
-        # localCheckpoint call (ids are monotonic; the build is
-        # single-threaded), so a cached() handle registered inside an
-        # upstream builder cannot be mis-attributed. The Arrow
-        # transfer (toPandas — ~3× faster than py4j Row collection at
-        # the budget size) happens only when the quotient is KNOWN to
-        # fit. This is the bounded driver FINISH, not a data-plane
-        # transform.
-        seen = {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
-        quotient = quotient.localCheckpoint()
-        fresh = [
-            info
-            for info in sc._jsc.sc().getRDDStorageInfo()
-            if info.id() not in seen
-        ]
-        if fresh:
-            newest = max(fresh, key=lambda info: info.id())
-            ckpt_bytes = newest.memSize() + newest.diskSize()
-            new_q_id: int | None = newest.id()
-        else:
-            # defensive: an eager localCheckpoint always registers
-            # blocks, so this branch should be unreachable — treat as
-            # fitting so the loop terminates (a too-big collect fails
-            # loudly on spark.driver.maxResultSize, never silently).
-            ckpt_bytes = 0
-            new_q_id = None
-        # the new quotient is materialized: the previous generation has
-        # no remaining reader — release its blocks now instead of
-        # waiting for driver GC
-        _unpersist_rdd(sc, prev_q_id)
-        prev_q_id = new_q_id
-        if ckpt_bytes <= CC_FINISH_BYTE_BUDGET:
-            probe = quotient.toPandas()
-            # the probe is on the driver; the final quotient's blocks
-            # have no remaining reader either
-            _unpersist_rdd(sc, prev_q_id)
+        # eager checkpoint has just registered the quotient's blocks
+        # with the BlockManager, so the driver reads their total size
+        # from metadata by the handle's RDD id. The previous quotient
+        # generation has no reader once the new one is materialized.
+        nxt = checkpoint(quotient)
+        if q is not None:
+            q.unpersist()
+        q = nxt
+        quotient = q.value
+        ckpt_bytes = _stored_bytes(q)
+        if ckpt_bytes is None or ckpt_bytes <= CC_FINISH_BYTE_BUDGET:
             break
         contract = (
             quotient.groupBy("a")
@@ -199,25 +161,35 @@ def connected_components(
             .select(F.col("la").alias("a"), F.col("lb").alias("b"))
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            # left lazy: the loop top checkpoints it next round (or the
-            # finish path checkpoints-then-collects it)
+            # left lazy: the loop top checkpoints it next round
         )
         step = contract.select(F.col("a").alias("node"), "label")
         if mapping is None:
-            mapping = step.localCheckpoint()
+            mapping = checkpoint(step)
         else:
-            nxt = step.select(F.col("node").alias("s_n"), F.col("label").alias("s_l"))
-            mapping = (
-                mapping.join(nxt, mapping.label == nxt.s_n, "left")
+            nxt_step = step.select(F.col("node").alias("s_n"), F.col("label").alias("s_l"))
+            prev = mapping
+            mapping = checkpoint(
+                prev.value.join(nxt_step, prev.value.label == nxt_step.s_n, "left")
                 .select(
                     "node",
                     F.coalesce(F.col("s_l"), F.col("label")).alias("label"),
                 )
-                .localCheckpoint()
             )
-        # new mapping generation materialized -> previous one released
-        _unpersist_rdd(sc, prev_m_id)
-        prev_m_id = _ckpt_rdd_id(mapping)
+            prev.unpersist()  # the new mapping generation is materialized
+    # The bounded driver FINISH, not a data-plane transform: the Arrow
+    # transfer (toPandas — ~3× faster than py4j Row collection at the
+    # budget size) runs only on a quotient KNOWN to fit. With no size
+    # reported, collect at most the edge count the budget stands for
+    # and refuse a larger quotient rather than pull it unbounded.
+    bound = CC_FINISH_BYTE_BUDGET // _CACHED_EDGE_BYTES
+    probe = (quotient if ckpt_bytes is not None else quotient.limit(bound + 1)).toPandas()
+    q.unpersist()  # the probe is on the driver: no reader is left
+    if ckpt_bytes is None and len(probe) > bound:
+        raise RuntimeError(
+            f"connected_components: the quotient has no reported size and "
+            f"more than {bound} edges, over the finish budget"
+        )
     pairs = list(zip(probe["a"].tolist(), probe["b"].tolist()))
     roots = _union_find_roots(pairs)
 
@@ -241,7 +213,10 @@ def connected_components(
         [StructField("r_n", node_type), StructField("r_c", node_type)]
     )
     root_df = F.broadcast(_root_frame(["r_n", "r_c"], root_schema))
-    return mapping.join(root_df, mapping.label == root_df.r_n, "left").select(
+    # the returned frame plans onto the final mapping generation, so
+    # that one checkpoint stays
+    final = mapping.value
+    return final.join(root_df, final.label == root_df.r_n, "left").select(
         "node", F.coalesce(F.col("r_c"), F.col("label")).alias("component")
     )
 
@@ -280,15 +255,14 @@ def pagerank(
     for any graph — ``max_iter`` is a hard cap, ``tol`` the usual early
     exit."""
     if weight is None:
-        e = (
+        e_h = checkpoint(
             edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
             .distinct()
             .withColumn("ew", F.lit(1.0))
-            .localCheckpoint()
         )
     else:
-        e = (
+        e_h = checkpoint(
             edges.select(
                 F.col(src).alias("src"),
                 F.col(dst).alias("dst"),
@@ -301,8 +275,8 @@ def pagerank(
             )
             .groupBy("src", "dst")
             .agg(F.sum("ew").alias("ew"))
-            .localCheckpoint()
         )
+    e = e_h.value
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -310,15 +284,17 @@ def pagerank(
     )
     n = nodes.count()
     if n == 0:
-        return nodes.select("node", F.lit(0.0).alias("rank"))
+        return nodes.select("node", F.lit(0.0).alias("rank"))  # reads e_h
     deg = e.groupBy("src").agg(F.sum("ew").alias("out_deg"))
     state = nodes.join(deg, nodes.node == deg.src, "left").select(
         "node", F.coalesce("out_deg", F.lit(0.0)).alias("out_deg")
     )
     if reset is None:
-        state = state.select(
-            "node", "out_deg", F.lit(1.0 / n).alias("rank"), F.lit(1.0 / n).alias("rp")
-        ).localCheckpoint()
+        state_h = checkpoint(
+            state.select(
+                "node", "out_deg", F.lit(1.0 / n).alias("rank"), F.lit(1.0 / n).alias("rp")
+            )
+        )
     else:
         seeds = (
             reset.select(
@@ -338,7 +314,7 @@ def pagerank(
         )
         if not total:
             raise ValueError("pagerank: reset seeds have no mass inside the graph")
-        state = (
+        state_h = checkpoint(
             state.join(F.broadcast(seeds), state.node == seeds.r_node, "left")
             .select(
                 "node",
@@ -346,8 +322,8 @@ def pagerank(
                 (F.coalesce("r_mass", F.lit(0.0)) / F.lit(float(total))).alias("rp"),
             )
             .withColumn("rank", F.col("rp"))
-            .localCheckpoint()
         )
+    state = state_h.value
     dangling = (
         state.agg(
             F.sum(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0))
@@ -355,12 +331,9 @@ def pagerank(
         or 0.0
     )
     base = (1.0 - damping) / n
-    # r14 (§5): release each superseded state generation's checkpoint
-    # blocks once nothing reads them (the delta join against the old
-    # state is the last reader) — the loop used to strand one full
-    # rank-table generation PER ITERATION until driver GC.
-    sc = edges.sparkSession.sparkContext
-    state_id = _ckpt_rdd_id(state)
+    # r14 (§5): each superseded state generation is released once
+    # nothing reads it (the delta join against the old state is the
+    # last reader), not stranded until driver GC.
     for _ in range(max_iter):
         contrib = (
             e.join(state, e.src == state.node)
@@ -374,9 +347,8 @@ def pagerank(
             teleport = F.lit(base + damping * dangling / n)
         else:
             teleport = F.lit(1.0 - damping + damping * dangling) * F.col("rp")
-        new_state = (
-            state.join(contrib, state.node == contrib.dst, "left")
-            .select(
+        new_h = checkpoint(
+            state.join(contrib, state.node == contrib.dst, "left").select(
                 "node",
                 "out_deg",
                 "rp",
@@ -385,8 +357,8 @@ def pagerank(
                     + F.lit(damping) * F.coalesce(F.col("in_mass"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
+        new_state = new_h.value
         stats = (
             new_state.alias("new")
             .join(state.alias("old"), "node")
@@ -398,13 +370,12 @@ def pagerank(
             )
             .first()
         )
-        state = new_state
-        _unpersist_rdd(sc, state_id)  # delta join was the last reader
-        state_id = _ckpt_rdd_id(state)
+        state_h.unpersist()  # the delta join was the last reader
+        state_h, state = new_h, new_state
         dangling = stats["dangling"] or 0.0
         if stats["delta"] is not None and stats["delta"] < tol:
             break
-    _unpersist_rdd(sc, _ckpt_rdd_id(e))  # final state is lineage-free
+    e_h.unpersist()  # the final state is lineage-free
     return state.select("node", "rank")
 
 
@@ -428,12 +399,12 @@ def hits(
     the receiving endpoint, per-round driver traffic is three scalars
     (two norms + the delta), and ``localCheckpoint`` truncates lineage
     every round."""
-    e = (
+    e_h = checkpoint(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
-        .localCheckpoint()
     )
+    e = e_h.value
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -447,12 +418,11 @@ def hits(
     import math
 
     init = 1.0 / math.sqrt(n)
-    state = nodes.select(
-        "node", F.lit(init).alias("h"), F.lit(init).alias("a")
-    ).localCheckpoint()
+    state_h = checkpoint(
+        nodes.select("node", F.lit(init).alias("h"), F.lit(init).alias("a"))
+    )
+    state = state_h.value
     # r14 (§5): release superseded state generations (see pagerank)
-    sc = edges.sparkSession.sparkContext
-    state_id = _ckpt_rdd_id(state)
     for _ in range(max_iter):
         a_raw = (
             e.join(state, e.src == state.node)
@@ -486,9 +456,10 @@ def hits(
         )
         if h_norm == 0.0:
             break
-        new_state = new_state.select(
-            "node", (F.col("h_raw") / F.lit(h_norm)).alias("h"), "a"
-        ).localCheckpoint()
+        new_h = checkpoint(
+            new_state.select("node", (F.col("h_raw") / F.lit(h_norm)).alias("h"), "a")
+        )
+        new_state = new_h.value
         delta = (
             new_state.alias("new")
             .join(state.alias("old"), "node")
@@ -500,12 +471,11 @@ def hits(
             )
             .first()[0]
         )
-        state = new_state
-        _unpersist_rdd(sc, state_id)  # delta join was the last reader
-        state_id = _ckpt_rdd_id(state)
+        state_h.unpersist()  # the delta join was the last reader
+        state_h, state = new_h, new_state
         if delta is not None and delta < tol:
             break
-    _unpersist_rdd(sc, _ckpt_rdd_id(e))  # final state is lineage-free
+    e_h.unpersist()  # the final state is lineage-free
     return state.select(
         "node", F.col("h").alias("hub"), F.col("a").alias("authority")
     )
@@ -548,12 +518,16 @@ def triangle_counts(
     # each undirected edge appears exactly once
     fwd = F.col("dega") < F.col("degb")
     tie = (F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))
-    o = ed.select(
-        F.when(fwd | tie, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(fwd | tie, F.col("dega")).otherwise(F.col("degb")).alias("du"),
-        F.when(fwd | tie, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(fwd | tie, F.col("degb")).otherwise(F.col("dega")).alias("dv"),
-    ).localCheckpoint()
+    # the returned frame reads this checkpoint, so its handle is not
+    # released here
+    o = checkpoint(
+        ed.select(
+            F.when(fwd | tie, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(fwd | tie, F.col("dega")).otherwise(F.col("degb")).alias("du"),
+            F.when(fwd | tie, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(fwd | tie, F.col("degb")).otherwise(F.col("dega")).alias("dv"),
+        )
+    ).value
     e1, e2 = o.alias("e1"), o.alias("e2")
     # wedges (u; v, w) with v before w in orientation order — the
     # closing edge, if present, is then oriented exactly v -> w
@@ -600,7 +574,7 @@ def label_propagation(
     degree-skew shape AQE could not manage).  Returns (node, label)."""
     if rounds < 0:
         raise ValueError("label_propagation: rounds must be >= 0")
-    und = (
+    und_h = checkpoint(
         edges.select(
             F.explode(
                 F.array(
@@ -612,33 +586,27 @@ def label_propagation(
         .select("e.a", "e.b")
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
-    labels = (
+    und = und_h.value
+    labels = checkpoint(
         und.select(F.col("a").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
     )
-    from pyspark.sql.window import Window
-
     # r14 (§5): release superseded label generations (see pagerank)
-    sc = edges.sparkSession.sparkContext
-    labels_id = _ckpt_rdd_id(labels)
     for _ in range(rounds):
         msgs = und.join(
-            labels.withColumnRenamed("node", "b"), "b"
+            labels.value.withColumnRenamed("node", "b"), "b"
         ).select(F.col("a").alias("node"), "label")
         hist = msgs.groupBy("node", "label").agg(F.count(F.lit(1)).alias("n"))
         # top-1 by (n desc, label asc) as a lexicographic struct MIN —
         # a partially-aggregable fold, unlike a row_number window
-        labels = (
+        nxt = checkpoint(
             hist.groupBy("node")
             .agg(F.min(F.struct((-F.col("n")).alias("neg"), F.col("label").alias("l"))).alias("t"))
             .select("node", F.col("t.l").alias("label"))
-            .localCheckpoint()
         )
-        _unpersist_rdd(sc, labels_id)  # new generation is materialized
-        labels_id = _ckpt_rdd_id(labels)
-    _unpersist_rdd(sc, _ckpt_rdd_id(und))  # final labels are lineage-free
-    return labels
+        labels.unpersist()  # the new generation is materialized
+        labels = nxt
+    und_h.unpersist()  # the final labels are lineage-free
+    return labels.value

@@ -1,44 +1,49 @@
-"""Session-scoped lifecycle registry for plan-level ``.cache()`` handles.
+"""Session-scoped owner of every cross-invocation intermediate.
 
 The training plans cache small, dictionary- or candidate-sized
 intermediates (shingle tables, MinHash/SimHash signatures, PPJoin
 prefixes, verified pair sets) because Catalyst does not reuse an
-exchange across the two sides of a self-join. Before r13 each builder
-invocation called ``.cache()`` on a fresh DataFrame and never released
-it, so a long-lived session sweeping many tables/SFs accumulated
-executor storage with no eviction policy beyond Spark's storage-level
-LRU (VERDICT r12 "what's wrong" #3).
+exchange across the two sides of a self-join, derive sizing scalars
+with one bounded job, and checkpoint iterative state per round. Before
+r13 none of it had an owner, so a long-lived session sweeping many
+tables/SFs accumulated executor storage with no eviction policy beyond
+Spark's storage-level LRU (VERDICT r12 "what's wrong" #3).
 
-This registry gives every such handle an owner and a release path:
+This module gives every such entry an owner and a release path:
 
 - ``cached(spark, sf_dir, key, build)`` memoizes the built DataFrame
   per (session, corpus identity, key). Re-invoking the same builder in
   the same session returns the SAME cached DataFrame — no second
   CacheManager entry, no "Asked to cache already cached data" churn —
   and builders with identical intermediates (the Jaccard and
-  containment shingle tables) now genuinely share one cache.
-- ``checkpointed(spark, sf_dir, key, build)`` is the ownership
-  discipline for ``localCheckpoint()`` intermediates (bounded tables
-  that feed two plan subtrees where neither ReuseExchange nor AQE
-  stage reuse fires): a localCheckpoint persists its blocks as a
-  persistent RDD that ``DataFrame.unpersist`` does NOT own, so
-  without a registry every builder invocation would strand one RDD
-  until driver GC. Unlike ``cached`` it does NOT memoize across
-  invocations — a checkpoint is a materialization of one invocation's
-  plan, and reusing it would make a repeat invocation (e.g. a later
-  bench rep) skip the checkpointed computation entirely instead of
-  re-running it. Each call rebuilds, REPLACES the previous generation
-  under the same key (dropping its blocks immediately), and registers
-  the new handle so ``release`` owns it at end of sweep.
-- ``release(spark[, sf_dir])`` unpersists every registered handle in
-  scope (all scopes when omitted), the explicit end-of-sweep eviction
-  a multi-corpus session needs.
+  containment shingle tables) genuinely share one cache.
+- ``scalar(spark, sf_dir, key, compute)`` memoizes one driver-side
+  value (shingle width, embedding count) in the same scoped bucket, so
+  it shares the identity key, the stale-generation eviction and
+  ``release``.
+- ``checkpoint(df)`` is the per-run checkpoint handle: a
+  ``localCheckpoint()`` persists its blocks as a persistent RDD that
+  ``DataFrame.unpersist`` does NOT own, so the returned ``_Handle``
+  carries the RDD id and its caller releases it once no frame it
+  returns reads the checkpoint (the graph rounds, the classifier and
+  BPE trainers hold one per generation).
+- ``checkpointed(spark, sf_dir, key, build)`` registers such a handle
+  for a builder intermediate (a bounded table feeding two plan
+  subtrees where neither ReuseExchange nor AQE stage reuse fires).
+  Unlike ``cached`` it does NOT memoize across invocations — reusing
+  one invocation's materialization would make a repeat invocation
+  (e.g. a later bench rep) skip the checkpointed computation. Each
+  call rebuilds and REPLACES the previous generation under the same
+  key (dropping its blocks immediately).
+- ``release(spark[, sf_dir])`` drops every registered entry in scope
+  (all scopes when omitted), the explicit end-of-sweep eviction a
+  multi-corpus session needs.
 
 Corpus identity follows ``catalog.table``'s discipline: the scope key
-includes (path, mtime_ns, size) of the tables the plan derives from,
-so a test that rewrites a table in place gets a fresh cache — and the
-registry auto-evicts the stale generation's handles at that moment
-instead of leaking them.
+includes (path, mtime_ns, size) of the tables the entry derives from,
+so a test that rewrites a table in place gets fresh entries — and the
+registry auto-evicts the stale generation's entries at that moment
+instead of leaking them or handing back a stale scalar.
 
 State lives ON the session object (never a module dict keyed by
 ``id(spark)``) for the same object-identity reasons documented in
@@ -82,19 +87,22 @@ def _registry(spark: SparkSession) -> dict:
 
 
 class _Handle:
-    """A registered plan intermediate: the DataFrame plus the RDD ids
-    only the SparkContext can unpersist (localCheckpoint blocks)."""
+    """One owned entry: a cached or checkpointed DataFrame, or a
+    sizing scalar, plus the RDD ids only the SparkContext can
+    unpersist (localCheckpoint blocks)."""
 
-    __slots__ = ("df", "rdd_ids")
+    __slots__ = ("value", "rdd_ids")
 
-    def __init__(self, df: DataFrame, rdd_ids: frozenset[int] = frozenset()):
-        self.df = df
+    def __init__(self, value: Any, rdd_ids: frozenset[int] = frozenset()):
+        self.value = value
         self.rdd_ids = rdd_ids
 
-    def unpersist(self, spark: SparkSession, blocking: bool) -> None:
-        self.df.unpersist(blocking=blocking)
+    def unpersist(self, blocking: bool = False) -> None:
+        if not isinstance(self.value, DataFrame):
+            return  # a scalar holds no executor storage
+        self.value.unpersist(blocking=blocking)
         if self.rdd_ids:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
+            jmap = self.value.sparkSession.sparkContext._jsc.getPersistentRDDs()
             for rid in self.rdd_ids:
                 jrdd = jmap.get(rid)
                 if jrdd is not None:
@@ -119,7 +127,7 @@ def _scoped_bucket(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) ->
         if s[0] == sf_dir and s != scope and tuple(t[0] for t in s[1]) == names
     ]:
         for handle in reg.pop(other).values():
-            handle.unpersist(spark, blocking=False)
+            handle.unpersist()
     return reg.setdefault(scope, {})
 
 
@@ -142,7 +150,26 @@ def cached(
     bucket = _scoped_bucket(spark, sf_dir, tables)
     if key not in bucket:
         bucket[key] = _Handle(build().cache())
-    return bucket[key].df
+    return bucket[key].value
+
+
+def scalar(
+    spark: SparkSession,
+    sf_dir: str,
+    key: Hashable,
+    compute: Callable[[], Any],
+    *,
+    tables: tuple[str, ...] = ("documents",),
+) -> Any:
+    """Memoized ``compute()`` value, registered per (session, sf_dir +
+    table identity, key) exactly like ``cached``: ``compute`` runs at
+    most once per scope, an in-place rewrite of one of ``tables``
+    evicts the value (the next call re-derives it), and ``release``
+    drops it with the scope's DataFrames."""
+    bucket = _scoped_bucket(spark, sf_dir, tables)
+    if key not in bucket:
+        bucket[key] = _Handle(compute())
+    return bucket[key].value
 
 
 def checkpointed(
@@ -173,36 +200,46 @@ def checkpointed(
     plan-dump flows included), and runtime errors in those subtrees
     surface at build time instead of action time. Affected builders:
     bm25_search / hybrid_search_rrf (bm25 postings), the Jaccard/
-    MinHash verify path, embed_neardup_cosine's pack pass, and the
+    MinHash verify path, embed_neardup_cosine's pack pass, the
+    classifier feature tables, and (through ``checkpoint``) the
     iterative graph/trainer operators' per-round checkpoints.
 
-    The checkpoint's persistent RDD id is read off the LogicalRDD the
-    checkpoint plans to (with a before/after ``getPersistentRDDs``
-    diff as fallback), so the registry — not driver GC — owns the
-    blocks.
+    The handle comes from ``checkpoint``, so the registry — not driver
+    GC — owns the blocks.
     """
     bucket = _scoped_bucket(spark, sf_dir, tables)
     old = bucket.pop(key, None)
     if old is not None:
-        old.unpersist(spark, blocking=False)
+        old.unpersist()
+    handle = bucket[key] = checkpoint(build())
+    return handle.value
+
+
+def checkpoint(df: DataFrame) -> _Handle:
+    """``df.localCheckpoint()`` as a handle owning its blocks:
+    ``handle.value`` is the checkpointed DataFrame, ``unpersist()``
+    drops its persistent RDD. Release only once no frame that will be
+    returned reads it — earlier fails the reader with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
+
+    The RDD id is read off the LogicalRDD the checkpoint plans to,
+    with a ``getPersistentRDDs`` before/after diff as fallback. The
+    diff can include RDDs that materializing ``df`` persisted (e.g. a
+    ``cached()`` handle in its plan); the checkpoint RDD is created
+    LAST, so it is the max new id, and claiming only that keeps a
+    release from dropping another owner's blocks (ADVICE r13).
+    """
+    spark = df.sparkSession
     before = _persistent_rdd_ids(spark)
-    df = build().localCheckpoint()
+    ckpt = df.localCheckpoint()
     ids: set[int] = set()
     try:
-        ids.add(_analyzed_rdd_id(df))
+        ids.add(_analyzed_rdd_id(ckpt))
     except Exception:  # noqa: BLE001 — internal accessor; diff covers it
-        # the diff can include persistent RDDs that ``build`` itself
-        # registered (e.g. a cached() handle built inside it); the
-        # checkpoint RDD is created LAST — after build() returns — so
-        # with the documented single-threaded build discipline it is
-        # exactly the max new id. Attributing the whole diff would let
-        # a later replace()/release() of THIS handle unpersist blocks
-        # owned by another (ADVICE r13).
         diff = _persistent_rdd_ids(spark) - before
         if diff:
             ids.add(max(diff))
-    bucket[key] = _Handle(df, frozenset(ids))
-    return df
+    return _Handle(ckpt, frozenset(ids))
 
 
 def _analyzed_rdd_id(df: DataFrame) -> int:
@@ -227,7 +264,7 @@ def release(
     n = 0
     for scope in scopes:
         for handle in reg.pop(scope).values():
-            handle.unpersist(spark, blocking=blocking)
+            handle.unpersist(blocking=blocking)
             n += 1
     return n
 

@@ -1,11 +1,22 @@
-"""Regenerate PLANS.md: formatted physical plans for the headline
-queries with the scale-relevant properties called out.
+"""Dump formatted physical plans.
 
-Usage: python scripts/dump_plans.py  (writes PLANS.md at the repo root)
+With no arguments, regenerate PLANS.md: the plans of the headline
+queries with the scale-relevant properties called out. With ``--out``,
+write ``.explain("formatted")`` of every declared query (or of the
+named ones) to ``<out>/<name>_<suffix>.txt`` — the per-round before/
+after evidence of an optimization round (``plans/r13``, ``plans/r14``).
+
+Usage:
+    python scripts/dump_plans.py                      # writes PLANS.md
+    python scripts/dump_plans.py --out plans/rNN <before|after> [sf_dir] [name ...]
+
+A relative ``--out`` is resolved against the repo root; ``sf_dir``
+defaults to the sf0.1 tables next to the PLANS.md inputs.
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
@@ -65,7 +76,32 @@ ANNOTATED = {
 }
 
 
-def main() -> None:
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def dump_round(outdir: str, suffix: str, sf_dir: str, names: list[str]) -> None:
+    """One ``<name>_<suffix>.txt`` per declared query in ``names`` (all
+    when empty); a builder that raises leaves its error in the file."""
+    outdir = os.path.join(ROOT, outdir)
+    os.makedirs(outdir, exist_ok=True)
+    spark = get_spark(app_name="plan-dump")
+    spark.sparkContext.setLogLevel("ERROR")
+    for name, fn in entry.queries().items():
+        if names and name not in names:
+            continue
+        buf = io.StringIO()
+        try:
+            df = fn(spark, sf_dir)
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+        except Exception as e:  # noqa: BLE001
+            buf.write(f"ERROR: {type(e).__name__}: {e}\n")
+        with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
+            f.write(buf.getvalue())
+        print(name, "done", flush=True)
+
+
+def write_plans_md() -> None:
     spark = get_spark(cpus="8")
     spark.sparkContext.setLogLevel("ERROR")
     qs = dict(entry.queries())
@@ -97,10 +133,24 @@ def main() -> None:
         ]
         ev = ("\n" + "\n".join(evidence)) if evidence else ""
         out.append(f"## {name}\n\n*{note}*\n\n```\n{tree}{ev}\n```\n")
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "PLANS.md"), "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", help="per-round plan directory, e.g. plans/r15")
+    ap.add_argument("suffix", nargs="?", help="file suffix: before or after")
+    ap.add_argument("sf_dir", nargs="?", default=os.path.join(os.path.dirname(SF), "sf0.1"))
+    ap.add_argument("names", nargs="*", help="declared queries to dump (default: all)")
+    args = ap.parse_args()
+    if args.out is None:
+        if args.suffix is not None:
+            ap.error("positional arguments need --out")
+        write_plans_md()
+    else:
+        dump_round(args.out, args.suffix or "before", args.sf_dir, args.names)
 
 
 if __name__ == "__main__":

@@ -70,6 +70,16 @@ def test_probe_constants_are_fixed():
     assert bench.CALIB_REF_SEC == expected
 
 
+def _scalar_keys(spark, sf_dir) -> set:
+    from rustcheatersdatapipeline_spark import plan_cache
+
+    return {
+        key
+        for _, key in plan_cache.registered(spark, sf_dir)
+        if key in (("shingle_k",), ("emb_count",))
+    }
+
+
 def test_cold_reset_releases_handles_and_memos(spark, sf_dir):
     """r14 methodology (VERDICT r13 #3): the rep loop resets every
     cross-invocation intermediate between reps — plan-cache handles AND
@@ -85,49 +95,45 @@ def test_cold_reset_releases_handles_and_memos(spark, sf_dir):
     tr.choose_shingle_k(spark, sf_dir)
     tr._emb_count(spark, sf_dir)
     assert plan_cache.registered(spark, sf_dir)
-    assert any(k == (id(spark), sf_dir) for k in tr._SHINGLE_K_CACHE)
-    emb_memo = getattr(spark, tr._EMB_COUNT_ATTR)
-    assert any(k[0] == f"{sf_dir}/embeddings.parquet" for k in emb_memo)
+    assert _scalar_keys(spark, sf_dir) == {("shingle_k",), ("emb_count",)}
 
     released = bench._cold_reset(spark, sf_dir)
 
-    assert released >= 1
+    assert released >= 3  # the probe table and both sizing scalars
     assert plan_cache.registered(spark, sf_dir) == []
-    assert not any(k == (id(spark), sf_dir) for k in tr._SHINGLE_K_CACHE)
-    assert not any(k[0] == f"{sf_dir}/embeddings.parquet" for k in emb_memo)
+    assert _scalar_keys(spark, sf_dir) == set()
 
 
-def test_clear_session_memos_scopes_to_sf_dir():
+def test_clear_session_memos_scopes_to_sf_dir(spark, tmp_path):
     """clear_session_memos(sf_dir) must not evict another corpus's
     memoized scalars (a multi-corpus session sweeps several sf dirs)."""
+    from rustcheatersdatapipeline_spark import plan_cache
     from rustcheatersdatapipeline_spark.plans import training as tr
 
-    class FakeSession:
-        pass
-
-    s = FakeSession()
-    tr._SHINGLE_K_CACHE[(id(s), "/corpus/a")] = 3
-    tr._SHINGLE_K_CACHE[(id(s), "/corpus/b")] = 4
-    setattr(
-        s,
-        tr._EMB_COUNT_ATTR,
-        {
-            ("/corpus/a/embeddings.parquet", 1, 1): 10,
-            ("/corpus/b/embeddings.parquet", 1, 1): 20,
-        },
-    )
+    a, b = str(tmp_path / "corpus_a"), str(tmp_path / "corpus_b")
+    for corpus, k, n in ((a, 3, 10), (b, 4, 20)):
+        plan_cache.scalar(spark, corpus, ("shingle_k",), lambda k=k: k)
+        plan_cache.scalar(
+            spark, corpus, ("emb_count",), lambda n=n: n, tables=("embeddings",)
+        )
     try:
-        tr.clear_session_memos(s, "/corpus/a")
-        assert (id(s), "/corpus/a") not in tr._SHINGLE_K_CACHE
-        assert tr._SHINGLE_K_CACHE[(id(s), "/corpus/b")] == 4
-        memo = getattr(s, tr._EMB_COUNT_ATTR)
-        assert list(memo.values()) == [20]
-        tr.clear_session_memos(s)  # None = all corpora
-        assert (id(s), "/corpus/b") not in tr._SHINGLE_K_CACHE
-        assert memo == {}
+        tr.clear_session_memos(spark, a)
+        assert _scalar_keys(spark, a) == set()
+        assert _scalar_keys(spark, b) == {("shingle_k",), ("emb_count",)}
+
+        def stale():
+            raise AssertionError("corpus b's memo was evicted")
+
+        assert plan_cache.scalar(spark, b, ("shingle_k",), stale) == 4
+        assert (
+            plan_cache.scalar(spark, b, ("emb_count",), stale, tables=("embeddings",))
+            == 20
+        )
+        tr.clear_session_memos(spark)  # None = all corpora
+        assert _scalar_keys(spark, b) == set()
     finally:
-        for k in [k for k in tr._SHINGLE_K_CACHE if k[0] == id(s)]:
-            del tr._SHINGLE_K_CACHE[k]
+        plan_cache.release(spark, a)
+        plan_cache.release(spark, b)
 
 
 def test_probes_run_and_time(spark):

@@ -5,6 +5,7 @@ results reproducible across cluster sizes (a 32-way local run and a
 
 import pytest
 
+from rustcheatersdatapipeline_spark import plan_cache
 from rustcheatersdatapipeline_spark.plans import analytics as A
 from rustcheatersdatapipeline_spark.plans import queries as Q
 from rustcheatersdatapipeline_spark.plans import training as T
@@ -31,37 +32,32 @@ def test_choose_shingle_k_is_layout_invariant(spark, sf_dir, tmp_path):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        T._SHINGLE_K_CACHE.clear()
+        plan_cache.release(spark, sf_dir)
         k1 = T.choose_shingle_k(spark, sf_dir)
         spark.conf.set("spark.sql.shuffle.partitions", "17")
-        T._SHINGLE_K_CACHE.clear()
+        plan_cache.release(spark, sf_dir)
         k2 = T.choose_shingle_k(spark, sf_dir)
-        T._SHINGLE_K_CACHE.clear()
         k3 = T.choose_shingle_k(spark, str(relaid))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        T._SHINGLE_K_CACHE.clear()
+        plan_cache.release(spark, sf_dir)
+        plan_cache.release(spark, str(relaid))
     assert k1 == k2 == k3
     assert k1 in T.SHINGLE_K_CANDIDATES
 
 
-def test_jaccard_pair_set_is_k_invariant(spark, sf_dir):
+def test_jaccard_pair_set_is_k_invariant(spark, sf_dir, monkeypatch):
     """ADVICE r4: the df-derived shingle width is only safe to vary if
     the j ≥ 0.8 PAIR SET does not depend on which candidate width is
     chosen (jac values may differ; the detected pairs must not). Force
-    each candidate k through the chooser cache and compare pair sets."""
-    key = (id(spark), sf_dir)
+    each candidate k through the chooser and compare pair sets."""
     pair_sets = {}
-    try:
-        for k in T.SHINGLE_K_CANDIDATES:
-            T._SHINGLE_K_CACHE.clear()
-            T._SHINGLE_K_CACHE[key] = k
-            pair_sets[k] = {
-                (r["doc_a"], r["doc_b"])
-                for r in T.dedup_ngram_jaccard(spark, sf_dir).collect()
-            }
-    finally:
-        T._SHINGLE_K_CACHE.clear()
+    for k in T.SHINGLE_K_CANDIDATES:
+        monkeypatch.setattr(T, "choose_shingle_k", lambda spark, sf_dir, k=k: k)
+        pair_sets[k] = {
+            (r["doc_a"], r["doc_b"])
+            for r in T.dedup_ngram_jaccard(spark, sf_dir).collect()
+        }
     first = pair_sets[T.SHINGLE_K_CANDIDATES[0]]
     assert first and all(s == first for s in pair_sets.values()), {
         k: len(s) for k, s in pair_sets.items()

@@ -558,3 +558,29 @@ def test_connected_components_contraction_path_matches_finish_path(spark, monkey
     }
     assert got == want
     assert want[40] == 0 and want[119] == 100 and want[300] == 300
+
+
+def test_connected_components_unsized_finish_is_bounded(spark, monkeypatch):
+    """When the BlockManager reports no size for the quotient
+    checkpoint, the finish collects at most the edge count the byte
+    budget stands for and refuses a larger quotient, instead of an
+    unbounded driver collect."""
+    import rustcheatersdatapipeline_spark.operators.graph as G
+
+    # 11 undirected edges -> 22 directed quotient edges
+    edges = [(i, i + 1) for i in range(10)] + [(100, 101)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    want = {r["node"]: r["component"] for r in G.connected_components(df).collect()}
+    monkeypatch.setattr(G, "_stored_bytes", lambda handle: None)
+    got = {r["node"]: r["component"] for r in G.connected_components(df).collect()}
+    assert got == want
+    monkeypatch.setattr(G, "CC_FINISH_BYTE_BUDGET", 22 * G._CACHED_EDGE_BYTES)
+    got = {r["node"]: r["component"] for r in G.connected_components(df).collect()}
+    assert got == want
+    monkeypatch.setattr(G, "CC_FINISH_BYTE_BUDGET", 21 * G._CACHED_EDGE_BYTES)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    with pytest.raises(RuntimeError, match="finish budget"):
+        G.connected_components(df)
+    # the refused quotient's checkpoint is released, not stranded
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before

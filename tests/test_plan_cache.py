@@ -227,3 +227,102 @@ def test_checkpoint_fallback_attributes_only_the_newest_rdd(
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     assert jmap.get(bystander.id()) is not None
     bystander.unpersist()
+
+
+def test_inplace_rewrite_rederives_sizing_scalars(spark, sf_dir, tmp_path, clean_registry):
+    """The sizing scalars are memoized on the source table's file
+    identity: rewriting ``documents.parquet`` in place must re-derive
+    the shingle width (the oracle's ``ksel`` CTE derives it from the
+    new file, so a stale k would split the two engines), and rewriting
+    ``embeddings.parquet`` with a new row count must re-size the LSH
+    plane ladder."""
+    import os
+
+    import duckdb
+
+    src = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    d = tmp_path / "sf_scalars"
+    d.mkdir()
+    docs, emb = str(d / "documents.parquet"), str(d / "embeddings.parquet")
+    shutil.copyfile(f"{src}/documents.parquet", docs)
+    shutil.copyfile(f"{src}/embeddings.parquet", emb)
+    corpus = str(d)
+    con = duckdb.connect()
+
+    def rewrite(path: str, select: str) -> None:
+        tmp = path + ".tmp"
+        con.execute(f"COPY ({select}) TO '{tmp}' (FORMAT PARQUET)")
+        os.replace(tmp, path)
+
+    assert T.choose_shingle_k(spark, corpus) == 15
+    # per-doc unique text: every 9-char shingle is rare, so k = 9 passes
+    rewrite(
+        docs,
+        "SELECT * REPLACE (sha256(CAST(doc_id AS VARCHAR)) "
+        f"|| md5(CAST(doc_id AS VARCHAR)) AS text) FROM '{docs}'",
+    )
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    (oracle_k,) = con.execute(
+        f"WITH pos AS (SELECT unnest(generate_series(1, {T._MAX_DOC_LEN})) AS i), "
+        f"{T._KSEL_CTE} SELECT k FROM ksel"
+    ).fetchone()
+    assert oracle_k == 9
+    assert T.choose_shingle_k(spark, corpus) == oracle_k
+
+    n0 = T._emb_count(spark, corpus)
+    planes0 = T.lsh_num_planes(spark, corpus)
+    rewrite(emb, f"SELECT * FROM '{emb}' ORDER BY vec_id LIMIT 100")
+    assert T._emb_count(spark, corpus) == 100 != n0
+    assert T.lsh_num_planes(spark, corpus) == T._lsh_nplanes_for(100) != planes0
+
+
+def _new_rdd_ids(spark, run) -> set:
+    """Persistent RDD ids that ``run()`` (which also collects) leaves
+    behind."""
+    before = _persistent_rdd_ids(spark)
+    run()
+    return _persistent_rdd_ids(spark) - before
+
+
+def test_iterative_operators_hold_only_the_returned_generation(
+    spark, sf_dir, monkeypatch
+):
+    """Each per-round checkpoint generation is released once nothing
+    reads it: after a call and a collect, a graph operator may hold at
+    most the one generation its returned frame plans onto, and a
+    trainer whose result is a driver-side list holds none."""
+    import rustcheatersdatapipeline_spark.operators.graph as G
+    from rustcheatersdatapipeline_spark.operators.classify import (
+        lr_features,
+        lr_train,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(10)], "src long, dst long"
+    )
+    # several contraction rounds, so mapping generations are superseded
+    # (see the contraction-path test)
+    monkeypatch.setattr(G, "CC_FINISH_BYTE_BUDGET", 1024)
+    ops = {
+        "connected_components": lambda: G.connected_components(edges),
+        "pagerank": lambda: G.pagerank(edges, max_iter=2, tol=0.0),
+        "hits": lambda: G.hits(edges, max_iter=2, tol=0.0),
+        "label_propagation": lambda: G.label_propagation(edges, rounds=2),
+    }
+    for name, op in ops.items():
+        left = _new_rdd_ids(spark, lambda: op().collect())
+        assert len(left) <= 1, (name, left)
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i % 3} w{i % 5} shared text {i}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    labels = docs.selectExpr("doc_id", "CAST(doc_id % 2 AS DOUBLE) AS y")
+    feats = lr_features(docs)
+    assert _new_rdd_ids(spark, lambda: lr_train(feats, labels, n_iter=1)) == set()
+    merges = []
+    left = _new_rdd_ids(
+        spark, lambda: merges.extend(T.bpe_train(spark, sf_dir, n_merges=3).collect())
+    )
+    assert len(merges) == 3
+    assert left == set()
