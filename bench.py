@@ -11,7 +11,7 @@ Each query is timed end-to-end (plan + execute) against a ``noop`` sink so
 we measure distributed execution, not driver-side result transfer. A
 warm-up query runs first so JVM/codegen startup is not billed to q1.
 
-Per-query time is the MEDIAN of ``$SPARK_GRAFT_BENCH_REPS`` (default 3)
+Per-query time is the MEDIAN of ``$SPARK_GRAFT_BENCH_REPS`` (default 5)
 runs; single-shot timing produced 2-5x phantom swings on untouched plans
 between rounds (VERDICT r4 finding 3), which made the regression gate
 meaningless. Reps interleave (all queries pass 1, then pass 2, ...) so a
@@ -116,6 +116,10 @@ from rustcheatersdatapipeline_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
+
+#: cold reps per query; with 5, neither one nor two storm reps can own
+#: the median the driver consumes
+DEFAULT_REPS = 5
 
 # Clean-window references. Scan: median of four min-of-5 readings in
 # the best r12 window. Query ruler: r12 protocol reading D (raw
@@ -285,7 +289,7 @@ def main() -> None:
     scan_probes = [_scan_probe(spark)]
     job_probes = [_job_probe(spark)]
 
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", DEFAULT_REPS)))
     samples: dict[str, list[float]] = {name: [] for name in qs}
     for r in range(reps):
         if r:

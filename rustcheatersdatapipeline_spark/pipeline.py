@@ -18,6 +18,14 @@ partition pruning); silver/gold persist as Parquet. Every transform is
 one lazy plan. A batch materializes in three places: the cached bronze
 reads (one corrupt-record count each), one D2/D3 aggregate per silver
 table, and the gold publish.
+
+Like the reference's parallel task branches, the independent work in
+each of those places runs concurrently, bounded by the core count
+(``session.concurrently``): the bronze endpoint reads, the 16 silver
+branches, and the publish's per-table writes. Each is a chain of small
+single-task jobs, so one at a time would leave most cores idle. Results
+are applied in registry order, so a batch's outcome does not depend on
+which branch finished first.
 """
 
 from __future__ import annotations
@@ -31,8 +39,9 @@ from pyspark.sql.utils import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .operators.dedup import ValidationError, assert_quality
+from .operators.dedup import assert_quality
 from .schemas import BRONZE_SCHEMAS
+from .session import concurrently
 from .transforms.builders import DIM_TRANSFORMS, FACT_TRANSFORMS
 from .warehouse.loads import build_warehouse
 
@@ -106,10 +115,25 @@ class BronzeFrames(dict):
         self.cached: list[DataFrame] = []
 
 
+def _read_endpoint(spark: SparkSession, bronze_dir: str, name: str) -> DataFrame:
+    """One endpoint's schema-pinned, permissive JSON read, with the
+    ``_corrupt_record`` column; raises ``AnalysisException`` when the
+    file is missing."""
+    probed = StructType(
+        [*BRONZE_SCHEMAS[name].fields, StructField("_corrupt_record", StringType(), True)]
+    )
+    return (
+        spark.read.schema(probed)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(f"{bronze_dir}/{name}.json")
+    )
+
+
 def read_bronze(
     spark: SparkSession, bronze_dir: str
 ) -> tuple[BronzeFrames, dict[str, str]]:
-    """Schema-pinned bronze reads.
+    """Schema-pinned bronze reads, the endpoints read concurrently.
 
     - Missing endpoint file → skipped branch (S15 soft-fail semantics).
     - Malformed JSON → FAILED branch, detected via permissive-mode
@@ -118,32 +142,38 @@ def read_bronze(
       the batch reports success with silently-empty tables — worse than
       the reference's hard json.loads failure. A corrupt read's cache is
       released at once; the others ride on ``out.cached``.
+    - Any other error releases every cache the call made, then raises.
     """
+    names = [n for n in BRONZE_SCHEMAS if n != "twitter_timeline"]
+    made: list[DataFrame] = []
+
+    def read(name: str) -> tuple[DataFrame, int] | None:
+        try:
+            # cached: required to filter on the corrupt column alone
+            df = _read_endpoint(spark, bronze_dir, name).cache()
+        except AnalysisException:
+            return None  # sensor-skip semantics
+        made.append(df)
+        return df, df.filter(F.col("_corrupt_record").isNotNull()).count()
+
+    try:
+        reads = concurrently(spark, read, names)
+    except BaseException:
+        for df in made:
+            df.unpersist()
+        raise
     out = BronzeFrames()
     failed: dict[str, str] = {}
-    for name, schema in BRONZE_SCHEMAS.items():
-        if name == "twitter_timeline":
+    for name, got in zip(names, reads):
+        if got is None:
             continue
-        probed = StructType(
-            [*schema.fields, StructField("_corrupt_record", StringType(), True)]
-        )
-        try:
-            df = (
-                spark.read.schema(probed)
-                .option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", "_corrupt_record")
-                .json(f"{bronze_dir}/{name}.json")
-                .cache()  # required to filter on the corrupt column alone
-            )
-            n_corrupt = df.filter(F.col("_corrupt_record").isNotNull()).count()
-            if n_corrupt:
-                failed[name] = f"{n_corrupt} corrupt bronze record(s)"
-                df.unpersist()
-            else:
-                out[name] = df.drop("_corrupt_record")
-                out.cached.append(df)
-        except AnalysisException:
-            pass  # sensor-skip semantics
+        df, n_corrupt = got
+        if n_corrupt:
+            failed[name] = f"{n_corrupt} corrupt bronze record(s)"
+            df.unpersist()
+        else:
+            out[name] = df.drop("_corrupt_record")
+            out.cached.append(df)
     return out, failed
 
 
@@ -164,6 +194,11 @@ def run_batch(
     re-attempt (reference ``retries: 1``,
     rust_twitter_steam_pipeline.py:40-41) before it is reported.
 
+    The silver branches are independent, so they run concurrently, at
+    most one per core (``session.concurrently``); their outcomes are
+    applied in registry order, so ``failed``, ``skipped``, ``retried``
+    and ``gold`` read exactly as a serial run's.
+
     Gold builds from the SUCCESSFUL branches (the reference's
     none_failed_min_one_success end rule + per-task loads): a failed or
     skipped branch holds back only the loads that depend on it —
@@ -175,27 +210,41 @@ def run_batch(
     date_end = date_end or (interval_end.date() + _dt.timedelta(days=365))
     bronze, bad_bronze = read_bronze(spark, bronze_dir)
     result = BatchResult(gold={}, cached=bronze.cached)
+    branches = {**DIM_TRANSFORMS, **FACT_TRANSFORMS}
 
-    silver: dict[str, DataFrame] = {}
-    for name, (fn, src) in {**DIM_TRANSFORMS, **FACT_TRANSFORMS}.items():
-        if src in bad_bronze:
-            result.failed[name] = bad_bronze[src]
-            continue
-        if src not in bronze:
-            result.skipped.append(name)
-            continue
-        for attempt in (1, 2):  # reference retries: 1
+    def branch(name: str) -> tuple[DataFrame | None, str | None]:
+        """(silver frame or None, the last attempt's error or None)."""
+        fn, src = branches[name]
+        error = None
+        for _ in (1, 2):  # reference retries: 1
             try:
                 df = fn(bronze[src], interval_end)
                 if validate:
                     validate_silver(name, df)
+                return df, error
+            except Exception as e:  # per-branch isolation (§3.1)
+                error = str(e)
+        return None, error
+
+    runnable = [
+        name for name, (_, src) in branches.items()
+        if src in bronze and src not in bad_bronze
+    ]
+    outcomes = dict(zip(runnable, concurrently(spark, branch, runnable)))
+    silver: dict[str, DataFrame] = {}
+    for name, (_, src) in branches.items():
+        if src in bad_bronze:
+            result.failed[name] = bad_bronze[src]
+        elif src not in bronze:
+            result.skipped.append(name)
+        else:
+            df, error = outcomes[name]
+            if df is None:
+                result.failed[name] = error
+            else:
                 silver[name] = df
-                result.failed.pop(name, None)
-                if attempt == 2:
+                if error is not None:
                     result.retried.append(name)
-                break
-            except (ValidationError, Exception) as e:  # per-branch isolation (§3.1)
-                result.failed[name] = str(e)
 
     if silver:
         result.gold = build_warehouse(

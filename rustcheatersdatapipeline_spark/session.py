@@ -19,8 +19,23 @@ value does not have to fit every stage.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Sequence, TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+R = TypeVar("R")
+
+
+def _driver_memory() -> str:
+    """24g, or half the machine's RAM where that is less. The JVM seldom
+    gives heap back once it has grown it, so a heap allowed past the
+    machine's RAM can grow until the kernel's OOM killer ends the driver
+    (on a 16 GB host a long test session was killed at 14 GB resident)."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(24 * 1024, half_mb)}m"
 
 
 def get_spark(
@@ -52,7 +67,7 @@ def get_spark(
         # ratio IS the scan time — fewer bytes per row group beats
         # snappy's marginally faster decompress on every cold read.
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _driver_memory())
         .config("spark.ui.enabled", "false")
         # Compile-time auto-broadcast OFF, runtime (AQE) auto-broadcast ON.
         # Catalyst's static size estimates are unreliable downstream of
@@ -72,3 +87,25 @@ def get_spark(
         )
     )
     return builder.getOrCreate()
+
+
+def concurrently(spark: SparkSession, fn: Callable[[T], R], items: Sequence[T]) -> list[R]:
+    """``[fn(x) for x in items]``, with the calls overlapped on at most
+    ``defaultParallelism`` threads, so independent Spark jobs submitted
+    from the driver keep the cores busy instead of queueing one by one.
+
+    Each call runs under the caller's job group, description and session
+    tags: ``inheritable_thread_target(spark)`` is applied once per item,
+    so every call gets its own copy of the caller's local properties and
+    one call's ``setJobGroup`` or SQL execution id never leaks into
+    another's. Every call finishes, and the pool's threads have exited,
+    before this returns; the results come back in item order, and so
+    does the error: the first item that raised, not the first to fail.
+    One item runs inline."""
+    if len(items) <= 1:
+        return [fn(x) for x in items]
+    calls = [inheritable_thread_target(spark)(fn) for _ in items]
+    workers = min(len(items), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(call, x) for call, x in zip(calls, items)]
+    return [f.result() for f in futures]

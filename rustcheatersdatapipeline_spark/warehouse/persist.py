@@ -24,6 +24,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import concurrently
+
 PARTITIONED_FACTS = {
     "achievement_fact",
     "badges_fact",
@@ -1128,12 +1130,18 @@ class GoldStore:
         are counted on a read-back of the staged dir — what actually
         landed, not the logical plan — and any violation raises
         ``ExpectationError`` before a manifest exists, so a bad batch can
-        never become visible."""
+        never become visible.
+
+        The tables are staged concurrently, at most one per core
+        (``session.concurrently``); ``staged`` keeps the order of
+        ``tables``. Every table's write finishes before an error
+        propagates, and the error is the first in table order."""
         from pyspark.sql import functions as F
 
         self._mark_staged(txn)
-        staged: dict[str, dict] = {}
-        for name, df in tables.items():
+
+        def stage(name: str) -> dict:
+            df = tables[name]
             rel = os.path.join("_data", txn, name)
             target = os.path.join(self.path, rel)
             w = df.write.mode("error")
@@ -1143,7 +1151,7 @@ class GoldStore:
                 w = w.partitionBy(part_col)
             w.parquet(target)
             files = self._file_stats(target, self.path)
-            staged[name] = {
+            entry = {
                 "dir": rel,
                 "rows": sum(f["rows"] for f in files),
                 "files": files,
@@ -1151,7 +1159,7 @@ class GoldStore:
             }
             exprs = (expectations or {}).get(name) or []
             if exprs:
-                back = self._read_staged(staged[name])
+                back = self._read_staged(entry)
                 # one job for all predicates: count rows violating each
                 viol = back.agg(
                     *[
@@ -1171,7 +1179,10 @@ class GoldStore:
                             f"expectation {e!r} — publish rejected, store "
                             "untouched"
                         )
-        return staged
+            return entry
+
+        names = list(tables)
+        return dict(zip(names, concurrently(self.spark, stage, names)))
 
     @classmethod
     def _staged_schema(cls, schema: dict, files: list[dict], part_col: str | None) -> dict:

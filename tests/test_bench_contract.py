@@ -53,6 +53,13 @@ def test_per_rep_factor_arithmetic():
     assert all(abs(norm[q] - refs[q]) < 1e-12 for q in refs)
 
 
+def test_default_reps_outvote_two_storm_reps():
+    """The driver consumes per-query medians: at the default rep count a
+    query whose two reps ran in a storm still reports its clean time."""
+    clean, storm = 1.0, 3.0
+    assert statistics.median([storm, storm] + [clean] * (bench.DEFAULT_REPS - 2)) == clean
+
+
 def test_probe_constants_are_fixed():
     """The synthetic probes' workload constants are part of the ruler:
     changing them silently would make scan/job factors incomparable
