@@ -994,6 +994,10 @@ def _knn_topk(spark, sf_dir, query_max_id: int):
                 idx = np.nonzero(ids_b != q_ids[qi])[0]
                 if idx.size == 0:
                     continue
+                # a zero-norm vector's cosine is 0/0 = NaN; lexsort puts
+                # it last, and so does the window: Arrow's pandas
+                # conversion emits NaN as null (DESC NULLS LAST), the
+                # oracle's 0/0 is NULL too
                 order = np.lexsort((ids_b[idx], -cos[qi, idx]))[:k]
                 take = idx[order]
                 out.append(

@@ -114,3 +114,31 @@ def test_dedup_substrings_exact_boundaries_and_merging(spark):
     # [3, 27), `shared2` covers [57, 73) (3+24+30=57)
     assert got == [(1, 3, 3 + 24), (1, 57, 57 + 16)]
     assert (3 + 24 - 3) > SUBSTR_W  # first span is LONGER than W: runs merge
+
+
+def test_knn_topk_ranks_zero_norm_vectors_as_the_oracle(spark, sf_dir, tmp_path):
+    """A zero-norm vector's cosine is undefined: numpy's 0/0 is NaN,
+    which Arrow hands to Spark as null, and DuckDB's 0/0 is NULL. Both
+    rank it after every defined cosine, so the per-task top-k prune must
+    too. The corpus has one zero-norm query (3: every cosine undefined,
+    ranked by neighbor_id alone) and one zero-norm corpus vector (100)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    zero = {3, 100}
+    emb = [
+        [0.0] * len(e) if v in zero else e
+        for v, e in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
+    ]
+    i = t.schema.get_field_index("embedding")
+    t = t.set_column(i, t.schema.field(i), pa.array(emb, t.schema.field(i).type))
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    df = T.embed_knn_bruteforce(spark, str(tmp_path))
+    with duckdb.connect() as con:
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'")
+        assert_matches_oracle(df, con, T.ORACLE_SQL["embed_knn_bruteforce"], "zero-norm knn")
+    rows = df.collect()
+    assert [r["neighbor_id"] for r in rows if r["query_id"] == 3] == [0, 1, 2, 4, 5]
+    assert all(r["neighbor_id"] != 100 for r in rows)
