@@ -184,13 +184,13 @@ def run_batch(
     existing: dict[str, DataFrame] | None = None,
     date_start: _dt.date = _dt.date(2003, 9, 12),  # Steam launch
     date_end: _dt.date | None = None,
-    validate: bool = True,
 ) -> BatchResult:
     """Run one full interval: bronze → silver → gold.
 
-    ``validate`` applies the reference's D2/D3 runtime contracts to each
-    silver table; a violation fails that branch (reference task failure
-    semantics), not the whole batch. A failed branch gets ONE bounded
+    Every silver table is checked against the reference's D2/D3 runtime
+    contracts (``validate_silver``); a violation fails that branch
+    (reference task failure semantics), not the whole batch. A failed
+    branch gets ONE bounded
     re-attempt (reference ``retries: 1``,
     rust_twitter_steam_pipeline.py:40-41) before it is reported.
 
@@ -219,8 +219,7 @@ def run_batch(
         for _ in (1, 2):  # reference retries: 1
             try:
                 df = fn(bronze[src], interval_end)
-                if validate:
-                    validate_silver(name, df)
+                validate_silver(name, df)
                 return df, error
             except Exception as e:  # per-branch isolation (§3.1)
                 error = str(e)

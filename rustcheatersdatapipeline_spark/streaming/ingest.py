@@ -603,7 +603,8 @@ class MergeUpsertSink:
     regress keys to stale values; ``order_col`` arbitrates only WITHIN
     a batch (cross-batch arbitration would need the target's current
     value per key, i.e. a read of the touched rows the caller can do
-    with ``read_pruned`` when replaying history is a real workload)."""
+    with ``read_pruned(table, {key: (lo, hi)})`` when replaying history
+    is a real workload)."""
 
     def __init__(
         self,

@@ -16,6 +16,7 @@ already guarantee value-level idempotency).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -163,6 +164,31 @@ class GoldStore:
     Readers always open the manifest's directories directly: a reader
     mid-scan of version N is unaffected by version N+1 landing
     (snapshot isolation for free, since data dirs are immutable).
+
+    A manifest entry (``tables[name]``) carries these keys, set by:
+
+    - ``dir`` (``publish``) or ``dirs`` (``publish_append``, ``merge``,
+      ``optimize``): the ``_data/<txn>/<name>`` roots a reader opens;
+    - ``rows``: the live row count (every writer);
+    - ``files`` (``_stage_tables``; carried and extended by every
+      writer): one record per data file — ``path``, ``rows``,
+      ``stats`` (column ``[min, max]``), ``partition`` (its
+      ``col=value`` directory values) and ``dv`` (the deletion vectors
+      masking its rows, appended by a merge-on-read ``merge``);
+    - ``schema`` (``_stage_tables``; unioned by ``publish_append`` and
+      ``merge``): the schema a reader applies;
+    - ``file_level`` (``merge``, ``optimize``, and ``publish_append``
+      onto such an entry): the table is exactly ``files``, not whole
+      dirs;
+    - ``properties`` (``publish``/``publish_append`` ``properties=``):
+      immutable data-contract parameters;
+    - ``constraints`` (``declare_constraints``): declared constraints;
+    - ``compacted_from`` (``compact``): the dirs the rewrite folded;
+    - ``rewrite_kind`` (``optimize``): ``"row_preserving"``.
+
+    Every writer but ``restore`` carries ``properties`` and
+    ``constraints`` forward (``_carried_contract``); ``restore`` copies
+    the target version's entry minus the two rewrite markers.
     """
 
     MANIFEST = "_manifest.json"
@@ -234,20 +260,9 @@ class GoldStore:
         rewrote some files of a dir and carried the rest forward by
         reference, so the dir alone no longer describes the table."""
         if entry.get("file_level"):
-            df = self._read_files(entry["files"])
-            if entry.get("schema") is not None:
-                from pyspark.sql import functions as F
-                from pyspark.sql.types import StructType
-
-                want = StructType.fromJson(entry["schema"])
-                cols = [
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    if f.name in df.columns
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in want.fields
-                ]
-                df = df.select(*cols)
-            return df
+            return self._apply_entry_schema(
+                self._read_files(entry["files"]), entry.get("schema")
+            )
         dirs = [os.path.join(self.path, d) for d in self._dirs(entry)]
         r = self.spark.read
         if entry.get("schema") is not None:
@@ -257,6 +272,43 @@ class GoldStore:
         elif len(dirs) > 1:
             r = r.option("mergeSchema", "true")
         return r.parquet(*dirs)
+
+    @staticmethod
+    def _apply_entry_schema(df: DataFrame, schema_json: dict | None) -> DataFrame:
+        """Project ``df`` onto a recorded entry schema: each field cast to
+        its recorded type, a field the files lack as a typed NULL."""
+        if schema_json is None:
+            return df
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
+
+        want = StructType.fromJson(schema_json)
+        cols = [
+            F.col(f.name).cast(f.dataType).alias(f.name)
+            if f.name in df.columns
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in want.fields
+        ]
+        return df.select(*cols)
+
+    @staticmethod
+    def _union(frames: list[DataFrame]) -> DataFrame:
+        """Union by name, a column missing from a frame read as NULL —
+        the additive schema evolution every multi-part read shares."""
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        )
+
+    @staticmethod
+    def _dv_dirs(f: dict) -> list[str]:
+        """The deletion-vector dirs masking rows of file record ``f``."""
+        return [d["dir"] for d in f.get("dv") or []]
+
+    @staticmethod
+    def _txn_root(rel_path: str) -> str:
+        """The staged table root ``_data/<txn>/<name>`` of a
+        manifest-relative file path."""
+        return os.sep.join(rel_path.split(os.sep)[:3])
 
     #: helper columns for deletion-vector bookkeeping: the row's file as
     #: a manifest-relative path, and its ordinal within that file
@@ -295,8 +347,7 @@ class GoldStore:
             raise ValueError("empty file list")
         groups: dict[str, list[str]] = {}
         for p in rel_paths:
-            parts = p.split(os.sep)
-            root = os.path.join(self.path, *parts[:3])
+            root = os.path.join(self.path, self._txn_root(p))
             groups.setdefault(root, []).append(os.path.join(self.path, p))
         frames = []
         for root, fs in sorted(groups.items()):
@@ -304,10 +355,7 @@ class GoldStore:
             if row_identity:
                 fr = self._with_row_identity(fr)
             frames.append(fr)
-        base = frames[0]
-        for fr in frames[1:]:
-            base = base.unionByName(fr, allowMissingColumns=True)
-        return base
+        return self._union(frames)
 
     def _read_dv(self, dv_dirs: list[str]) -> DataFrame:
         """Union the (path, pos) rows of the given deletion-vector dirs."""
@@ -334,7 +382,7 @@ class GoldStore:
             )
         if dvd:
             df = self._grouped_file_read([f["path"] for f in dvd], row_identity=True)
-            dv = self._read_dv([d["dir"] for f in dvd for d in f["dv"]])
+            dv = self._read_dv([d for f in dvd for d in self._dv_dirs(f)])
             df = df.join(
                 dv,
                 (df[self.REL_COL] == dv["path"]) & (df[self.POS_COL] == dv["pos"]),
@@ -345,10 +393,7 @@ class GoldStore:
             parts.append(df)
         if not parts:
             raise ValueError("empty file list")
-        base = parts[0]
-        for fr in parts[1:]:
-            base = base.unionByName(fr, allowMissingColumns=True)
-        return base
+        return self._union(parts)
 
     def read(self, name: str) -> DataFrame:
         return self._read_entry(self.current_manifest()["tables"][name])
@@ -397,19 +442,13 @@ class GoldStore:
         manifest references them — the vacuum ``keep_versions`` window).
         A rewrite that is not a recorded compaction, or a pruned history
         window, raises ``ValueError``; the consumer falls back to a full
-        read + its own keying. A table absent at ``from_version`` diffs
-        as "everything"."""
-        cur = self.current_manifest()["tables"].get(name)
+        read + its own keying. A table absent at ``from_version`` (v0
+        included, the empty store) diffs as "everything"."""
+        m = self.current_manifest()
+        cur = m["tables"].get(name)
         if cur is None:
             raise KeyError(name)
-        try:
-            base_tables = self.manifest_at(from_version)["tables"]
-        except FileNotFoundError:
-            raise ValueError(
-                f"{name}: the manifest for v{from_version} was pruned — the "
-                "baseline is unknowable; do a full read instead"
-            ) from None
-        base_entry = base_tables.get(name)
+        base_entry = self._baseline(name, from_version)
         if cur.get("file_level") or (base_entry or {}).get("file_level"):
             # a merge() produced file-level entries: the dir set no
             # longer describes the table, so diff at FILE granularity.
@@ -418,16 +457,13 @@ class GoldStore:
             # the new files would misreport updates as inserts — raise,
             # consumer does a full read (same contract as an unrecorded
             # compaction).
-            base_files = (
-                {f["path"] for f in (base_entry.get("files") or [])}
-                if base_entry is not None
-                else set()
-            )
             if base_entry is not None and base_entry.get("files") is None:
                 raise ValueError(
                     f"{name}: baseline v{from_version} predates file stats — "
                     "file-level diff is unknowable; do a full read instead"
                 )
+            base_recs = (base_entry or {}).get("files") or []
+            base_files = {f["path"] for f in base_recs}
             cur_files = [f["path"] for f in cur["files"]]
             if not base_files <= set(cur_files):
                 raise ValueError(
@@ -436,15 +472,8 @@ class GoldStore:
                 )
             # a merge-on-read update leaves every path in place but adds
             # deletion vectors: that too is not append-only
-            base_dv = {
-                f["path"]: [d["dir"] for d in f.get("dv") or []]
-                for f in (base_entry.get("files") or [])
-            } if base_entry is not None else {}
-            cur_dv = {
-                f["path"]: [d["dir"] for d in f.get("dv") or []]
-                for f in cur["files"]
-            }
-            if any(cur_dv.get(p, []) != dv for p, dv in base_dv.items()):
+            cur_dv = {f["path"]: self._dv_dirs(f) for f in cur["files"]}
+            if any(cur_dv.get(f["path"], []) != self._dv_dirs(f) for f in base_recs):
                 raise ValueError(
                     f"{name}: a merge since v{from_version} added deletion "
                     "vectors — the delta is not append-only; use changes_cdc "
@@ -465,20 +494,32 @@ class GoldStore:
         if base_dirs <= set(cur_dirs):
             delta = [d for d in cur_dirs if d not in base_dirs]
         else:
-            delta = self._appended_dirs_via_history(name, from_version)
+            delta = self._appended_dirs_via_history(
+                name, from_version, base_entry, int(m["version"])
+            )
         if not delta:
             return self._read_entry(cur).limit(0)
         return self._read_entry({**cur, "dirs": delta, "dir": None})
 
-    def _appended_dirs_via_history(self, name: str, from_version: int) -> list[str]:
-        """The exact dirs appended to ``name`` after ``from_version``,
-        proven from the retained manifest chain when the current entry no
-        longer references the base dirs. Each step must be an append
-        (prior dirs ⊆ next dirs) or a recorded row-preserving compaction
-        (``compacted_from`` == exactly the dirs it replaced); anything
-        else — or a pruned manifest — raises ``ValueError``. Metadata-only:
-        O(versions) manifest reads, no data scanned."""
-        cur_version = int(self.current_manifest()["version"])
+    def _baseline(self, name: str, from_version: int) -> dict | None:
+        """``name``'s entry at ``from_version``; None when the table did
+        not exist there. v0 is the empty store, whose manifest
+        ``_commit`` never writes; any other missing manifest was pruned,
+        so the baseline is unknowable (``ValueError``)."""
+        if from_version == 0:
+            return None
+        try:
+            return self.manifest_at(from_version)["tables"].get(name)
+        except FileNotFoundError:
+            raise ValueError(
+                f"{name}: the manifest for v{from_version} was pruned — the "
+                "baseline is unknowable; do a full read instead"
+            ) from None
+
+    def _retained_since(self, name: str, from_version: int, cur_version: int) -> list[int]:
+        """The versions after ``from_version`` up to ``cur_version``, each
+        with a retained manifest: a walk over a pruned window cannot
+        prove any diff (``ValueError``)."""
         expected = list(range(from_version + 1, cur_version + 1))
         retained = [v for v in self.versions() if v > from_version]
         if retained != expected:
@@ -486,12 +527,23 @@ class GoldStore:
             raise ValueError(
                 f"{name}: manifests for versions {missing} since "
                 f"v{from_version} were pruned — history cannot prove the "
-                "diff is append-only; do a full read instead"
+                "diff; do a full read instead"
             )
-        base_tables = self.manifest_at(from_version)["tables"]
-        prev = list(self._dirs(base_tables[name])) if name in base_tables else []
+        return expected
+
+    def _appended_dirs_via_history(
+        self, name: str, from_version: int, base_entry: dict | None, cur_version: int
+    ) -> list[str]:
+        """The exact dirs appended to ``name`` after ``from_version``,
+        proven from the retained manifest chain when the current entry no
+        longer references the base dirs. Each step must be an append
+        (prior dirs ⊆ next dirs) or a recorded row-preserving compaction
+        (``compacted_from`` == exactly the dirs it replaced); anything
+        else — or a pruned manifest — raises ``ValueError``. Metadata-only:
+        O(versions) manifest reads, no data scanned."""
+        prev = list(self._dirs(base_entry)) if base_entry is not None else []
         appended: list[str] = []
-        for v in expected:
+        for v in self._retained_since(name, from_version, cur_version):
             entry = self.manifest_at(v)["tables"].get(name)
             if entry is not None and entry.get("file_level"):
                 raise ValueError(
@@ -534,21 +586,6 @@ class GoldStore:
             return int(prev_entry["rows"]) == int(entry["rows"])
         return True
 
-    def _apply_entry_schema(self, df: DataFrame, schema_json: dict | None) -> DataFrame:
-        if schema_json is None:
-            return df
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-
-        want = StructType.fromJson(schema_json)
-        cols = [
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in want.fields
-        ]
-        return df.select(*cols)
-
     def changes_cdc(self, name: str, from_version: int) -> DataFrame:
         """Exact row-level CDC across ANY history — appends, both merge
         strategies, replaces — as a frame with a ``_change_type`` column
@@ -573,20 +610,8 @@ class GoldStore:
         cur_entry = cur_manifest["tables"].get(name)
         if cur_entry is None:
             raise KeyError(name)
-        cur_version = int(cur_manifest["version"])
-        expected = list(range(from_version + 1, cur_version + 1))
-        retained = [v for v in self.versions() if v > from_version]
-        if retained != expected:
-            missing = sorted(set(expected) - set(retained))
-            raise ValueError(
-                f"{name}: manifests for versions {missing} since "
-                f"v{from_version} were pruned — cdc is unprovable; do a "
-                "full read instead"
-            )
-        try:
-            prev = self.manifest_at(from_version)["tables"].get(name)
-        except FileNotFoundError:
-            prev = None if from_version == 0 else self._raise_pruned(name, from_version)
+        versions = self._retained_since(name, from_version, int(cur_manifest["version"]))
+        prev = self._baseline(name, from_version)
         schema = cur_entry.get("schema")
         frames: list[DataFrame] = []
 
@@ -601,7 +626,7 @@ class GoldStore:
                 )
             return {f["path"]: f for f in files}
 
-        for v in expected:
+        for v in versions:
             nxt = self.manifest_at(v)["tables"].get(name)
             if nxt == prev:
                 continue  # this commit touched other tables only
@@ -633,8 +658,7 @@ class GoldStore:
             # restore to a pre-merge snapshot) un-mask rows → inserts.
             changed: list[tuple[dict, list[str], list[str]]] = []
             for p in pm.keys() & nm.keys():
-                old = [d["dir"] for d in pm[p].get("dv") or []]
-                new = [d["dir"] for d in nm[p].get("dv") or []]
+                old, new = self._dv_dirs(pm[p]), self._dv_dirs(nm[p])
                 if old != new:
                     changed.append((pm[p], old, new))
             if changed:
@@ -679,17 +703,7 @@ class GoldStore:
             return self._read_entry(cur_entry).limit(0).withColumn(
                 "_change_type", F.lit("insert")
             )
-        base = frames[0]
-        for fr in frames[1:]:
-            base = base.unionByName(fr, allowMissingColumns=True)
-        return base
-
-    @staticmethod
-    def _raise_pruned(name: str, from_version: int):
-        raise ValueError(
-            f"{name}: the manifest for v{from_version} was pruned — the "
-            "baseline is unknowable; do a full read instead"
-        )
+        return self._union(frames)
 
     def properties(self, name: str) -> dict:
         """The table's manifest-recorded properties (empty dict if none)
@@ -697,7 +711,7 @@ class GoldStore:
         width ``k`` (operators/incremental.py): parameters that must be
         identical for every batch ever matched against the table."""
         entry = self.current_manifest()["tables"].get(name)
-        return dict(entry.get("properties") or {}) if entry else {}
+        return dict((entry or {}).get("properties") or {})
 
     # -- declarative constraints ------------------------------------------
 
@@ -709,8 +723,11 @@ class GoldStore:
         surface (/root/reference/database_build/data_warehouse.sql)
         persisted as a stored table property and enforced at every
         subsequent publish/append/merge."""
-        entry = self.current_manifest()["tables"].get(name)
-        return dict(entry.get("constraints") or {}) if entry else {}
+        return self._constraints_of(self.current_manifest()["tables"].get(name))
+
+    @staticmethod
+    def _constraints_of(entry: dict | None) -> dict:
+        return dict((entry or {}).get("constraints") or {})
 
     @staticmethod
     def _constraint_row_exprs(cons: dict) -> list[str]:
@@ -719,6 +736,68 @@ class GoldStore:
         exprs = [f"{c} IS NOT NULL" for c in cons.get("not_null") or []]
         exprs.extend(cons.get("check") or [])
         return exprs
+
+    @staticmethod
+    def _first_violation(df: DataFrame, exprs: list[str]) -> tuple[str, int] | None:
+        """The first of ``exprs`` some row of ``df`` violates, with its
+        violation count; one aggregation job for every predicate. A
+        predicate evaluating to NULL is a violation."""
+        from pyspark.sql import functions as F
+
+        if not exprs:
+            return None
+        viol = df.agg(
+            *[
+                F.sum(
+                    F.when(~F.expr(e), F.lit(1)).otherwise(F.lit(0))
+                    + F.when(F.expr(e).isNull(), F.lit(1)).otherwise(F.lit(0))
+                ).alias(f"v{i}")
+                for i, e in enumerate(exprs)
+            ]
+        ).collect()[0]
+        for i, e in enumerate(exprs):
+            if int(viol[f"v{i}"] or 0):
+                return e, int(viol[f"v{i}"])
+        return None
+
+    @staticmethod
+    def _first_duplicate(df: DataFrame, cols: list[str]) -> dict | None:
+        """The first ``cols`` key that occurs more than once in ``df``, as
+        a column → value dict; None when the key is unique."""
+        from pyspark.sql import functions as F
+
+        dup = (
+            df.groupBy(*cols).agg(F.count(F.lit(1)).alias("__dup_n"))
+            .filter(F.col("__dup_n") > 1).limit(1).collect()
+        )
+        return {c: dup[0][c] for c in cols} if dup else None
+
+    @staticmethod
+    def _first_shared_key(df: DataFrame, other: DataFrame, cols: list[str]) -> dict | None:
+        """The first ``cols`` key of ``df`` that ``other`` also holds."""
+        hit = df.select(*cols).join(other.select(*cols), cols, "left_semi").limit(1).collect()
+        return {c: hit[0][c] for c in cols} if hit else None
+
+    @staticmethod
+    def _first_orphan(df: DataFrame, cols: list[str], ref: DataFrame,
+                      ref_cols: list[str]) -> dict | None:
+        """The first ``cols`` key of ``df`` with no match among ``ref``'s
+        ``ref_cols`` (SQL MATCH SIMPLE: a key holding a NULL passes)."""
+        from pyspark.sql import functions as F
+
+        ref_keys = ref.select(
+            *[F.col(rc).alias(c) for rc, c in zip(ref_cols, cols)]
+        ).distinct()
+        orphan = (
+            df.select(*cols).na.drop().distinct()
+            .join(ref_keys, on=cols, how="left_anti")
+            .limit(1).collect()
+        )
+        return {c: orphan[0][c] for c in cols} if orphan else None
+
+    def _live_resolver(self, tables: dict):
+        """FK target lookup over one manifest snapshot's ``tables``."""
+        return lambda t: self._read_entry(tables[t]) if t in tables else None
 
     def _enforce_relational(self, name, df, cons, ref_resolver,
                             existing_keys=None) -> None:
@@ -733,27 +812,17 @@ class GoldStore:
         a distinct of the batch's FK values (bounded by batch size)
         anti-joined against the referenced key set. Nothing here scans
         the target table except the optional append-PK key projection."""
-        from pyspark.sql import functions as F
-
         pk = cons.get("primary_key") or []
         if pk:
-            dup = (
-                df.groupBy(*pk).agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > 1).limit(1).collect()
-            )
-            if dup:
-                key = {c: dup[0][c] for c in pk}
+            key = self._first_duplicate(df, pk)
+            if key is not None:
                 raise ConstraintError(
                     f"table {name!r}: duplicate primary key {key} in "
                     "staged rows — publish rejected, store untouched"
                 )
             if existing_keys is not None:
-                clash = (
-                    df.select(*pk).join(existing_keys, on=pk, how="left_semi")
-                    .limit(1).collect()
-                )
-                if clash:
-                    key = {c: clash[0][c] for c in pk}
+                key = self._first_shared_key(df, existing_keys, pk)
+                if key is not None:
                     raise ConstraintError(
                         f"table {name!r}: appended primary key {key} "
                         "already exists — publish rejected, store untouched"
@@ -767,17 +836,8 @@ class GoldStore:
                     f"table {name!r}: foreign key references unknown "
                     f"table {ref_t!r}"
                 )
-            ref_keys = ref.select(
-                *[F.col(rc).alias(c) for rc, c in zip(ref_cols, cols)]
-            ).distinct()
-            orphan = (
-                df.select(*cols).na.drop()  # SQL MATCH SIMPLE: NULLs pass
-                .distinct()
-                .join(ref_keys, on=cols, how="left_anti")
-                .limit(1).collect()
-            )
-            if orphan:
-                key = {c: orphan[0][c] for c in cols}
+            key = self._first_orphan(df, cols, ref, ref_cols)
+            if key is not None:
                 raise ConstraintError(
                     f"table {name!r}: foreign key {key} has no match in "
                     f"{ref_t!r}({', '.join(ref_cols)}) — publish "
@@ -786,28 +846,19 @@ class GoldStore:
 
     def _check_row_constraints(self, name, df, cons) -> None:
         """One-pass not_null/check audit for frames that do not go
-        through ``_stage_tables`` (merge sources)."""
-        from pyspark.sql import functions as F
+        through ``_stage_tables`` (merge sources, full-table audits)."""
+        bad = self._first_violation(df, self._constraint_row_exprs(cons))
+        if bad is not None:
+            raise ConstraintError(
+                f"table {name!r}: {bad[1]} source row(s) violate declared "
+                f"constraint {bad[0]!r} — merge rejected, store untouched"
+            )
 
-        exprs = self._constraint_row_exprs(cons)
-        if not exprs:
-            return
-        viol = df.agg(
-            *[
-                F.sum(
-                    F.when(~F.expr(e), F.lit(1)).otherwise(F.lit(0))
-                    + F.when(F.expr(e).isNull(), F.lit(1)).otherwise(F.lit(0))
-                ).alias(f"v{i}")
-                for i, e in enumerate(exprs)
-            ]
-        ).collect()[0]
-        for i, e in enumerate(exprs):
-            if int(viol[f"v{i}"] or 0):
-                raise ConstraintError(
-                    f"table {name!r}: {int(viol[f'v{i}'])} source row(s) "
-                    f"violate declared constraint {e!r} — merge rejected, "
-                    "store untouched"
-                )
+    def _audit_live_table(self, name: str, cons: dict, tables: dict) -> None:
+        """Full-table audit of ``name``'s live rows against ``cons``."""
+        df = self._read_entry(tables[name])
+        self._check_row_constraints(name, df, cons)
+        self._enforce_relational(name, df, cons, self._live_resolver(tables))
 
     def declare_constraints(
         self, decls: dict[str, dict], base_version: int,
@@ -827,100 +878,64 @@ class GoldStore:
                     f"cannot declare constraints on unknown table {name!r}"
                     " — publish it first"
                 )
-            df = self.read(name)
-            self._check_row_constraints(name, df, cons)
-            self._enforce_relational(
-                name, df, cons,
-                lambda t: self.read(t) if t in current else None,
-            )
+            self._audit_live_table(name, cons, current)
 
-        def set_constraints(tables: dict) -> None:
+        def set_constraints(tables: dict, _staged) -> None:
             for name, cons in decls.items():
                 tables[name] = {**tables[name], "constraints": cons}
 
-        txn = uuid.uuid4().hex[:12]
-        return self._commit(set_constraints, base_version, txn, lock_timeout)
+        return self._transact(None, set_constraints, base_version, lock_timeout)
 
     def validate_constraints(self, name: str) -> None:
         """Full-table constraint audit on demand (raises
         ``ConstraintError`` on the first violation) — the recheck tool
         after restores or external tampering."""
-        cons = self.constraints(name)
-        if not cons:
-            return
         current = self.current_manifest()["tables"]
-        df = self.read(name)
-        self._check_row_constraints(name, df, cons)
-        self._enforce_relational(
-            name, df, cons, lambda t: self.read(t) if t in current else None
-        )
-
-    def _referencing_fks(self, parent: str) -> list[tuple[str, dict]]:
-        """Every ``(child_table, fk_decl)`` in the current manifest whose
-        declared FOREIGN KEY references ``parent`` — the reverse edge of
-        the constraint graph, needed when the PARENT side changes."""
-        out: list[tuple[str, dict]] = []
-        for t, e in self.current_manifest()["tables"].items():
-            for fk in (e.get("constraints") or {}).get("foreign_keys") or []:
-                if fk.get("ref_table") == parent:
-                    out.append((t, fk))
-        return out
+        cons = self._constraints_of(current.get(name))
+        if cons:
+            self._audit_live_table(name, cons, current)
 
     def _audit_referencing_children(
-        self, parent: str, post_parent_df, skip_children: set[str] = frozenset(),
+        self, parent: str, post_parent, tables: dict,
+        skip_children: set[str] = frozenset(),
     ) -> None:
         """Reverse-direction FK audit: when ``parent`` is REPLACED or has
         rows DELETED, every live child table declaring an FK to it must
         still resolve against the post-commit parent key set (the
         reference's Postgres DDL rejects parent-side orphaning the same
-        way, data_warehouse.sql REFERENCES clauses). ``skip_children``:
-        tables staged in the SAME commit — their own incoming-side audit
-        already validates them against the staged parent.
+        way, data_warehouse.sql REFERENCES clauses). ``post_parent()``
+        builds that parent frame, only when some child needs it;
+        ``tables`` is the manifest snapshot the children are read from.
+        ``skip_children``: tables staged in the SAME commit — their own
+        incoming-side audit already validates them against the staged
+        parent.
 
         Cost: per declared child FK, one distinct of the child's FK
         values anti-joined against a distinct of the new parent keys —
         both column-pruned; nothing here is paid unless a constraint
         names this table as ref_table."""
-        from pyspark.sql import functions as F
-
-        for child, fk in self._referencing_fks(parent):
-            if child in skip_children or child == parent:
-                continue
+        edges = [  # the reverse edges of the constraint graph
+            (child, fk)
+            for child, e in tables.items()
+            if child not in skip_children and child != parent
+            for fk in (e.get("constraints") or {}).get("foreign_keys") or []
+            if fk.get("ref_table") == parent
+        ]
+        if not edges:
+            return
+        post_parent_df = post_parent()
+        for child, fk in edges:
             cols = list(fk["columns"])
-            ref_cols = list(fk.get("ref_columns") or cols)
-            parent_keys = post_parent_df.select(
-                *[F.col(rc).alias(c) for rc, c in zip(ref_cols, cols)]
-            ).distinct()
-            orphan = (
-                self.read(child).select(*cols).na.drop()
-                .distinct()
-                .join(parent_keys, on=cols, how="left_anti")
-                .limit(1).collect()
+            key = self._first_orphan(
+                self._read_entry(tables[child]), cols,
+                post_parent_df, list(fk.get("ref_columns") or cols),
             )
-            if orphan:
-                key = {c: orphan[0][c] for c in cols}
+            if key is not None:
                 raise ConstraintError(
                     f"table {parent!r}: change would orphan foreign key "
                     f"{key} in child table {child!r} — rejected, store "
                     "untouched"
                 )
-
-    @staticmethod
-    def _rel_data_path(uri: str) -> str:
-        """Manifest-relative ``_data/<txn>/...`` path of a Spark-reported
-        file URI. Staged files live directly under ``<store>/_data/``, so
-        the suffix after the LAST ``/_data/`` is exactly the manifest's
-        relative path — immune to scheme prefixes, URL quoting, symlink
-        resolution, or a non-normalized store path."""
-        from urllib.parse import unquote, urlparse
-
-        p = (
-            unquote(urlparse(uri).path)
-            if "://" in uri or uri.startswith("file:")
-            else uri
-        )
-        head, sep, tail = p.rpartition(os.sep + "_data" + os.sep)
-        return os.path.join("_data", tail) if sep else p
 
     @classmethod
     def _complete_files(cls, entry: dict) -> list[dict] | None:
@@ -937,110 +952,58 @@ class GoldStore:
             # merge-produced entries are born with full coverage and the
             # dirs list is derived FROM the file set — nothing to check
             return files
-        covered = {os.sep.join(f["path"].split(os.sep)[:3]) for f in files}
+        covered = {cls._txn_root(f["path"]) for f in files}
         if any(d not in covered for d in cls._dirs(entry)):
             return None
         return files
 
     @staticmethod
-    def _partition_matches(f: dict, col: str, lo, hi) -> bool | None:
-        """True/False if the file's manifest-recorded partition value for
-        ``col`` decides the predicate; None if ``col`` is not a partition
-        column of this file. Partition values are path strings; coerce
-        to the predicate's numeric type when the bounds are numeric,
-        keeping the file (conservative) if coercion fails."""
+    def _file_may_match(f: dict, bounds: dict) -> bool:
+        """False only when the file's manifest metadata proves that none
+        of its rows satisfies every ``col: (lo, hi)`` bound. A recorded
+        partition value decides its column: path strings coerce to the
+        bound's numeric type, and a value that does not coerce (the
+        ``__HIVE_DEFAULT_PARTITION__`` null partition) or a bool bound
+        keeps the file. Otherwise the column's ``[min, max]`` stats
+        decide, and a column with neither keeps the file."""
         part = f.get("partition") or {}
-        if col not in part:
-            return None
-        v = part[col]
-        if isinstance(lo, bool) or isinstance(hi, bool):
-            return True
-        if isinstance(lo, (int, float)):
-            try:
-                v = float(v) if isinstance(lo, float) else int(v)
-            except (TypeError, ValueError):
-                return True
-        return bool(lo <= v <= hi)
-
-    def pruned_files(self, name: str, col: str, lo, hi) -> list[str] | None:
-        """Data files of ``name`` whose manifest metadata for ``col``
-        intersects [lo, hi] — Iceberg-style pruning: the planner touches
-        ONLY the manifest, never a parquet footer. Prunes on BOTH the
-        file's recorded partition values (``date_sk=X`` path layout,
-        recorded at stage time) and its column [min, max] stats. Returns
-        None when the manifest carries no stats (legacy entry), meaning
-        "cannot prune, read everything". Files without metadata for
-        ``col`` are kept (conservative)."""
-        entry = self.current_manifest()["tables"][name]
-        files = self._complete_files(entry)
-        if files is None:
-            return None
-        keep = []
-        for f in files:
-            pm = self._partition_matches(f, col, lo, hi)
-            if pm is False:
-                continue
-            if pm is True:
-                keep.append(f)
-                continue
-            rng = f.get("stats", {}).get(col)
-            if rng is None or (rng[1] >= lo and rng[0] <= hi):
-                keep.append(f)
-        return keep
-
-    def pruned_files_multi(self, name: str, bounds: dict) -> list[str] | None:
-        """Conjunctive pruning: files whose metadata intersects EVERY
-        ``col: (lo, hi)`` predicate — the read shape that pays off a
-        Z-ordered layout (each additional indexed column multiplies the
-        cut). Same conservative semantics as ``pruned_files`` per
-        column; returns None when the manifest carries no stats."""
-        entry = self.current_manifest()["tables"][name]
-        files = self._complete_files(entry)
-        if files is None:
-            return None
-        keep = []
-        for f in files:
-            ok = True
-            for col, (lo, hi) in bounds.items():
-                pm = self._partition_matches(f, col, lo, hi)
-                if pm is False:
-                    ok = False
-                    break
-                if pm is True:
-                    continue
+        for col, (lo, hi) in bounds.items():
+            if col not in part:
                 rng = f.get("stats", {}).get(col)
                 if rng is not None and not (rng[1] >= lo and rng[0] <= hi):
-                    ok = False
-                    break
-            if ok:
-                keep.append(f)
-        return keep
+                    return False
+                continue
+            v = part[col]
+            if isinstance(lo, bool) or isinstance(hi, bool):
+                continue
+            if isinstance(lo, (int, float)):
+                try:
+                    v = float(v) if isinstance(lo, float) else int(v)
+                except (TypeError, ValueError):
+                    continue
+            if not lo <= v <= hi:
+                return False
+        return True
 
-    def read_pruned_multi(self, name: str, bounds: dict) -> DataFrame:
-        """``read(name)`` filtered to the conjunction of every
-        ``col: (lo, hi)`` bound, scanning only the multi-predicate
-        manifest-pruned file set (residual filters still apply — stats
-        prune files, not rows)."""
-        from pyspark.sql import functions as F
-
-        files = self.pruned_files_multi(name, bounds)
+    def pruned_files(self, name: str, bounds: dict) -> list[dict] | None:
+        """Data files of ``name`` whose manifest metadata intersects EVERY
+        ``col: (lo, hi)`` bound — Iceberg-style pruning: the planner
+        touches ONLY the manifest, never a parquet footer. Prunes on
+        both the files' recorded partition values (``date_sk=X`` path
+        layout) and their column [min, max] stats, so each additional
+        Z-ordered column multiplies the cut. Returns None when the
+        manifest carries no stats (legacy entry), meaning "cannot prune,
+        read everything"."""
+        files = self._complete_files(self.current_manifest()["tables"][name])
         if files is None:
-            base = self.read(name)
-        elif not files:
-            base = self.spark.createDataFrame([], self.read(name).schema)
-        else:
-            base = self._read_files(files)
-        cond = F.lit(True)
-        for col, (lo, hi) in bounds.items():
-            cond = cond & (F.col(col) >= lo) & (F.col(col) <= hi)
-        return base.filter(cond)
+            return None
+        return [f for f in files if self._file_may_match(f, bounds)]
 
-    def read_pruned(self, name: str, col: str, lo, hi) -> DataFrame:
-        """``read(name).filter(lo <= col <= hi)`` but scanning only the
-        manifest-pruned file set. Combine with a Z-ordered layout
-        (operators/layout.py) and the pruned set shrinks on EVERY
-        indexed column; the residual filter still applies (stats prune
-        files, not rows).
+    def read_pruned(self, name: str, bounds: dict) -> DataFrame:
+        """``read(name)`` filtered to ``lo <= col <= hi`` for every
+        ``col: (lo, hi)`` in ``bounds``, scanning only the manifest-pruned
+        file set; the residual filter still applies (stats prune files,
+        not rows).
 
         Partition-aware: files under a ``col=value`` layout read with
         ``basePath`` pinned to their staged table root, so Spark
@@ -1050,14 +1013,16 @@ class GoldStore:
         manifest schema already guarantees type compatibility)."""
         from pyspark.sql import functions as F
 
-        files = self.pruned_files(name, col, lo, hi)
+        files = self.pruned_files(name, bounds)
         if files is None:
             base = self.read(name)
         elif not files:
             base = self.spark.createDataFrame([], self.read(name).schema)
         else:
             base = self._read_files(files)
-        return base.filter((F.col(col) >= lo) & (F.col(col) <= hi))
+        for col, (lo, hi) in bounds.items():
+            base = base.filter((F.col(col) >= lo) & (F.col(col) <= hi))
+        return base
 
     @staticmethod
     def _file_stats(target: str, base: str) -> list[dict]:
@@ -1115,10 +1080,11 @@ class GoldStore:
     ) -> dict[str, dict]:
         """Write + audit each table into ``_data/<txn>/``, dropping a
         ``_STAGED`` marker FIRST so a concurrent ``vacuum`` can never
-        reclaim the dir during the stage→commit window. The marker is
-        removed by the publish wrapper once the commit attempt resolves
-        (success: the manifest now references the dir; rejection: the
-        dir is a plain orphan, reclaimable after the retention age).
+        reclaim the dir during the stage→commit window. ``_transact``
+        removes the marker once the attempt resolves (success: the
+        manifest now references the dir; rejection by the CAS or by an
+        audit: the dir is a plain orphan, reclaimable after the
+        retention age).
 
         The audit reads metadata only: ``_file_stats`` parses every
         staged file's footer (a torn file raises here, before any
@@ -1136,8 +1102,6 @@ class GoldStore:
         (``session.concurrently``); ``staged`` keeps the order of
         ``tables``. Every table's write finishes before an error
         propagates, and the error is the first in table order."""
-        from pyspark.sql import functions as F
-
         self._mark_staged(txn)
 
         def stage(name: str) -> dict:
@@ -1158,27 +1122,12 @@ class GoldStore:
                 "schema": self._staged_schema(df.schema.jsonValue(), files, part_col),
             }
             exprs = (expectations or {}).get(name) or []
-            if exprs:
-                back = self._read_staged(entry)
-                # one job for all predicates: count rows violating each
-                viol = back.agg(
-                    *[
-                        F.sum(
-                            F.when(~F.expr(e), F.lit(1)).otherwise(F.lit(0))
-                            # a predicate evaluating to NULL is a violation
-                            + F.when(F.expr(e).isNull(), F.lit(1)).otherwise(F.lit(0))
-                        ).alias(f"v{i}")
-                        for i, e in enumerate(exprs)
-                    ]
-                ).collect()[0]
-                for i, e in enumerate(exprs):
-                    n_bad = int(viol[f"v{i}"] or 0)
-                    if n_bad:
-                        raise ExpectationError(
-                            f"table {name!r}: {n_bad} row(s) violate "
-                            f"expectation {e!r} — publish rejected, store "
-                            "untouched"
-                        )
+            bad = self._first_violation(self._read_staged(entry), exprs) if exprs else None
+            if bad is not None:
+                raise ExpectationError(
+                    f"table {name!r}: {bad[1]} row(s) violate expectation "
+                    f"{bad[0]!r} — publish rejected, store untouched"
+                )
             return entry
 
         names = list(tables)
@@ -1254,6 +1203,7 @@ class GoldStore:
         read-back doubles as the audit (a torn DV can never publish)."""
         from pyspark.sql import functions as F
 
+        self._mark_staged(txn)
         rel = os.path.join("_data", txn, "__dv__")
         target = os.path.join(self.path, rel)
         dv_df.select(
@@ -1266,15 +1216,15 @@ class GoldStore:
         }
         return rel, per_file
 
-    @staticmethod
-    def _file_level_dirs(files: list[dict], extra: list[str] | None = None) -> list[str]:
+    @classmethod
+    def _file_level_dirs(cls, files: list[dict], extra: list[str] | None = None) -> list[str]:
         """Every dir a file-level entry must keep live for vacuum: the
         data roots of its files AND the roots of every referenced
         deletion vector (a DV in txn A masks rows of files in txn B —
         dropping A's dir reference would let vacuum corrupt B's reads)."""
         roots: list[str] = []
         for f in files:
-            r = os.sep.join(f["path"].split(os.sep)[:3])
+            r = cls._txn_root(f["path"])
             if r not in roots:
                 roots.append(r)
             for d in f.get("dv") or []:
@@ -1314,46 +1264,39 @@ class GoldStore:
         return {**prior, "fields": merged}
 
     @staticmethod
-    def _merge_properties(name: str, prior: dict | None, new: dict | None) -> dict | None:
-        """Properties are immutable once set: a publish naming different
-        values for existing keys is rejected (``TablePropertiesError``);
-        new keys are allowed."""
-        if not new:
-            return prior
-        if not prior:
-            return dict(new)
-        for key, val in new.items():
-            if key in prior and prior[key] != val:
+    def _carried_contract(name: str, prior: dict | None, new_props: dict | None = None) -> dict:
+        """The contract keys a new entry inherits from ``prior``: its
+        ``properties``, merged with ``new_props``, and its declared
+        ``constraints``. Properties are immutable once set: a new value
+        for an existing key is rejected (``TablePropertiesError``); new
+        keys are allowed."""
+        prior = prior or {}
+        props = prior.get("properties")
+        for key, val in (new_props or {}).items():
+            if props and key in props and props[key] != val:
                 raise TablePropertiesError(
                     f"table {name!r}: property {key}={val!r} conflicts with "
-                    f"recorded {key}={prior[key]!r} — data written under "
+                    f"recorded {key}={props[key]!r} — data written under "
                     "different parameters is not comparable"
                 )
-        return {**prior, **new}
-
-    def _fold_constraint_expectations(
-        self, cons_map: dict[str, dict], expectations
-    ) -> dict[str, list[str]] | None:
-        """Declared not_null/check constraints ride the caller's
-        expectations through the single-pass staging audit."""
-        eff = {n: list(v) for n, v in (expectations or {}).items()}
-        for n, cons in cons_map.items():
-            exprs = self._constraint_row_exprs(cons)
-            if exprs:
-                eff[n] = list(eff.get(n) or []) + exprs
-        return eff or None
+        if new_props:
+            props = {**(props or {}), **new_props}
+        out = {} if props is None else {"properties": props}
+        if prior.get("constraints"):
+            out["constraints"] = prior["constraints"]
+        return out
 
     def _enforce_staged_constraints(
         self, cons_map: dict[str, dict], staged: dict[str, dict],
-        append_to_existing: bool = False,
+        current: dict, append_to_existing: bool,
     ) -> None:
         """PK/FK audits over the staged read-back, resolving FK targets
         against staged siblings first (a dims+facts batch validates
         facts against the dims in the SAME publish, like the reference's
-        ordered warehouse load) and the live store otherwise."""
+        ordered warehouse load) and the ``current`` snapshot otherwise."""
         if not any(cons_map.values()):
             return
-        current = self.current_manifest()["tables"]
+        live = self._live_resolver(current)
 
         def resolver(t):
             if t in staged:
@@ -1362,9 +1305,9 @@ class GoldStore:
                     # an appended sibling contributes its delta ON TOP of
                     # the prior rows (a replace-published sibling IS the
                     # full table already)
-                    df = self.read(t).unionByName(df, allowMissingColumns=True)
+                    df = live(t).unionByName(df, allowMissingColumns=True)
                 return df
-            return self.read(t) if t in current else None
+            return live(t)
 
         for name, cons in cons_map.items():
             if not cons:
@@ -1372,10 +1315,56 @@ class GoldStore:
             existing_keys = None
             pk = cons.get("primary_key") or []
             if append_to_existing and pk and name in current:
-                existing_keys = self.read(name).select(*pk)
+                existing_keys = live(name).select(*pk)
             self._enforce_relational(
                 name, self._read_staged(staged[name]), cons, resolver, existing_keys
             )
+
+    def _stage_audited(
+        self, tables: dict[str, DataFrame], txn: str, current: dict,
+        expectations, append: bool,
+    ) -> dict[str, dict]:
+        """Stage ``tables`` and run every audit a publish owes them, all
+        against the one manifest snapshot ``current``: the caller's
+        expectations plus declared not_null/check in the single-pass
+        staging audit, then PK/FK over the staged read-back, then — for
+        a replace — the parent-side audit, so replacing a table that
+        OTHER tables declare FKs against cannot orphan their rows
+        (children staged in the same commit are validated forward by
+        the staged resolver)."""
+        cons_map = {n: self._constraints_of(current.get(n)) for n in tables}
+        expect = {n: list(v) for n, v in (expectations or {}).items()}
+        for n, cons in cons_map.items():
+            expect[n] = expect.get(n, []) + self._constraint_row_exprs(cons)
+        staged = self._stage_tables(tables, txn, partitioned=not append, expectations=expect)
+        self._enforce_staged_constraints(cons_map, staged, current, append)
+        if not append:
+            for t in staged:
+                if t in current:
+                    self._audit_referencing_children(
+                        t, lambda t=t: self._read_staged(staged[t]), current,
+                        skip_children=set(staged),
+                    )
+        return staged
+
+    def _transact(self, stage, update_tables, base_version: int, lock_timeout: float) -> int:
+        """The one stage → audit → commit → unmark lifecycle of every
+        write. ``stage(txn)`` writes and audits the txn's data (each
+        writer drops the ``_STAGED`` marker first) and returns what
+        ``update_tables(tables, staged)`` folds into the manifest under
+        the CAS; a metadata-only write passes ``stage=None``. The marker
+        goes however the attempt ends — committed, lost the CAS, or
+        rejected by its own audit — so a rejected dir is a plain orphan
+        for ``vacuum``."""
+        txn = uuid.uuid4().hex[:12]
+        try:
+            staged = stage(txn) if stage is not None else None
+            return self._commit(
+                lambda tables: update_tables(tables, staged),
+                base_version, txn, lock_timeout,
+            )
+        finally:
+            self._unmark_staged(txn)
 
     def publish(
         self,
@@ -1396,47 +1385,19 @@ class GoldStore:
         manifest entries (``compact`` records its replaced-dir lineage
         this way so ``changes_since`` can prove the rewrite was
         row-preserving). Returns the committed version."""
-        txn = uuid.uuid4().hex[:12]
-        cons_map = {n: self.constraints(n) for n in gold}
-        eff_expect = self._fold_constraint_expectations(cons_map, expectations)
-        staged = self._stage_tables(gold, txn, partitioned=True, expectations=eff_expect)
-        self._enforce_staged_constraints(cons_map, staged)
-        # parent-side audit: replacing a table that OTHER tables declare
-        # FKs against must not orphan their rows (children staged in the
-        # same commit are validated forward by the staged resolver above)
-        current_names = set(self.current_manifest()["tables"])
-        staged_names = set(staged)
-        try:
-            for t in staged:
-                if t not in current_names:
-                    continue
-                if not any(
-                    c not in staged_names and c != t
-                    for c, _ in self._referencing_fks(t)
-                ):
-                    continue
-                self._audit_referencing_children(
-                    t, self._read_staged(staged[t]), skip_children=staged_names
-                )
-        except ConstraintError:
-            self._unmark_staged(txn)
-            raise
+        current = self.current_manifest()["tables"]
 
-        def replace_tables(tables: dict) -> None:
+        def replace_tables(tables: dict, staged: dict) -> None:
             for name, entry in staged.items():
-                prior = tables.get(name) or {}
-                props = self._merge_properties(
-                    name, prior.get("properties"), (properties or {}).get(name)
+                contract = self._carried_contract(
+                    name, tables.get(name), (properties or {}).get(name)
                 )
-                merged = {**entry, **(entry_extra or {}).get(name, {})}
-                if prior.get("constraints"):
-                    merged["constraints"] = prior["constraints"]
-                tables[name] = merged if props is None else {**merged, "properties": props}
+                tables[name] = {**entry, **(entry_extra or {}).get(name, {}), **contract}
 
-        try:
-            return self._commit(replace_tables, base_version, txn, lock_timeout)
-        finally:
-            self._unmark_staged(txn)
+        return self._transact(
+            lambda txn: self._stage_audited(gold, txn, current, expectations, append=False),
+            replace_tables, base_version, lock_timeout,
+        )
 
     def publish_append(
         self,
@@ -1461,19 +1422,13 @@ class GoldStore:
         type change of an existing column raises ``SchemaEvolutionError``
         at audit/commit time, leaving the store untouched.
         """
-        txn = uuid.uuid4().hex[:12]
-        cons_map = {n: self.constraints(n) for n in deltas}
-        eff_expect = self._fold_constraint_expectations(cons_map, expectations)
-        staged = self._stage_tables(deltas, txn, partitioned=False, expectations=eff_expect)
-        self._enforce_staged_constraints(cons_map, staged, append_to_existing=True)
+        current = self.current_manifest()["tables"]
 
-        def append_tables(tables: dict) -> None:
+        def append_tables(tables: dict, staged: dict) -> None:
             for name, delta in staged.items():
                 prior = tables.get(name)
-                props = self._merge_properties(
-                    name,
-                    (prior or {}).get("properties"),
-                    (properties or {}).get(name),
+                contract = self._carried_contract(
+                    name, prior, (properties or {}).get(name)
                 )
                 if prior is None:
                     entry = {
@@ -1496,16 +1451,12 @@ class GoldStore:
                     # stay file-level or reads would resurrect dead files
                     if prior.get("file_level"):
                         entry["file_level"] = True
-                if props is not None:
-                    entry["properties"] = props
-                if prior is not None and prior.get("constraints"):
-                    entry["constraints"] = prior["constraints"]
-                tables[name] = entry
+                tables[name] = {**entry, **contract}
 
-        try:
-            return self._commit(append_tables, base_version, txn, lock_timeout)
-        finally:
-            self._unmark_staged(txn)
+        return self._transact(
+            lambda txn: self._stage_audited(deltas, txn, current, expectations, append=True),
+            append_tables, base_version, lock_timeout,
+        )
 
     def compact(self, name: str, lock_timeout: float = 30.0) -> int:
         """Rewrite a (possibly multi-dir) table into one fresh dir and
@@ -1518,15 +1469,13 @@ class GoldStore:
         replaced — so ``changes_since`` can prove the rewrite preserved
         rows and keep serving dir-level CDC across the compaction (the
         CAS guarantees the replaced set is still current at commit)."""
-        base = self.current_version()
-        props = self.properties(name)
-        replaced = self._dirs(self.current_manifest()["tables"][name])
+        m = self.current_manifest()
+        entry = m["tables"][name]
         return self.publish(
-            {name: self.read(name)},
-            base,
+            {name: self._read_entry(entry)},
+            int(m["version"]),
             lock_timeout,
-            properties={name: props} if props else None,
-            entry_extra={name: {"compacted_from": list(replaced)}},
+            entry_extra={name: {"compacted_from": list(self._dirs(entry))}},
         )
 
     def merge(
@@ -1588,29 +1537,32 @@ class GoldStore:
         if strategy not in ("cow", "mor"):
             raise ValueError(f"unknown merge strategy {strategy!r}")
         base_version = self.current_version()
-        entry = self.current_manifest()["tables"].get(name)
+        current = self.current_manifest()["tables"]
+        entry = current.get(name)
         if entry is None:
             raise KeyError(name)
-        cons = dict(entry.get("constraints") or {})
-        if mode == "delete" and self._referencing_fks(name):
+        cons = self._constraints_of(entry)
+        if mode == "delete":
             # parent-side audit (ADVICE r9): deleting rows from a table
             # other tables declare FKs against must not orphan them —
             # audit children against the post-delete parent key set
-            post_parent = self.read(name).join(
-                source.select(*key_cols).dropDuplicates(key_cols),
-                key_cols, "left_anti",
+            self._audit_referencing_children(
+                name,
+                lambda: self._read_entry(entry).join(
+                    source.select(*key_cols).dropDuplicates(key_cols),
+                    key_cols, "left_anti",
+                ),
+                current,
             )
-            self._audit_referencing_children(name, post_parent)
         if cons and mode in ("upsert", "insert_if_absent"):
             # declared constraints apply to the incoming rows (O(delta)):
             # not_null/check in one agg, FK orphans vs the live store;
             # PK uniqueness on key_cols rides the source-dup check below
             self._check_row_constraints(name, source, cons)
-            current_tables = self.current_manifest()["tables"]
             self._enforce_relational(
                 name, source, {k: v for k, v in cons.items()
                                if k == "foreign_keys"},
-                lambda t: self.read(t) if t in current_tables else None,
+                self._live_resolver(current),
             )
             pk = list(cons.get("primary_key") or [])
             if pk and set(pk) != set(key_cols):
@@ -1619,128 +1571,84 @@ class GoldStore:
                 # insert portion could land duplicate PKs unchecked.
                 # (1) source-internal PK uniqueness; (2) source PKs must
                 # not clash with target rows that SURVIVE the merge
-                dup_pk = (
-                    source.groupBy(*pk).agg(F.count(F.lit(1)).alias("c"))
-                    .filter(F.col("c") > 1).limit(1).collect()
-                )
-                if dup_pk:
-                    key = {c: dup_pk[0][c] for c in pk}
+                key = self._first_duplicate(source, pk)
+                if key is not None:
                     raise ConstraintError(
                         f"table {name!r}: duplicate primary key {key} in "
                         "merge source — merge rejected, store untouched"
                     )
-                live = self.read(name)
-                src_keys = source.select(*key_cols).dropDuplicates(key_cols)
+                live = self._read_entry(entry)
                 proj = list(dict.fromkeys([*pk, *key_cols]))
                 if mode == "upsert":
                     # rows whose merge key matches are replaced; only the
                     # survivors' PKs can clash with the source
-                    surviving = live.select(*proj).join(
-                        src_keys, key_cols, "left_anti"
-                    )
-                    clash = (
-                        source.select(*pk)
-                        .join(surviving.select(*pk), pk, "left_semi")
-                        .limit(1).collect()
+                    landing, kept = source, live.select(*proj).join(
+                        source.select(*key_cols).dropDuplicates(key_cols),
+                        key_cols, "left_anti",
                     )
                 else:  # insert_if_absent: target keeps every row; only
                     # fresh-keyed source rows land, check those vs ALL
-                    fresh_src = source.select(*proj).join(
+                    landing, kept = source.select(*proj).join(
                         live.select(*key_cols).dropDuplicates(key_cols),
                         key_cols, "left_anti",
-                    )
-                    clash = (
-                        fresh_src.select(*pk)
-                        .join(live.select(*pk), pk, "left_semi")
-                        .limit(1).collect()
-                    )
-                if clash:
-                    key = {c: clash[0][c] for c in pk}
+                    ), live
+                key = self._first_shared_key(landing, kept, pk)
+                if key is not None:
                     raise ConstraintError(
                         f"table {name!r}: merge would commit duplicate "
                         f"primary key {key} (declared PK {pk} differs "
                         f"from merge keys {key_cols}) — merge rejected, "
                         "store untouched"
                     )
-        if mode in ("upsert", "insert_if_absent"):
-            dup = (
-                source.groupBy(*key_cols)
-                .agg(F.count(F.lit(1)).alias("c"))
-                .filter(F.col("c") > 1)
-                .limit(1)
-                .count()
+        if mode in ("upsert", "insert_if_absent") and (
+            self._first_duplicate(source, key_cols) is not None
+        ):
+            raise ValueError(
+                f"merge source has duplicate keys on {key_cols} — "
+                "latest-wins needs an explicit pre-aggregation"
             )
-            if dup:
-                raise ValueError(
-                    f"merge source has duplicate keys on {key_cols} — "
-                    "latest-wins needs an explicit pre-aggregation"
-                )
         files = self._complete_files(entry)
-        if files is None:
-            # legacy or partially-covered entry without usable file
-            # stats: no pruning possible —
-            # correct full copy-on-write rewrite of the whole table
-            # (insert_if_absent still appends, but freshness must check
-            # the whole table)
-            if mode == "insert_if_absent":
-                existing = self._read_entry(entry).select(*key_cols)
-                fresh = source.join(
-                    existing.dropDuplicates(key_cols), key_cols, "left_anti"
-                ).cache()
-                try:
-                    if fresh.count() == 0:
-                        return base_version
-                    return self.publish_append({name: fresh}, base_version, lock_timeout)
-                finally:
-                    fresh.unpersist(blocking=True)
-            touched_rel = None
-            untouched: list[dict] = []
-            target = self._read_entry(entry)
-        else:
+        if files is not None:
             # metadata-only candidate pruning: source key bounds vs the
-            # per-file [min,max]/partition metadata, one bounded agg job
-            bounds_row = source.agg(
+            # per-file [min,max]/partition metadata, one bounded agg job;
+            # an all-NULL key column has no bounds and prunes nothing
+            lo_hi = source.agg(
                 *[F.min(c).alias(f"lo_{i}") for i, c in enumerate(key_cols)],
                 *[F.max(c).alias(f"hi_{i}") for i, c in enumerate(key_cols)],
             ).collect()[0]
-            cand = []
-            for f in files:
-                keep = True
-                for i, c in enumerate(key_cols):
-                    lo, hi = bounds_row[f"lo_{i}"], bounds_row[f"hi_{i}"]
-                    if lo is None or hi is None:
-                        continue
-                    pm = self._partition_matches(f, c, lo, hi)
-                    if pm is False:
-                        keep = False
-                        break
-                    if pm is True:
-                        continue
-                    rng = f.get("stats", {}).get(c)
-                    if rng is not None and not (rng[1] >= lo and rng[0] <= hi):
-                        keep = False
-                        break
-                if keep:
-                    cand.append(f)
-            if mode == "insert_if_absent":
-                # a key present anywhere in the target MUST live in a
-                # candidate file (pruning is conservative), so the
-                # anti-join against candidates alone decides freshness
-                # (DV-aware read: a deleted key is absent, so re-insert)
-                if cand:
-                    existing = self._read_files(cand).select(*key_cols)
-                    fresh = source.join(
-                        existing.dropDuplicates(key_cols), key_cols, "left_anti"
-                    )
-                else:
-                    fresh = source
-                fresh = fresh.cache()
-                try:
-                    if fresh.count() == 0:
-                        return base_version  # pure replay — no new version
-                    return self.publish_append({name: fresh}, base_version, lock_timeout)
-                finally:
-                    fresh.unpersist(blocking=True)
+            bounds = {
+                c: (lo_hi[f"lo_{i}"], lo_hi[f"hi_{i}"])
+                for i, c in enumerate(key_cols)
+                if lo_hi[f"lo_{i}"] is not None and lo_hi[f"hi_{i}"] is not None
+            }
+            cand = [f for f in files if self._file_may_match(f, bounds)]
+        if mode == "insert_if_absent":
+            # a key present anywhere in the target MUST live in a
+            # candidate file (pruning is conservative) — anywhere in the
+            # table when the entry has no usable file stats — so the
+            # anti-join against those rows alone decides freshness
+            # (DV-aware read: a deleted key is absent, so re-insert)
+            existing = (
+                self._read_entry(entry) if files is None
+                else self._read_files(cand) if cand else None
+            )
+            fresh = source if existing is None else source.join(
+                existing.select(*key_cols).dropDuplicates(key_cols), key_cols, "left_anti"
+            )
+            fresh = fresh.cache()
+            try:
+                if fresh.count() == 0:
+                    return base_version  # pure replay — no new version
+                return self.publish_append({name: fresh}, base_version, lock_timeout)
+            finally:
+                fresh.unpersist(blocking=True)
+        if files is None:
+            # legacy or partially-covered entry without usable file
+            # stats: no pruning possible — correct full copy-on-write
+            # rewrite of the whole table
+            untouched: list[dict] = []
+            target = self._read_entry(entry)
+        else:
             # exact touched set: which candidate files actually hold a
             # LIVE source-key row (bounded collect — file names, not
             # rows). The manifest-relative row identity from _metadata
@@ -1783,10 +1691,8 @@ class GoldStore:
             if kept is None:
                 raise AssertionError("delete mode reached stage with no target")
             new_rows = kept
-        txn = uuid.uuid4().hex[:12]
-        staged = self._stage_tables({name: new_rows}, txn, partitioned=False)
 
-        def merge_tables(tables: dict) -> None:
+        def merge_tables(tables: dict, staged: dict) -> None:
             prior = tables[name]
             delta = staged[name]
             if untouched and not all("rows" in f for f in untouched):
@@ -1796,24 +1702,19 @@ class GoldStore:
                     int(d["rows"]) for f in untouched for d in f.get("dv") or []
                 )
             new_files = untouched + delta["files"]
-            new_entry = {
+            tables[name] = {
                 "file_level": True,
                 "dirs": self._file_level_dirs(new_files, extra=[delta["dir"]]),
                 "rows": carried + delta["rows"],
                 "files": new_files,
                 "schema": self._merge_schemas(name, prior.get("schema"), delta["schema"]),
+                **self._carried_contract(name, prior),
             }
-            props = prior.get("properties")
-            if props is not None:
-                new_entry["properties"] = props
-            if prior.get("constraints"):
-                new_entry["constraints"] = prior["constraints"]
-            tables[name] = new_entry
 
-        try:
-            return self._commit(merge_tables, base_version, txn, lock_timeout)
-        finally:
-            self._unmark_staged(txn)
+        return self._transact(
+            lambda txn: self._stage_tables({name: new_rows}, txn, partitioned=False),
+            merge_tables, base_version, lock_timeout,
+        )
 
     def _merge_mor(
         self,
@@ -1832,10 +1733,9 @@ class GoldStore:
         Touched files stay byte-identical; bytes written ∝ rows touched."""
         from pyspark.sql import functions as F
 
-        txn = uuid.uuid4().hex[:12]
-        self._mark_staged(txn)
-        try:
-            matched_keys = source.select(*key_cols).dropDuplicates(key_cols)
+        matched_keys = source.select(*key_cols).dropDuplicates(key_cols)
+
+        def stage(txn: str):
             dv_rel, dv_per_file = (None, {})
             if touched_recs:
                 dv_delta = (
@@ -1847,54 +1747,48 @@ class GoldStore:
                     )
                 )
                 dv_rel, dv_per_file = self._stage_dv(dv_delta, txn)
-            if mode == "upsert":
-                staged = self._stage_tables({name: source}, txn, partitioned=False)
-                delta = staged[name]
-            else:
-                delta = None
+            delta = (
+                self._stage_tables({name: source}, txn, partitioned=False)[name]
+                if mode == "upsert" else None
+            )
+            return dv_rel, dv_per_file, delta
 
-            def merge_tables(tables: dict) -> None:
-                prior = tables[name]
-                new_files = []
-                for f in files:
-                    n_dv = dv_per_file.get(f["path"], 0)
-                    if n_dv and dv_rel is not None:
-                        f = {
-                            **f,
-                            "dv": (f.get("dv") or [])
-                            + [{"dir": dv_rel, "rows": int(n_dv)}],
-                        }
-                    new_files.append(f)
-                if delta is not None:
-                    new_files = new_files + delta["files"]
-                n_deleted = sum(dv_per_file.values())
-                schema = (
-                    self._merge_schemas(name, prior.get("schema"), delta["schema"])
-                    if delta is not None
-                    else prior.get("schema")
-                )
-                new_entry = {
-                    "file_level": True,
-                    "dirs": self._file_level_dirs(
-                        new_files,
-                        extra=[d for d in [dv_rel, delta and delta["dir"]] if d],
-                    ),
-                    "rows": int(prior.get("rows", 0))
-                    - int(n_deleted)
-                    + (delta["rows"] if delta is not None else 0),
-                    "files": new_files,
-                    "schema": schema,
-                }
-                props = prior.get("properties")
-                if props is not None:
-                    new_entry["properties"] = props
-                if prior.get("constraints"):
-                    new_entry["constraints"] = prior["constraints"]
-                tables[name] = new_entry
+        def merge_tables(tables: dict, staged) -> None:
+            dv_rel, dv_per_file, delta = staged
+            prior = tables[name]
+            new_files = []
+            for f in files:
+                n_dv = dv_per_file.get(f["path"], 0)
+                if n_dv and dv_rel is not None:
+                    f = {
+                        **f,
+                        "dv": (f.get("dv") or [])
+                        + [{"dir": dv_rel, "rows": int(n_dv)}],
+                    }
+                new_files.append(f)
+            if delta is not None:
+                new_files = new_files + delta["files"]
+            n_deleted = sum(dv_per_file.values())
+            schema = (
+                self._merge_schemas(name, prior.get("schema"), delta["schema"])
+                if delta is not None
+                else prior.get("schema")
+            )
+            tables[name] = {
+                "file_level": True,
+                "dirs": self._file_level_dirs(
+                    new_files,
+                    extra=[d for d in [dv_rel, delta and delta["dir"]] if d],
+                ),
+                "rows": int(prior.get("rows", 0))
+                - int(n_deleted)
+                + (delta["rows"] if delta is not None else 0),
+                "files": new_files,
+                "schema": schema,
+                **self._carried_contract(name, prior),
+            }
 
-            return self._commit(merge_tables, base_version, txn, lock_timeout)
-        finally:
-            self._unmark_staged(txn)
+        return self._transact(stage, merge_tables, base_version, lock_timeout)
 
     def optimize(
         self,
@@ -1914,8 +1808,9 @@ class GoldStore:
         or None when there was nothing to do."""
         import glob as _glob
 
-        base_version = self.current_version()
-        entry = self.current_manifest()["tables"].get(name)
+        m = self.current_manifest()
+        base_version = int(m["version"])
+        entry = m["tables"].get(name)
         if entry is None:
             raise KeyError(name)
         if not entry.get("file_level"):
@@ -1923,8 +1818,7 @@ class GoldStore:
         files = entry["files"]
         by_dir: dict[str, list[dict]] = {}
         for f in files:
-            d = os.sep.join(f["path"].split(os.sep)[:3])
-            by_dir.setdefault(d, []).append(f)
+            by_dir.setdefault(self._txn_root(f["path"]), []).append(f)
         victims = []
         for d, live in by_dir.items():
             on_disk = _glob.glob(
@@ -1951,15 +1845,13 @@ class GoldStore:
         if not victims:
             return None
         vset = set(victims)
-        rewritten = [f for f in files if os.sep.join(f["path"].split(os.sep)[:3]) in vset]
-        untouched = [f for f in files if os.sep.join(f["path"].split(os.sep)[:3]) not in vset]
+        rewritten = [f for f in files if self._txn_root(f["path"]) in vset]
+        untouched = [f for f in files if self._txn_root(f["path"]) not in vset]
         # DV-aware: the rewrite folds deletion vectors — only LIVE rows
         # land in the fresh dir, and the new file records carry no dv
         live_rows = self._read_files(rewritten)
-        txn = uuid.uuid4().hex[:12]
-        staged = self._stage_tables({name: live_rows}, txn, partitioned=False)
 
-        def fold_tables(tables: dict) -> None:
+        def fold_tables(tables: dict, staged: dict) -> None:
             prior = tables[name]
             delta = staged[name]
             # folding a fully-dead dir stages ZERO live rows — keep the
@@ -1972,7 +1864,7 @@ class GoldStore:
                 # is not a victim on the next pass — the fold converges)
                 delta_files = delta["files"][:1]
             new_files = untouched + delta_files
-            new_entry = {
+            tables[name] = {
                 "file_level": True,
                 "dirs": self._file_level_dirs(
                     new_files, extra=[delta["dir"]] if delta_files else None
@@ -1982,18 +1874,13 @@ class GoldStore:
                 "schema": self._merge_schemas(name, prior.get("schema"), delta["schema"]),
                 # changes_cdc skips this version: live rows unchanged
                 "rewrite_kind": "row_preserving",
+                **self._carried_contract(name, prior),
             }
-            props = prior.get("properties")
-            if props is not None:
-                new_entry["properties"] = props
-            if prior.get("constraints"):
-                new_entry["constraints"] = prior["constraints"]
-            tables[name] = new_entry
 
-        try:
-            return self._commit(fold_tables, base_version, txn, lock_timeout)
-        finally:
-            self._unmark_staged(txn)
+        return self._transact(
+            lambda txn: self._stage_tables({name: live_rows}, txn, partitioned=False),
+            fold_tables, base_version, lock_timeout,
+        )
 
     def restore(
         self, version: int, tables: list[str] | None = None, lock_timeout: float = 30.0
@@ -2024,7 +1911,7 @@ class GoldStore:
                         f"dir {d} — that snapshot is no longer restorable"
                     )
 
-        def roll_back(cur_tables: dict) -> None:
+        def roll_back(cur_tables: dict, _staged) -> None:
             for n in names:
                 entry = dict(target["tables"][n])
                 # a restore CHANGES live content (that's its point): any
@@ -2034,9 +1921,7 @@ class GoldStore:
                 entry.pop("compacted_from", None)
                 cur_tables[n] = entry
 
-        txn = uuid.uuid4().hex[:12]
-        # no staging (metadata-only), but the commit protocol is shared
-        return self._commit(roll_back, base_version, txn, lock_timeout)
+        return self._transact(None, roll_back, base_version, lock_timeout)
 
     def _commit(self, update_tables, base_version: int, txn: str, lock_timeout: float) -> int:
         lock = os.path.join(self.path, self.LOCK)
@@ -2089,6 +1974,15 @@ class GoldStore:
             os.close(fd)
             os.unlink(lock)
 
+    @classmethod
+    def _txns(cls, manifest: dict) -> set[str]:
+        """The txn ids whose ``_data/<txn>`` dirs ``manifest`` references."""
+        return {
+            d.split(os.sep)[1]
+            for entry in manifest["tables"].values()
+            for d in cls._dirs(entry)
+        }
+
     def vacuum(
         self,
         min_age_seconds: float | None = None,
@@ -2120,19 +2014,10 @@ class GoldStore:
 
         if min_age_seconds is None:
             min_age_seconds = self.DEFAULT_VACUUM_AGE
-        live = {
-            d.split(os.sep)[1]
-            for entry in self.current_manifest()["tables"].values()
-            for d in self._dirs(entry)
-        }
+        live = self._txns(self.current_manifest())
         kept_versions = self.versions()[-keep_versions:] if keep_versions > 0 else []
         for v in kept_versions:
-            m = self.manifest_at(v)
-            live |= {
-                d.split(os.sep)[1]
-                for entry in m["tables"].values()
-                for d in self._dirs(entry)
-            }
+            live |= self._txns(self.manifest_at(v))
         now = time.time()
         data_root = os.path.join(self.path, "_data")
         removed = []
@@ -2159,17 +2044,25 @@ class GoldStore:
             gone = set(removed)
             hist = os.path.join(self.path, "_manifests")
             for v in self.versions():
-                refs = {
-                    d.split(os.sep)[1]
-                    for entry in self.manifest_at(v)["tables"].values()
-                    for d in self._dirs(entry)
-                }
-                if refs & gone:
+                if self._txns(self.manifest_at(v)) & gone:
                     try:
                         os.unlink(os.path.join(hist, f"v{v}.json"))
                     except FileNotFoundError:
                         pass
         return removed
+
+
+def _retry_on_conflict(attempt, max_attempts: int) -> int:
+    """Run ``attempt()`` until it commits, at most ``max_attempts``
+    times; a lost CAS race (``ConcurrentWriteError``) retries, and the
+    last one surfaces once the attempts run out."""
+    last: ConcurrentWriteError | None = None
+    for _ in range(max_attempts):
+        try:
+            return attempt()
+        except ConcurrentWriteError as e:
+            last = e
+    raise last  # type: ignore[misc]
 
 
 def publish_with_retry(store: GoldStore, build_fn, max_attempts: int = 5) -> int:
@@ -2180,15 +2073,12 @@ def publish_with_retry(store: GoldStore, build_fn, max_attempts: int = 5) -> int
     upsert builders (insert_if_absent / upsert_latest_wins) are
     idempotent and commutative on keys, so any interleaving converges to
     the same final table."""
-    last: ConcurrentWriteError | None = None
-    for _ in range(max_attempts):
-        base = store.current_manifest()
-        gold = build_fn(store.read_all())
-        try:
-            return store.publish(gold, base["version"])
-        except ConcurrentWriteError as e:
-            last = e
-    raise last  # type: ignore[misc]
+
+    def attempt() -> int:
+        base = store.current_version()
+        return store.publish(build_fn(store.read_all()), base)
+
+    return _retry_on_conflict(attempt, max_attempts)
 
 
 def merge_with_retry(
@@ -2206,10 +2096,7 @@ def merge_with_retry(
     idempotent per source batch — replaying upsert/delete/insert over
     the winner's state converges — so retrying the WHOLE merge is safe.
     The ingestion-loop counterpart of ``publish_with_retry``."""
-    last: ConcurrentWriteError | None = None
-    for _ in range(max_attempts):
-        try:
-            return store.merge(name, source, key_cols, mode=mode, strategy=strategy)
-        except ConcurrentWriteError as e:
-            last = e
-    raise last  # type: ignore[misc]
+    return _retry_on_conflict(
+        lambda: store.merge(name, source, key_cols, mode=mode, strategy=strategy),
+        max_attempts,
+    )

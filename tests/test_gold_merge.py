@@ -93,6 +93,18 @@ def test_stats_prune_limits_the_exact_probe(spark, tmp_path):
     assert _rows(store, "t") >= {(1, "a1"), (11, "B2"), (22, "c3")}
 
 
+def test_all_null_source_key_column_prunes_nothing(spark, tmp_path):
+    """A source key column that is all NULL has no [min, max] bounds:
+    it must keep every file a candidate (not crash comparing stats to
+    None, not prune everything), and the NULL-keyed row lands."""
+    store, _ = _store_with_batches(spark, tmp_path, BATCHES)
+    before = {f["path"] for f in store.current_manifest()["tables"]["t"]["files"]}
+    store.merge("t", _df(spark, [(None, "n")]), ["k"])
+    after = {f["path"] for f in store.current_manifest()["tables"]["t"]["files"]}
+    assert before <= after
+    assert _rows(store, "t") == {r for b in BATCHES for r in b} | {(None, "n")}
+
+
 def test_insert_only_merge_and_cdc_file_diff(spark, tmp_path):
     store, v0 = _store_with_batches(spark, tmp_path, BATCHES)
     before = {f["path"] for f in store.current_manifest()["tables"]["t"]["files"]}
@@ -202,7 +214,7 @@ def test_merge_on_partitioned_replace_published_table(spark, tmp_path):
     store.merge("fact", spark.createDataFrame([(2, 100, "Y")], "k bigint, date_sk int, v string"), ["k"])
     assert _rows(store, "fact") == {(1, 100, "x"), (2, 100, "Y"), (3, 200, "z")}
     # pruning on the untouched partition still works from the manifest
-    files = store.pruned_files("fact", "date_sk", 200, 200)
+    files = store.pruned_files("fact", {"date_sk": (200, 200)})
     assert files is not None and len(files) == 1
 
 
@@ -289,15 +301,15 @@ def test_multi_predicate_pruning_multiplies_the_cut(spark, tmp_path):
     for rows in quads.values():
         df = spark.createDataFrame(rows, "x bigint, y bigint, v string").coalesce(1)
         v = store.publish_append({"z": df}, base_version=v)
-    both = store.pruned_files_multi("z", {"x": (0, 5), "y": (0, 5)})
+    both = store.pruned_files("z", {"x": (0, 5), "y": (0, 5)})
     assert len(both) == 1
-    only_x = store.pruned_files("z", "x", 0, 5)
+    only_x = store.pruned_files("z", {"x": (0, 5)})
     assert len(only_x) == 2
-    got = {tuple(r) for r in store.read_pruned_multi(
+    got = {tuple(r) for r in store.read_pruned(
         "z", {"x": (0, 5), "y": (0, 5)}).collect()}
     assert got == {(1, 1, "a"), (2, 2, "b")}
     # residual filtering still applies inside the kept file
-    got = {tuple(r) for r in store.read_pruned_multi(
+    got = {tuple(r) for r in store.read_pruned(
         "z", {"x": (2, 5), "y": (0, 5)}).collect()}
     assert got == {(2, 2, "b")}
 
@@ -432,7 +444,7 @@ def test_merge_partial_file_stats_takes_full_rewrite_path(spark, tmp_path):
     entry = store.current_manifest()["tables"]["t"]
     # the emulated hazard is real: a partial list covering only batch 2
     assert entry["files"] is not None and len(entry["files"]) == 1
-    assert store.pruned_files("t", "k", 1, 1) is None  # no silent skip
+    assert store.pruned_files("t", {"k": (1, 1)}) is None  # no silent skip
     store.merge("t", _df(spark, [(2, "A2"), (99, "new")]), ["k"])
     assert _rows(store, "t") == {
         (1, "a1"), (2, "A2"), (3, "a3"), (10, "b1"), (11, "b2"), (99, "new")

@@ -134,7 +134,7 @@ def test_time_travel_and_pruned_reads_respect_dvs(spark, tmp_path):
     # snapshot BEFORE the merge still shows the old row
     assert {tuple(r) for r in store.read_at("t", v0).collect()} == FULL
     # manifest-pruned read of the touched range masks the dead row
-    got = {tuple(r) for r in store.read_pruned("t", "k", 1, 3).collect()}
+    got = {tuple(r) for r in store.read_pruned("t", {"k": (1, 3)}).collect()}
     assert got == {(1, "a1"), (2, "A2"), (3, "a3")} - (
         set() if True else set())
 

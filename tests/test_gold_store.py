@@ -216,3 +216,39 @@ def test_changes_since_refuses_pruned_history(spark, tmp_path):
     store.vacuum(min_age_seconds=0.0, keep_versions=1)  # prunes v2/v3 manifests
     with pytest.raises(ValueError, match="pruned"):
         store.changes_since("t", v1)
+
+
+def test_changes_since_v0_diffs_as_everything(spark, tmp_path):
+    """v0 is the empty store (no manifest file is ever written for it):
+    a diff from v0 is every row, exactly what changes_cdc reports."""
+    store = GoldStore(spark, str(tmp_path / "g"))
+    v1 = store.publish({"t": _df(spark, [("a", 1), ("b", 2)])}, 0)
+    store.publish_append({"t": _df(spark, [("c", 3)])}, v1)
+    want = {("a", 1), ("b", 2), ("c", 3)}
+    assert {tuple(r) for r in store.changes_since("t", 0).collect()} == want
+    cdc = store.changes_cdc("t", 0).collect()
+    assert {r["_change_type"] for r in cdc} == {"insert"}
+    assert {(r["steam_id"], r["level"]) for r in cdc} == want
+
+
+def test_publish_reads_the_manifest_once_plus_the_cas(spark, tmp_path):
+    """A publish onto a store that already holds its tables takes the
+    constraints, the live names and the FK edges from ONE manifest
+    read; the only other read is the commit's compare-and-swap."""
+    store = GoldStore(spark, str(tmp_path / "g"))
+    gold = {n: _df(spark, [(n, 1)]) for n in ("d1", "d2", "d3")}
+    v = store.publish(gold, 0)
+    v = store.declare_constraints({"d1": {"not_null": ["steam_id"]}}, v)
+    reads = []
+    real = store.current_manifest
+
+    def counting():
+        reads.append(1)
+        return real()
+
+    store.current_manifest = counting  # type: ignore[method-assign]
+    try:
+        store.publish(gold, v)
+    finally:
+        store.current_manifest = real  # type: ignore[method-assign]
+    assert len(reads) == 2

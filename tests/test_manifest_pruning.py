@@ -45,11 +45,11 @@ def test_read_pruned_skips_files_and_matches_full_scan(spark, sf_dir, tmp_path):
     lo, hi = row["m"], row["m"] + max(1, (row["x"] - row["n"]) // 8)
 
     total = len(store.current_manifest()["tables"]["events"]["files"])
-    kept = store.pruned_files("events", "user_id", lo, hi)
+    kept = store.pruned_files("events", {"user_id": (lo, hi)})
     assert 0 < len(kept) < total  # the z-layout makes user_id prunable
 
     got = sorted(
-        r["event_id"] for r in store.read_pruned("events", "user_id", lo, hi).collect()
+        r["event_id"] for r in store.read_pruned("events", {"user_id": (lo, hi)}).collect()
     )
     want = sorted(
         r["event_id"]
@@ -60,7 +60,7 @@ def test_read_pruned_skips_files_and_matches_full_scan(spark, sf_dir, tmp_path):
 
 def test_read_pruned_out_of_range_is_empty_with_schema(spark, sf_dir, tmp_path):
     store, ev = _publish_zordered_events(spark, sf_dir, tmp_path)
-    out = store.read_pruned("events", "user_id", 10**9, 2 * 10**9)
+    out = store.read_pruned("events", {"user_id": (10**9, 2 * 10**9)})
     assert out.count() == 0
     assert out.columns == store.read("events").columns
 
@@ -87,11 +87,11 @@ def test_read_pruned_partitioned_fact_prunes_on_partition_and_stats(
     assert all(f.get("partition", {}).get("date_sk") for f in entry["files"])
 
     # prune on the PARTITION column: only date_sk=1 files survive
-    kept = store.pruned_files("bans_fact", "date_sk", 1, 1)
+    kept = store.pruned_files("bans_fact", {"date_sk": (1, 1)})
     assert 0 < len(kept) < total
     assert all(f["partition"]["date_sk"] == "1" for f in kept)
 
-    out = store.read_pruned("bans_fact", "date_sk", 1, 1)
+    out = store.read_pruned("bans_fact", {"date_sk": (1, 1)})
     assert "date_sk" in out.columns  # basePath reconstructs the column
     want = ev.filter(F.col("date_sk") == 1)
     assert out.count() == want.count() > 0
@@ -100,12 +100,29 @@ def test_read_pruned_partitioned_fact_prunes_on_partition_and_stats(
     )
 
     # prune on a DATA column of the partitioned layout: stats still apply
-    out2 = store.read_pruned("bans_fact", "user_id", 0, 5)
+    out2 = store.read_pruned("bans_fact", {"user_id": (0, 5)})
     assert "date_sk" in out2.columns
     assert (
         out2.count()
         == ev.filter((F.col("user_id") >= 0) & (F.col("user_id") <= 5)).count()
     )
+
+
+def test_null_partition_is_kept_under_integer_bounds(spark, tmp_path):
+    """A NULL partition value is recorded as ``__HIVE_DEFAULT_PARTITION__``,
+    which no integer bound can decide: the file stays a candidate, and
+    the residual filter drops its rows."""
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    df = spark.createDataFrame(
+        [(1, 1), (2, 2), (3, None)], "user_id bigint, date_sk int"
+    )
+    store.publish({"bans_fact": df}, base_version=0)
+    kept = store.pruned_files("bans_fact", {"date_sk": (1, 1)})
+    assert sorted(f["partition"]["date_sk"] for f in kept) == [
+        "1", "__HIVE_DEFAULT_PARTITION__"
+    ]
+    out = store.read_pruned("bans_fact", {"date_sk": (1, 1)})
+    assert [tuple(r) for r in out.collect()] == [(1, 1)]
 
 
 def test_read_pruned_legacy_manifest_falls_back(spark, sf_dir, tmp_path):
@@ -116,6 +133,6 @@ def test_read_pruned_legacy_manifest_falls_back(spark, sf_dir, tmp_path):
     m["tables"]["events"].pop("files")
     with open(mf, "w") as f:
         json.dump(m, f)
-    assert store.pruned_files("events", "user_id", 0, 1) is None
+    assert store.pruned_files("events", {"user_id": (0, 1)}) is None
     n_all = ev.filter(F.col("user_id") <= 1).count()
-    assert store.read_pruned("events", "user_id", 0, 1).count() == n_all
+    assert store.read_pruned("events", {"user_id": (0, 1)}).count() == n_all

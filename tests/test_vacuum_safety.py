@@ -78,22 +78,41 @@ def test_stage_vacuum_commit_interleavings_converge(
 
 
 def test_rejected_publish_dir_is_reclaimable_after_resolution(spark, tmp_path):
-    """A publish that loses the CAS removes its marker on the way out —
-    its orphan dir IS reclaimable (with age=0), while the winner's data
-    survives."""
-    from rustcheatersdatapipeline_spark.warehouse.persist import ConcurrentWriteError
+    """A publish that loses the CAS, or that its own audit rejects (a
+    failed expectation, a staged constraint violation), removes its
+    marker on the way out — its orphan dir IS reclaimable (with age=0),
+    while the winner's data survives."""
+    from rustcheatersdatapipeline_spark.warehouse.persist import (
+        ConcurrentWriteError,
+        ConstraintError,
+        ExpectationError,
+    )
 
-    store = GoldStore(spark, str(tmp_path / "gold"))
-    store.publish({"dim": _df(spark, [("a", 1)])}, base_version=0)
-    base = store.current_version()
-    store.publish({"dim": _df(spark, [("b", 2)])}, base_version=base)
-    with pytest.raises(ConcurrentWriteError):
-        store.publish({"dim": _df(spark, [("c", 3)])}, base_version=base)
+    for rejection in ("cas", "expectation", "constraint"):
+        store = GoldStore(spark, str(tmp_path / rejection))
+        store.publish({"dim": _df(spark, [("a", 1)])}, base_version=0)
+        base = store.current_version()
+        store.publish({"dim": _df(spark, [("b", 2)])}, base_version=base)
+        if rejection == "cas":
+            with pytest.raises(ConcurrentWriteError):
+                store.publish({"dim": _df(spark, [("c", 3)])}, base_version=base)
+        elif rejection == "expectation":
+            with pytest.raises(ExpectationError):
+                store.publish(
+                    {"dim": _df(spark, [("c", 3)])}, store.current_version(),
+                    expectations={"dim": ["level < 3"]},
+                )
+        else:
+            v = store.declare_constraints(
+                {"dim": {"primary_key": ["steam_id"]}}, store.current_version()
+            )
+            with pytest.raises(ConstraintError):
+                store.publish({"dim": _df(spark, [("c", 3), ("c", 4)])}, v)
 
-    removed = store.vacuum(min_age_seconds=0)
-    # reclaimed: the loser's dir AND v1's superseded dir
-    assert len(removed) == 2
-    assert {tuple(r) for r in store.read("dim").collect()} == {("b", 2)}
+        removed = store.vacuum(min_age_seconds=0)
+        # reclaimed: the loser's dir AND v1's superseded dir
+        assert len(removed) == 2
+        assert {tuple(r) for r in store.read("dim").collect()} == {("b", 2)}
 
 
 def test_default_age_window_protects_fresh_orphans(spark, tmp_path):
