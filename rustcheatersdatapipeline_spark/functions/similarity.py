@@ -106,8 +106,10 @@ def simhash_from_votes(bits: int = SIMHASH_BITS) -> Column:
 
 def cosine(dot: Column, norm_a: Column, norm_b: Column) -> Column:
     """cos = dot / (sqrt(na) * sqrt(nb)) — expression shape mirrored
-    exactly in the DuckDB oracle so doubles stay bit-identical."""
-    return dot / (F.sqrt(norm_a) * F.sqrt(norm_b))
+    exactly in the DuckDB oracle so doubles stay bit-identical. A
+    zero-norm side makes the cosine NULL, as DuckDB's 0/0 is, instead
+    of raising DIVIDE_BY_ZERO under ANSI mode."""
+    return F.try_divide(dot, F.sqrt(norm_a) * F.sqrt(norm_b))
 
 
 def dot_product(a: Column, b: Column) -> Column:

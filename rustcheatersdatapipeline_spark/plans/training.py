@@ -22,8 +22,9 @@ Scale design notes (the 100 TB story, per operator):
   via 4-band pigeonhole join (provably complete for hamming ≤ 3, so it
   equals the brute-force oracle while staying O(candidates) not O(n²)).
 - Embedding cosine: brute-force is the correctness baseline; the
-  LSH-bucketed variant (random hyperplanes, Pandas UDF) is the scale
-  path — bucket-local search only.
+  LSH-bucketed variant (random hyperplanes, each sign a sequential
+  ``zip_with`` + ``aggregate`` dot-product fold) is the scale path —
+  bucket-local search only.
 """
 
 from __future__ import annotations
@@ -337,8 +338,101 @@ def dedup_exact(spark, sf_dir):
     )
 
 
-def _jaccard_verify(spark, sf_dir, cand_key, cand, sh):
-    """Exact Jaccard on candidate pairs via shingle-array joins.
+def _shingles(spark, sf_dir, hashed: bool):
+    """(k, the cached per-document distinct k-shingle table) — the one
+    shingle build every near-dup builder shares.
+
+    The raw-string table ``("shingles", k, False)`` is built ONCE per
+    (session, corpus): ``dedup_minhash_lsh`` needs it for its portable
+    md5 signatures, and a session running both near-dup families pays
+    the explode+distinct once (r14: two ~0.6 s corpus expansions per
+    cold bench rep before). ``hashed=True`` returns the int64 view the
+    join/intersect-heavy PPJoin subtrees want, DERIVED from the cached
+    raw rows by one xxhash64 projection — no re-explode, no shuffle,
+    keeps the hash(doc_id) partitioning — and itself cached: it feeds
+    ~6 subtrees (df, prefix both sides, verify id sets and arrays), and
+    an uncached projection re-hashed the full gram table per consumer
+    (+0.3-0.4 s per cold rep). Hashing after the per-doc distinct yields
+    the same set as hashing before it, modulo the accepted ~1e-9
+    xxhash64 collision class."""
+    k = choose_shingle_k(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
+    sh = cached(
+        spark,
+        sf_dir,
+        ("shingles", k, False),
+        lambda: char_shingles(docs, "text", "doc_id", k=k),
+    )
+    if hashed:
+        raw = sh
+        sh = cached(
+            spark,
+            sf_dir,
+            ("shingles", k, True),
+            lambda: raw.select("doc_id", F.xxhash64("g").alias("g")),
+        )
+    return k, sh
+
+
+def _ppjoin_prefix(spark, sf_dir):
+    """(k, int64 shingles, PPJoin prefix) shared by ``dedup_ngram_jaccard``
+    and ``dedup_containment``: each document's shingles ordered by
+    global document frequency ascending (ties on the shingle), the first
+    n - ceil(t·n) + 1 kept, with columns (doc_id, g, n, rn).
+
+    df(g) is a groupBy("g") + join-back, NOT a g-window: COUNT(*) OVER
+    (PARTITION BY g) routes every row of a hot shingle into one window
+    task (a boilerplate shingle in most documents = one task holding
+    ~n_docs rows at 100 TB), and windows are the one shuffle shape AQE
+    cannot skew-split. The aggregate combines map-side and the join-back
+    is a JOIN, which AQE's skew splitting covers (r12; reverses the r10
+    window micro-opt). The per-doc size is a doc_id-window count sharing
+    the row_number's doc_id shuffle (bounded partitions — safe). The df
+    table and the prefix are cached: both self-join sides consume the
+    prefix and Catalyst does not reuse the exchange across sides."""
+    k, sh = _shingles(spark, sf_dir, hashed=True)
+    w = Window.partitionBy("doc_id").orderBy("df", "g")
+    wn = Window.partitionBy("doc_id")
+    df_tab = cached(
+        spark,
+        sf_dir,
+        ("shingle_df", k, True),
+        lambda: sh.groupBy("g").agg(F.count(F.lit(1)).alias("df")),
+    )
+    prefix = cached(
+        spark,
+        sf_dir,
+        ("ppjoin_prefix", k),
+        lambda: (
+            sh.join(df_tab, "g")
+            .select(
+                "doc_id",
+                "g",
+                F.count(F.lit(1)).over(wn).alias("n"),
+                F.row_number().over(w).alias("rn"),
+            )
+            .withColumn("plen", F.col("n") - F.expr("(8 * n + 9) div 10") + 1)
+            .filter(F.col("rn") <= F.col("plen"))
+            .select("doc_id", "g", "n", "rn")
+        ),
+    )
+    return k, sh, prefix
+
+
+def _jaccard_verify(
+    spark,
+    sf_dir,
+    cand_key,
+    cand,
+    sh,
+    score=lambda i: i / (F.col("sa.n") + F.col("sb.n") - i),
+    alias="jac",
+):
+    """Exact Jaccard on candidate pairs via shingle-array joins — or any
+    other overlap ``score`` of the intersection size ``i`` and the
+    per-side set sizes ``sa.n``/``sb.n`` (containment passes
+    ``i / sa.n``), emitted as column ``alias`` and kept at ≥ the
+    threshold.
 
     Collecting each document's (distinct) shingles into one array and
     intersecting with ``array_intersect`` keeps verification a join +
@@ -377,7 +471,6 @@ def _jaccard_verify(spark, sf_dir, cand_key, cand, sh):
     cand_plan = cand
     cand = checkpointed(spark, sf_dir, ("jacc_cand",) + cand_key, lambda: cand_plan)
     i = F.size(F.array_intersect(F.col("sa.arr"), F.col("sb.arr")))
-    jac = (i / (F.col("sa.n") + F.col("sb.n") - i)).alias("jac")
 
     def side_arrays(id_col: str, alias: str):
         ids = cand.select(F.col(id_col).alias("doc_id")).distinct()
@@ -393,8 +486,8 @@ def _jaccard_verify(spark, sf_dir, cand_key, cand, sh):
     return (
         cand.join(a, F.col("doc_a") == F.col("sa.doc_id"))
         .join(b, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", jac)
-        .filter(F.col("jac") >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", score(i).alias(alias))
+        .filter(F.col(alias) >= JACCARD_THRESHOLD)
         .orderBy("doc_a", "doc_b")
     )
 
@@ -422,86 +515,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     with set sizes — and therefore every Jaccard value — unchanged
     barring a ~1e-9 collision that the oracle compare would catch.
     """
-    docs = table(spark, sf_dir, "documents")
-    # sh feeds three subtrees (df, prefix, verification) — cache it
-    # so the explode+distinct shuffle runs once, not three times.
-    # All cache handles ride the plan_cache registry (r13): one shared
-    # handle per (session, corpus, key) with an explicit release path,
-    # and dedup_containment's identical shingle/df tables share these
-    # exact entries instead of re-caching equal plans.
-    k = choose_shingle_k(spark, sf_dir)
-    # ONE shared raw-string shingle build per (session, corpus): the
-    # base cache entry is the same ("shingles", k, False) table
-    # dedup_minhash_lsh needs for its portable md5 signatures, so a
-    # session running both near-dup families pays the explode+distinct
-    # ONCE instead of building int64 and raw tables separately (r14 —
-    # the cold-invocation bench loop made the duplicate build visible:
-    # two ~0.6 s corpus expansions per rep). The int64 table this
-    # query's join/intersect-heavy subtrees want is DERIVED from the
-    # cached raw rows by one xxhash64 projection — no re-explode, no
-    # shuffle, keeps the hash(doc_id) partitioning — and is itself
-    # registry-cached: sh feeds ~6 subtrees (df, prefix both sides,
-    # verify id sets and arrays), and an uncached projection re-hashed
-    # the full gram table per consumer (measured +0.3-0.4 s on the
-    # cold bench rep). Hashing after the per-doc distinct yields the
-    # same set as hash64=True's hash-before-distinct modulo the same
-    # accepted ~1e-9 collision class.
-    sh_raw = cached(
-        spark,
-        sf_dir,
-        ("shingles", k, False),
-        lambda: char_shingles(docs, "text", "doc_id", k=k),
-    )
-    sh = cached(
-        spark,
-        sf_dir,
-        ("shingles", k, True),
-        lambda: sh_raw.select("doc_id", F.xxhash64("g").alias("g")),
-    )
-    w = Window.partitionBy("doc_id").orderBy("df", "g")
-    # per-doc set size as a window count over the SAME partition key as
-    # the row_number — both windows share one doc_id shuffle, replacing
-    # the former groupBy("doc_id")+join (one aggregate exchange and one
-    # join fewer; results identical since shingles are distinct per doc)
-    wn = Window.partitionBy("doc_id")
-    # document frequency via groupBy("g")+join-back, NOT a g-window:
-    # COUNT(*) OVER (PARTITION BY g) routes EVERY row of a hot shingle
-    # into one window task (a boilerplate shingle present in most
-    # documents = one task holding ~n_docs rows at 100 TB), and windows
-    # are the one shuffle shape AQE cannot skew-split. The aggregate
-    # partially combines map-side — hot keys collapse to one row per
-    # map task — and the join-back on g is a JOIN, which AQE's skew
-    # splitting covers. (r12; reverses the r10 window micro-opt, which
-    # saved one local exchange by giving up both skew defenses.)
-    # Cached: the same distinct-shingle-sized table serves this query,
-    # dedup_containment, and every bench rep; AQE broadcasts it when it
-    # fits and shuffle-joins with skew splitting when it does not.
-    df_tab = cached(
-        spark,
-        sf_dir,
-        ("shingle_df", k, True),
-        lambda: sh.groupBy("g").agg(F.count(F.lit(1)).alias("df")),
-    )
-    # both self-join sides consume the prefix table and Catalyst does
-    # not reuse the exchange across sides (same finding as the simhash
-    # signature cache) — ~20% of the shingle rows, cached
-    prefix = cached(
-        spark,
-        sf_dir,
-        ("ppjoin_prefix", k),
-        lambda: (
-            sh.join(df_tab, "g")
-            .select(
-                "doc_id",
-                "g",
-                F.count(F.lit(1)).over(wn).alias("n"),
-                F.row_number().over(w).alias("rn"),
-            )
-            .withColumn("plen", F.col("n") - F.expr("(8 * n + 9) div 10") + 1)
-            .filter(F.col("rn") <= F.col("plen"))
-            .select("doc_id", "g", "n", "rn")
-        ),
-    )
+    k, sh, prefix = _ppjoin_prefix(spark, sf_dir)
     pa = prefix.alias("pa")
     pb = prefix.alias("pb")
     # PPJoin candidate conditions, all exact (lossless):
@@ -551,50 +565,12 @@ def dedup_containment(spark, sf_dir):
     all-shared-shingle join, making this another optimizer-vs-spec
     equivalence check.
     """
-    docs = table(spark, sf_dir, "documents")
-    k = choose_shingle_k(spark, sf_dir)
-    # identical registry keys to dedup_ngram_jaccard's — the builders
-    # share ONE cached raw shingle table (since r14 also with
-    # dedup_minhash_lsh), ONE derived int64 table and ONE df table per
-    # (session, corpus); see dedup_ngram_jaccard for the derivation
-    sh_raw = cached(
-        spark,
-        sf_dir,
-        ("shingles", k, False),
-        lambda: char_shingles(docs, "text", "doc_id", k=k),
-    )
-    sh = cached(
-        spark,
-        sf_dir,
-        ("shingles", k, True),
-        lambda: sh_raw.select("doc_id", F.xxhash64("g").alias("g")),
-    )
-    w = Window.partitionBy("doc_id").orderBy("df", "g")
-    # per-doc size rides a doc_id-window (bounded partitions — safe);
-    # df via groupBy+join-back for the same skew rationale as
-    # dedup_ngram_jaccard (hot boilerplate shingles vs un-splittable
-    # window partitions)
-    wn = Window.partitionBy("doc_id")
-    df_tab = cached(
-        spark,
-        sf_dir,
-        ("shingle_df", k, True),
-        lambda: sh.groupBy("g").agg(F.count(F.lit(1)).alias("df")),
-    )
-    prefix = (
-        sh.join(df_tab, "g")
-        .select(
-            "doc_id",
-            "g",
-            F.count(F.lit(1)).over(wn).alias("n"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .withColumn("plen", F.col("n") - F.expr("(8 * n + 9) div 10") + 1)
-        .filter(F.col("rn") <= F.col("plen"))
-        .select("doc_id", "g")
-    )
+    # the probe prefix is dedup_ngram_jaccard's cached table (same
+    # rarest-first order, same n - ceil(t·n) + 1 length)
+    k, sh, prefix = _ppjoin_prefix(spark, sf_dir)
     cand = (
-        prefix.alias("pa")
+        prefix.select("doc_id", "g")
+        .alias("pa")
         .join(
             sh.alias("sb"),
             (F.col("pa.g") == F.col("sb.g"))
@@ -603,19 +579,14 @@ def dedup_containment(spark, sf_dir):
         .select(F.col("pa.doc_id").alias("doc_a"), F.col("sb.doc_id").alias("doc_b"))
         .distinct()
     )
-    arrs = sh.groupBy("doc_id").agg(
-        F.collect_list("g").alias("arr"), F.count(F.lit(1)).alias("n")
-    )
-    a = arrs.alias("sa")
-    b = arrs.alias("sb2")
-    i = F.size(F.array_intersect(F.col("sa.arr"), F.col("sb2.arr")))
-    cont = (i / F.col("sa.n")).alias("cont")
-    return (
-        cand.join(a, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(b, F.col("doc_b") == F.col("sb2.doc_id"))
-        .select("doc_a", "doc_b", cont)
-        .filter(F.col("cont") >= JACCARD_THRESHOLD)
-        .orderBy("doc_a", "doc_b")
+    return _jaccard_verify(
+        spark,
+        sf_dir,
+        ("containment", k),
+        cand,
+        sh,
+        score=lambda i: i / F.col("sa.n"),
+        alias="cont",
     )
 
 
@@ -629,18 +600,11 @@ def dedup_minhash_lsh(spark, sf_dir):
     keeps unrelated pairs (background j ≈ 0.1) at P(candidate) ≈ 4e-4
     while j ≥ 0.85 planted dups collide with P ≥ 0.9.
     """
-    docs = table(spark, sf_dir, "documents")
     # one distinct shingle table, cached: it feeds BOTH the signature
     # aggregation and the exact-Jaccard verify, so the shingle shuffle
     # is paid once (a candidate-only re-shingle was measured 5x slower
     # fresh — it recomputes shingles and serializes behind the band join)
-    k = choose_shingle_k(spark, sf_dir)
-    sh = cached(
-        spark,
-        sf_dir,
-        ("shingles", k, False),
-        lambda: char_shingles(docs, "text", "doc_id", k=k),
-    )
+    k, sh = _shingles(spark, sf_dir, hashed=False)
     hashed = sh.select("doc_id", (portable_hash64(F.col("g")) % PRIME).alias("h"))
     # the banded self-join consumes the signature table on BOTH sides
     # and Catalyst does not reuse the exchange across sides — cache the
@@ -1125,8 +1089,9 @@ def _lsh_bucket_col(e_col: str, nplanes: int, tbl: int = 0):
     sign(e · plane_j), folded to one BIGINT. The dot product is a
     sequential zip_with+aggregate fold — the exact summation order of
     DuckDB's ``list_dot_product``, so the sign (and therefore every
-    bucket id) is bit-identical across engines. Pure codegen: no
-    Python in the hot path.
+    bucket id) is bit-identical across engines. The fold is a
+    higher-order function, which Spark evaluates interpreted
+    (CodegenFallback) inside the JVM — no Python in the hot path.
 
     Emitted as ONE ``F.expr`` string (single JVM parse): the literal
     form (64 doubles × nplanes × tables as individual ``F.lit`` calls)
@@ -1194,98 +1159,34 @@ def ann_lsh_buckets(spark, sf_dir):
     )
 
 
-def ann_lsh_search(spark, sf_dir):
-    """ANN search stage: bucket-local cosine top-k (k=5) for the same
-    query set as embed_knn_bruteforce (vec_id < 20).
-
-    The plan never forms all pairs: the corpus is bucketed once per
-    hash table by ``_lsh_bucket_col`` and each query joins only its own
-    bucket in each of the LSH_TABLES tables — the 100 TB shape
-    (candidates per query ≈ LSH_TABLES · LSH_TARGET_BUCKET at any
-    corpus size, because the plane count derives from n). The query
-    side is bounded by construction (vec_id < KNN_QUERY_MAX_ID) so the
-    broadcast hint is safe.
-
-    TESTS-ONLY (demoted, VERDICT r8 #3): single-probe recall@5 floors
-    at only 0.5 on this corpus — ``ann_lsh_search_multiprobe`` is the
-    declared production form (recall ≥ 0.95 at log-factor extra
-    candidates); this form stays as the lower rung of the recall/cost
-    ladder and as the multiprobe test's comparison point.
-    """
-    v = _vectors(spark, sf_dir, partitions=32)
-    np_ = lsh_num_planes(spark, sf_dir)
-    # one row per (vector, table): explode the L signatures — codegen,
-    # L× the rows of the corpus, each carrying the vector once
-    sigs = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"), _lsh_bucket_col("e", np_, t).alias("bucket")
-            )
-            for t in range(LSH_TABLES)
-        ]
-    )
-    b = v.select(
-        "vec_id", "e", "nrm", F.explode(sigs).alias("tb")
-    ).select("vec_id", "e", "nrm", "tb.tbl", "tb.bucket")
-    q = b.filter(F.col("vec_id") < KNN_QUERY_MAX_ID).alias("a")
-    x = b.alias("b")
-    cos = cosine(
-        dot_product(F.col("a.e"), F.col("b.e")), F.col("a.nrm"), F.col("b.nrm")
-    ).alias("cos")
-    pairs = (
-        F.broadcast(q)
-        .join(
-            x,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("query_id"),
-            F.col("b.vec_id").alias("neighbor_id"),
-            cos,
-        )
-        # one hash(query_id) exchange serves the dedup AND the rank
-        # window (guide §2.4): hashpartitioning(query_id) satisfies the
-        # distinct's clustered distribution — query_id is a subset of
-        # its keys — where the distinct's own all-column exchange did
-        # NOT satisfy the window, so a second shuffle followed.
-        # Candidates per query are bounded (≈ LSH_TABLES ·
-        # LSH_TARGET_BUCKET), so per-partition state is bounded at any
-        # corpus size. (r13)
-        .repartition("query_id")
-        .distinct()  # a pair found by several tables ranks once
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
+def _per_query_topk(pairs, score: str, desc: bool = True):
+    """The per-query top-KNN_K tail of every search builder: ``pairs``
+    (query_id, neighbor_id, <score>) ranked per query by ``score``
+    (DESC for a similarity, ASC for a distance; ties → lower
+    neighbor_id), cut at KNN_K and presented as (query_id, rnk,
+    neighbor_id, <score>) in (query_id, rnk) order."""
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(order, "neighbor_id")
     return (
-        pairs.select("query_id", "neighbor_id", "cos", F.row_number().over(w).alias("rnk"))
+        pairs.select("query_id", "neighbor_id", score, F.row_number().over(w).alias("rnk"))
         .filter(F.col("rnk") <= KNN_K)
-        .select("query_id", F.col("rnk").cast("int").alias("rnk"), "neighbor_id", "cos")
+        .select("query_id", F.col("rnk").cast("int").alias("rnk"), "neighbor_id", score)
         .orderBy("query_id", "rnk")
     )
 
 
-def ann_lsh_search_multiprobe(spark, sf_dir):
-    """Multi-probe variant of ``ann_lsh_search`` (public technique: Lv
-    et al., VLDB'07): each query probes its own bucket PLUS every
-    bucket at Hamming distance 1 (one hyperplane sign flipped) in each
-    table — the buckets a near neighbor most likely fell into when it
-    landed on the other side of one plane.
+def _lsh_search(spark, sf_dir, multiprobe: bool):
+    """Bucket-local cosine top-KNN_K over the LSH_TABLES hash tables for
+    the query set vec_id < KNN_QUERY_MAX_ID. Each query probes its own
+    bucket in every table, plus — with ``multiprobe`` — every bucket
+    at Hamming distance 1 (one of the nplanes signs flipped); the plain
+    search is the same plan with zero flipped bits.
 
-    The probe expansion happens on the QUERY side only (bounded by
-    construction), as an exploded literal array → the corpus side stays
-    bucketed exactly once and the join stays an equi-join. Candidates
-    per query ≈ LSH_TABLES · (nplanes + 1) · LSH_TARGET_BUCKET — the
-    (p+1) factor grows logarithmically with corpus size, the price of
-    the recall lift over the plain search (floor pinned in
-    tests/test_recall_audit.py vs both brute force and the plain
-    search).
-
-    This is the DECLARED production search (recall@5 ≥ 0.95; the
-    single-probe form floors at 0.5 and is tests-only): the contract
-    surface showcases the operator a production user should call. The
-    probe set is deterministic (bucket ⊕ one plane bit), so the DuckDB
-    oracle replays it exactly."""
+    The corpus is bucketed once per table by ``_lsh_bucket_col`` — one
+    row per (vector, table), L× the corpus rows — and the probe
+    expansion happens on the QUERY side only (bounded by construction,
+    so the broadcast hint is safe), as an exploded literal array: the
+    join stays an equi-join and no plan ever forms all pairs."""
     v = _vectors(spark, sf_dir, partitions=32)
     np_ = lsh_num_planes(spark, sf_dir)
     sigs = F.array(
@@ -1299,8 +1200,9 @@ def ann_lsh_search_multiprobe(spark, sf_dir):
     b = v.select("vec_id", "e", "nrm", F.explode(sigs).alias("tb")).select(
         "vec_id", "e", "nrm", "tb.tbl", "tb.bucket"
     )
+    flips = np_ if multiprobe else 0
     probes = F.array(
-        F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(np_)]
+        F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(flips)]
     )
     q = (
         b.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
@@ -1324,18 +1226,58 @@ def ann_lsh_search_multiprobe(spark, sf_dir):
             F.col("b.vec_id").alias("neighbor_id"),
             cos,
         )
-        # same single-exchange dedup+window shape as ann_lsh_search
-        # (guide §2.4; bounded candidates per query) (r13)
+        # one hash(query_id) exchange serves the dedup AND the rank
+        # window (guide §2.4): hashpartitioning(query_id) satisfies the
+        # distinct's clustered distribution — query_id is a subset of
+        # its keys — where the distinct's own all-column exchange did
+        # NOT satisfy the window, so a second shuffle followed.
+        # Candidates per query are bounded (≈ LSH_TABLES · (probes) ·
+        # LSH_TARGET_BUCKET), so per-partition state is bounded at any
+        # corpus size. (r13)
         .repartition("query_id")
-        .distinct()
+        .distinct()  # a pair found by several tables or probes ranks once
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        pairs.select("query_id", "neighbor_id", "cos", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= KNN_K)
-        .select("query_id", F.col("rnk").cast("int").alias("rnk"), "neighbor_id", "cos")
-        .orderBy("query_id", "rnk")
-    )
+    return _per_query_topk(pairs, "cos")
+
+
+def ann_lsh_search(spark, sf_dir):
+    """ANN search stage: bucket-local cosine top-k (k=5) for the same
+    query set as embed_knn_bruteforce (vec_id < 20), probing only each
+    query's own bucket in each of the LSH_TABLES tables — the 100 TB
+    shape (candidates per query ≈ LSH_TABLES · LSH_TARGET_BUCKET at any
+    corpus size, because the plane count derives from n). See
+    ``_lsh_search``.
+
+    TESTS-ONLY (demoted, VERDICT r8 #3): single-probe recall@5 floors
+    at only 0.5 on this corpus — ``ann_lsh_search_multiprobe`` is the
+    declared production form (recall ≥ 0.95 at log-factor extra
+    candidates); this form stays as the lower rung of the recall/cost
+    ladder and as the multiprobe test's comparison point.
+    """
+    return _lsh_search(spark, sf_dir, multiprobe=False)
+
+
+def ann_lsh_search_multiprobe(spark, sf_dir):
+    """Multi-probe variant of ``ann_lsh_search`` (public technique: Lv
+    et al., VLDB'07): each query probes its own bucket PLUS every
+    bucket at Hamming distance 1 (one hyperplane sign flipped) in each
+    table — the buckets a near neighbor most likely fell into when it
+    landed on the other side of one plane.
+
+    The probe expansion happens on the QUERY side only, so the corpus
+    side stays bucketed exactly once and the join stays an equi-join.
+    Candidates per query ≈ LSH_TABLES · (nplanes + 1) ·
+    LSH_TARGET_BUCKET — the (p+1) factor grows logarithmically with
+    corpus size, the price of the recall lift over the plain search
+    (floor pinned in tests/test_recall_audit.py vs both brute force and
+    the plain search).
+
+    This is the DECLARED production search (recall@5 ≥ 0.95; the
+    single-probe form floors at 0.5 and is tests-only): the contract
+    surface showcases the operator a production user should call. The
+    probe set is deterministic (bucket ⊕ one plane bit), so the DuckDB
+    oracle replays it exactly."""
+    return _lsh_search(spark, sf_dir, multiprobe=True)
 
 
 # --------------------------------------------------------------------------
@@ -1459,26 +1401,41 @@ def embed_label_centroids(spark, sf_dir):
     )
 
 
+def _seed_centroid_ranks(spark, sf_dir, *carry: str):
+    """Every vector against the 16 seed centroids (vectors vec_id < 16),
+    ranked by cosine (ties → lower centroid id): (vec_id, *carry,
+    centroid_id, rn). ``rn == 1`` is the vector's inverted list; the
+    centroids broadcast, so this is one pass over the corpus. The rule
+    behind ann_ivf_assign, ann_ivf_search and semdedup_prune."""
+    v = _vectors(spark, sf_dir, partitions=32)
+    cc = _vectors(spark, sf_dir).filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("e").alias("ce"),
+        F.col("nrm").alias("cnrm"),
+    )
+    cos = cosine(dot_product(F.col("e"), F.col("ce")), F.col("nrm"), F.col("cnrm"))
+    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "centroid_id")
+    return (
+        v.join(F.broadcast(cc), how="cross")
+        .select("vec_id", *carry, "centroid_id", cos.alias("cos"))
+        .select("vec_id", *carry, "centroid_id", F.row_number().over(w).alias("rn"))
+    )
+
+
+def _ivf_lists(ranked):
+    """(vec_id, e, nrm, centroid_id): every vector in exactly its
+    nearest list."""
+    return ranked.filter(F.col("rn") == 1).select("vec_id", "e", "nrm", "centroid_id")
+
+
 def ann_ivf_assign(spark, sf_dir):
     """IVF assignment step: vectors vec_id < 16 act as deterministic seed
     centroids; every vector maps to its nearest centroid by cosine
     (ties → lower centroid id). Broadcast the 16 centroids; one pass
     over the corpus — the bucketing that makes IVF probe-local at scale.
     """
-    v = _vectors(spark, sf_dir, partitions=32)
-    c = _vectors(spark, sf_dir).filter(F.col("vec_id") < 16)
-    cc = c.select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cnrm"),
-    )
-    cos = cosine(dot_product(F.col("e"), F.col("ce")), F.col("nrm"), F.col("cnrm"))
-    pairs = v.join(F.broadcast(cc), how="cross").select(
-        "vec_id", "centroid_id", cos.alias("cos")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "centroid_id")
     return (
-        pairs.select("vec_id", "centroid_id", F.row_number().over(w).alias("rn"))
+        _seed_centroid_ranks(spark, sf_dir)
         .filter(F.col("rn") == 1)
         .select("vec_id", "centroid_id")
         .orderBy("vec_id")
@@ -1494,43 +1451,20 @@ def ann_ivf_search(spark, sf_dir, nprobe: int = 2):
     replicates the identical partition of the corpus and recall drift
     is impossible by construction.
     """
-    v = _vectors(spark, sf_dir, partitions=32)
-    c = _vectors(spark, sf_dir).filter(F.col("vec_id") < 16)
-    cc = c.select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cnrm"),
-    )
-    cos_c = cosine(dot_product(F.col("e"), F.col("ce")), F.col("nrm"), F.col("cnrm"))
-    ranked = v.join(F.broadcast(cc), how="cross").select(
-        "vec_id", "e", "nrm", "centroid_id", cos_c.alias("ccos")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "centroid_id")
-    assigned = ranked.select(
-        "vec_id", "e", "nrm", "centroid_id", F.row_number().over(w).alias("crn")
-    )
-    # corpus side: every vector lives in exactly its nearest list
-    lists = assigned.filter(F.col("crn") == 1).select(
-        "vec_id", "e", "nrm", "centroid_id"
-    )
+    ranked = _seed_centroid_ranks(spark, sf_dir, "e", "nrm")
     # query side: probe the nprobe nearest lists
-    probes = (
-        assigned.filter(
-            (F.col("vec_id") < KNN_QUERY_MAX_ID) & (F.col("crn") <= nprobe)
-        )
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-            "centroid_id",
-        )
+    probes = ranked.filter(
+        (F.col("vec_id") < KNN_QUERY_MAX_ID) & (F.col("rn") <= nprobe)
+    ).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("e").alias("qe"),
+        F.col("nrm").alias("qnrm"),
+        "centroid_id",
     )
-    cos_q = cosine(
-        dot_product(F.col("qe"), F.col("e")), F.col("qnrm"), F.col("nrm")
-    )
+    cos_q = cosine(dot_product(F.col("qe"), F.col("e")), F.col("qnrm"), F.col("nrm"))
     pairs = (
         F.broadcast(probes)
-        .join(lists, "centroid_id")
+        .join(_ivf_lists(ranked), "centroid_id")
         .filter(F.col("q_id") != F.col("vec_id"))
         .select(
             F.col("q_id").alias("query_id"),
@@ -1539,15 +1473,7 @@ def ann_ivf_search(spark, sf_dir, nprobe: int = 2):
         )
         .distinct()
     )
-    wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        pairs.select(
-            "query_id", "neighbor_id", "cos", F.row_number().over(wq).alias("rnk")
-        )
-        .filter(F.col("rnk") <= KNN_K)
-        .select("query_id", F.col("rnk").cast("int").alias("rnk"), "neighbor_id", "cos")
-        .orderBy("query_id", "rnk")
-    )
+    return _per_query_topk(pairs, "cos")
 
 
 #: product-quantization geometry: subspaces × codebook entries. The
@@ -1598,6 +1524,40 @@ def _pq_codes(parts, cb):
     )
 
 
+def _pq_adc(spark, sf_dir, v):
+    """(query_id, neighbor_id, adc): the asymmetric PQ distance of every
+    query (vec_id < KNN_QUERY_MAX_ID, exact subvectors) to every other
+    vector of ``v`` (codes only). Per query a PQ_M×PQ_CODEBOOK lookup
+    table of partial distances broadcasts; the ADC is a code-table join
+    plus a fixed-order sum of the M partials (no float reassociation)."""
+    cb = _pq_codebook(spark, sf_dir)
+    codes = _pq_codes(_pq_parts(v), cb)
+    qparts = _pq_parts(v.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)).select(
+        F.col("vec_id").alias("q_id"), F.col("m").alias("qm"), F.col("sv").alias("qv")
+    )
+    lut = qparts.join(F.broadcast(cb), qparts.qm == cb.cm).select(
+        "q_id",
+        F.col("qm").alias("m"),
+        "code",
+        _pq_sqdist(F.col("qv"), F.col("cv")).alias("partial"),
+    )
+    per = (
+        codes.join(F.broadcast(lut), ["m", "code"])
+        .filter(F.col("q_id") != F.col("vec_id"))
+        .groupBy("q_id", "vec_id")
+        .agg(
+            *[
+                F.sum(F.when(F.col("m") == i, F.col("partial"))).alias(f"p{i}")
+                for i in range(PQ_M)
+            ]
+        )
+    )
+    adc = functools.reduce(lambda a, b: a + b, [F.col(f"p{i}") for i in range(PQ_M)])
+    return per.select(
+        F.col("q_id").alias("query_id"), F.col("vec_id").alias("neighbor_id"), adc.alias("adc")
+    )
+
+
 def ann_pq_encode(spark, sf_dir):
     """Product-quantization encode: every vector compresses to PQ_M
     one-byte codes — (vec_id, m, code), code = nearest codeword of
@@ -1624,45 +1584,8 @@ def ann_pq_search(spark, sf_dir):
     (bytes), not embeddings; production composes this with the IVF
     lists (probe-local candidates) — the query here runs corpus-wide
     to exercise the ADC machinery end to end."""
-    v = _vectors(spark, sf_dir, partitions=32)
-    cb = _pq_codebook(spark, sf_dir)
-    codes = _pq_codes(_pq_parts(v), cb)
-    qparts = _pq_parts(v.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)).select(
-        F.col("vec_id").alias("q_id"), F.col("m").alias("qm"), F.col("sv").alias("qv")
-    )
-    lut = qparts.join(F.broadcast(cb), qparts.qm == cb.cm).select(
-        "q_id",
-        F.col("qm").alias("m"),
-        "code",
-        _pq_sqdist(F.col("qv"), F.col("cv")).alias("partial"),
-    )
-    per = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(
-            *[
-                F.sum(F.when(F.col("m") == i, F.col("partial"))).alias(f"p{i}")
-                for i in range(PQ_M)
-            ]
-        )
-    )
-    adc = F.col("p0") + F.col("p1") + F.col("p2") + F.col("p3")
-    wq = Window.partitionBy("q_id").orderBy(F.col("adc").asc(), "vec_id")
-    return (
-        per.select("q_id", "vec_id", adc.alias("adc"))
-        .select(
-            "q_id", "vec_id", "adc", F.row_number().over(wq).alias("rnk")
-        )
-        .filter(F.col("rnk") <= KNN_K)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("rnk").cast("int").alias("rnk"),
-            F.col("vec_id").alias("neighbor_id"),
-            "adc",
-        )
-        .orderBy("query_id", "rnk")
-    )
+    adc = _pq_adc(spark, sf_dir, _vectors(spark, sf_dir, partitions=32))
+    return _per_query_topk(adc, "adc", desc=False)
 
 
 #: ADC candidate budget for the rerank stage (see ann_pq_rerank)
@@ -1679,57 +1602,25 @@ def ann_pq_rerank(spark, sf_dir, candidates: int = PQ_RERANK_CANDIDATES):
     corpus grows; the scan side stays code-bytes). Same bit-exactness
     discipline as ann_pq_search: fixed-order folds, ties → lower id."""
     v = _vectors(spark, sf_dir, partitions=32)
-    cb = _pq_codebook(spark, sf_dir)
-    codes = _pq_codes(_pq_parts(v), cb)
-    qparts = _pq_parts(v.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)).select(
-        F.col("vec_id").alias("q_id"), F.col("m").alias("qm"), F.col("sv").alias("qv")
-    )
-    lut = qparts.join(F.broadcast(cb), qparts.qm == cb.cm).select(
-        "q_id",
-        F.col("qm").alias("m"),
-        "code",
-        _pq_sqdist(F.col("qv"), F.col("cv")).alias("partial"),
-    )
-    per = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(
-            *[
-                F.sum(F.when(F.col("m") == i, F.col("partial"))).alias(f"p{i}")
-                for i in range(PQ_M)
-            ]
-        )
-    )
-    adc = F.col("p0") + F.col("p1") + F.col("p2") + F.col("p3")
-    wc = Window.partitionBy("q_id").orderBy(F.col("adc").asc(), "vec_id")
+    wc = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), "neighbor_id")
     cands = (
-        per.select("q_id", "vec_id", adc.alias("adc"))
-        .select("q_id", "vec_id", F.row_number().over(wc).alias("crn"))
+        _pq_adc(spark, sf_dir, v)
+        .select("query_id", "neighbor_id", F.row_number().over(wc).alias("crn"))
         .filter(F.col("crn") <= candidates)
-        .select("q_id", "vec_id")
+        .select("query_id", "neighbor_id")
     )
     nb = v.select(F.col("vec_id").alias("n_id"), F.col("e").alias("ne"))
     qv = v.filter(F.col("vec_id") < KNN_QUERY_MAX_ID).select(
         F.col("vec_id").alias("qq_id"), F.col("e").alias("qe")
     )
     exact = (
-        cands.join(nb, cands.vec_id == nb.n_id)
-        .join(F.broadcast(qv), cands.q_id == qv.qq_id)
-        .select("q_id", "vec_id", _pq_sqdist(F.col("qe"), F.col("ne")).alias("dist"))
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), "vec_id")
-    return (
-        exact.select("q_id", "vec_id", "dist", F.row_number().over(wq).alias("rnk"))
-        .filter(F.col("rnk") <= KNN_K)
+        cands.join(nb, cands.neighbor_id == nb.n_id)
+        .join(F.broadcast(qv), cands.query_id == qv.qq_id)
         .select(
-            F.col("q_id").alias("query_id"),
-            F.col("rnk").cast("int").alias("rnk"),
-            F.col("vec_id").alias("neighbor_id"),
-            "dist",
+            "query_id", "neighbor_id", _pq_sqdist(F.col("qe"), F.col("ne")).alias("dist")
         )
-        .orderBy("query_id", "rnk")
     )
+    return _per_query_topk(exact, "dist", desc=False)
 
 
 #: sliding-window chunking geometry (chars per chunk / window stride)
@@ -2054,23 +1945,7 @@ def semdedup_prune(spark, sf_dir):
     never all-pairs. Output: every vector with its cluster and an int
     kept flag (1 = survives), so downstream joins can filter or audit.
     """
-    v = _vectors(spark, sf_dir, partitions=32)
-    c = _vectors(spark, sf_dir).filter(F.col("vec_id") < 16)
-    cc = c.select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cnrm"),
-    )
-    cos_c = cosine(dot_product(F.col("e"), F.col("ce")), F.col("nrm"), F.col("cnrm"))
-    ranked = v.join(F.broadcast(cc), how="cross").select(
-        "vec_id", "e", "nrm", "centroid_id", cos_c.alias("ccos")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "centroid_id")
-    lists = (
-        ranked.select("vec_id", "e", "nrm", "centroid_id", F.row_number().over(w).alias("crn"))
-        .filter(F.col("crn") == 1)
-        .select("vec_id", "e", "nrm", "centroid_id")
-    )
+    lists = _ivf_lists(_seed_centroid_ranks(spark, sf_dir, "e", "nrm"))
     a = lists.alias("a")
     b = lists.alias("b")
     cos_ab = cosine(
@@ -2941,8 +2816,10 @@ def mixture_token_budget_sample(spark, sf_dir):
     # ranking window both read this 5-narrow-column projection, so
     # materialize it instead of tokenizing the corpus twice (~30 B/doc
     # in the block store — linear, spillable, far cheaper than a second
-    # pass over the raw text at any scale).
-    base = base.localCheckpoint()
+    # pass over the raw text at any scale). Registry-owned, so a repeat
+    # call replaces the previous generation and release() drops it.
+    base_plan = base
+    base = checkpointed(spark, sf_dir, ("mixture_base",), lambda: base_plan)
     wq = (
         Window.partitionBy("lang")
         .orderBy(F.col("q_scaled").desc())
@@ -3270,13 +3147,17 @@ def embed_quantize(spark, sf_dir):
     emitted summary keeps everything cross-engine-exact: the scale is
     floored at 1e9, and the quantized sums are pure integer aggregates
     (order-independent by construction). Array columns stay inside the
-    engine; only scalars cross the comparison boundary.
+    engine; only scalars cross the comparison boundary. A zero vector's
+    scale is NULL (DuckDB's x/0), and so is every statistic after it.
     """
     emb = _vectors(spark, sf_dir, partitions=32)
-    scale = F.lit(127.0) / F.aggregate(
-        F.transform(F.col("e"), lambda x: F.abs(x)),
-        F.lit(0.0),
-        lambda acc, x: F.greatest(acc, x),
+    scale = F.try_divide(
+        F.lit(127.0),
+        F.aggregate(
+            F.transform(F.col("e"), lambda x: F.abs(x)),
+            F.lit(0.0),
+            lambda acc, x: F.greatest(acc, x),
+        ),
     )
     q = F.transform(F.col("e"), lambda x: F.floor(x * F.col("scale")).cast("bigint"))
     return (
@@ -3804,6 +3685,27 @@ def _jaccard_tail(pair_src: str) -> str:
     )
 
 
+#: the per-query top-KNN_K tail of the cosine-search oracles (the
+#: ``p`` CTE carries query_id, neighbor_id, cos)
+_KNN_TAIL = (
+    "r AS (SELECT query_id, neighbor_id, cos, "
+    "ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM p) "
+    f"SELECT query_id, CAST(rnk AS INT) AS rnk, neighbor_id, cos FROM r WHERE rnk <= {KNN_K} "
+    "ORDER BY query_id, rnk"
+)
+
+#: the LSH search oracles' corpus side: one ``bk`` row per (vector, table)
+_LSH_BK_CTE = (
+    f"WITH {_EMB_CTE}, {_lsh_nplanes_sql()}, "
+    "bk AS ("
+    + " UNION ALL ".join(
+        f"SELECT vec_id, e, nrm, {t} AS tbl, {_lsh_bucket_sql('e', t)} AS bucket FROM v"
+        for t in range(LSH_TABLES)
+    )
+    + "), "
+)
+
+
 _LANG_SCORE = {
     lang: f"len(list_filter(string_split(text, ' '), x -> x IN ({', '.join(chr(39) + m + chr(39) for m in markers)})))"
     for lang, markers in LANG_MARKERS.items()
@@ -3888,10 +3790,7 @@ ORACLE_SQL: dict[str, str] = {
         f"WITH {_EMB_CTE}, "
         f"p AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, {_COS} AS cos "
         f"FROM v a JOIN v b ON a.vec_id < {KNN_QUERY_MAX_ID} AND b.vec_id <> a.vec_id), "
-        "r AS (SELECT query_id, neighbor_id, cos, "
-        "ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM p) "
-        f"SELECT query_id, CAST(rnk AS INT) AS rnk, neighbor_id, cos FROM r WHERE rnk <= {KNN_K} "
-        "ORDER BY query_id, rnk"
+        + _KNN_TAIL
     ),
     "text_metrics": (
         "WITH base AS (SELECT doc_id, lang, text, "
@@ -3931,13 +3830,7 @@ ORACLE_SQL: dict[str, str] = {
         "FROM bk GROUP BY bucket ORDER BY bucket"
     ),
     "ann_lsh_search_multiprobe": (
-        f"WITH {_EMB_CTE}, {_lsh_nplanes_sql()}, "
-        "bk AS ("
-        + " UNION ALL ".join(
-            f"SELECT vec_id, e, nrm, {t} AS tbl, {_lsh_bucket_sql('e', t)} AS bucket FROM v"
-            for t in range(LSH_TABLES)
-        )
-        + "), "
+        f"{_LSH_BK_CTE}"
         # multi-probe: each query also probes every Hamming-1 bucket
         # (one hyperplane flipped) — the same deterministic expansion
         # as the Spark plan, so the oracle pins the HIGH-recall form
@@ -3948,10 +3841,7 @@ ORACLE_SQL: dict[str, str] = {
         f"p AS (SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id, {_COS} AS cos "
         "FROM qp a JOIN bk b ON a.tbl = b.tbl AND a.bucket = b.bucket "
         "AND b.vec_id <> a.vec_id), "
-        "r AS (SELECT query_id, neighbor_id, cos, "
-        "ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM p) "
-        f"SELECT query_id, CAST(rnk AS INT) AS rnk, neighbor_id, cos FROM r WHERE rnk <= {KNN_K} "
-        "ORDER BY query_id, rnk"
+        + _KNN_TAIL
     ),
     "ann_ivf_assign": (
         f"WITH {_EMB_CTE}, "
@@ -4034,6 +3924,33 @@ _PQ_CTE = (
     "codes AS (SELECT vec_id, m, code FROM r WHERE rn = 1)"
 )
 
+#: the PQ search oracles' per-pair ADC table ``p`` (q_id, vec_id, adc)
+_PQ_ADC_CTE = (
+    f"q AS (SELECT vec_id AS q_id, m, sv AS qv FROM parts WHERE vec_id < {KNN_QUERY_MAX_ID}), "
+    "lut AS (SELECT q.q_id, q.m, c.code, "
+    "list_dot_product(q.qv, q.qv) + list_dot_product(c.cv, c.cv) "
+    "- 2.0 * list_dot_product(q.qv, c.cv) AS partial "
+    "FROM q JOIN cb c ON q.m = c.cm), "
+    "p AS (SELECT l.q_id, k.vec_id, "
+    "SUM(CASE WHEN k.m = 0 THEN l.partial END) "
+    "+ SUM(CASE WHEN k.m = 1 THEN l.partial END) "
+    "+ SUM(CASE WHEN k.m = 2 THEN l.partial END) "
+    "+ SUM(CASE WHEN k.m = 3 THEN l.partial END) AS adc "
+    "FROM codes k JOIN lut l ON k.m = l.m AND k.code = l.code "
+    "AND l.q_id <> k.vec_id GROUP BY l.q_id, k.vec_id), "
+)
+
+#: the seed-centroid inverted lists of the IVF search and SemDeDup
+#: oracles (ann_ivf_assign's rule)
+_IVF_LISTS_CTE = (
+    "c AS (SELECT vec_id AS centroid_id, e AS ce, nrm AS cnrm FROM v WHERE vec_id < 16), "
+    "rk AS (SELECT a.vec_id, a.e, a.nrm, c.centroid_id, "
+    "ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY "
+    "list_dot_product(a.e, c.ce) / (sqrt(a.nrm) * sqrt(c.cnrm)) DESC, c.centroid_id) AS crn "
+    "FROM v a, c), "
+    "lists AS (SELECT vec_id, e, nrm, centroid_id FROM rk WHERE crn = 1), "
+)
+
 TESTS_ONLY_ORACLE_SQL: dict[str, str] = {
     # r13 (tests-only; was declared r12): same lateral-unnest uncapping
     # as dedup_substrings — the chunk index now derives from each
@@ -4087,18 +4004,7 @@ TESTS_ONLY_ORACLE_SQL: dict[str, str] = {
     ),
     "ann_pq_search": (
         f"{_PQ_CTE}, "
-        f"q AS (SELECT vec_id AS q_id, m, sv AS qv FROM parts WHERE vec_id < {KNN_QUERY_MAX_ID}), "
-        "lut AS (SELECT q.q_id, q.m, c.code, "
-        "list_dot_product(q.qv, q.qv) + list_dot_product(c.cv, c.cv) "
-        "- 2.0 * list_dot_product(q.qv, c.cv) AS partial "
-        "FROM q JOIN cb c ON q.m = c.cm), "
-        "p AS (SELECT l.q_id, k.vec_id, "
-        "SUM(CASE WHEN k.m = 0 THEN l.partial END) "
-        "+ SUM(CASE WHEN k.m = 1 THEN l.partial END) "
-        "+ SUM(CASE WHEN k.m = 2 THEN l.partial END) "
-        "+ SUM(CASE WHEN k.m = 3 THEN l.partial END) AS adc "
-        "FROM codes k JOIN lut l ON k.m = l.m AND k.code = l.code "
-        "AND l.q_id <> k.vec_id GROUP BY l.q_id, k.vec_id), "
+        f"{_PQ_ADC_CTE}"
         "t AS (SELECT q_id, vec_id, adc, "
         "ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adc, vec_id) AS rnk FROM p) "
         f"SELECT q_id AS query_id, CAST(rnk AS INTEGER) AS rnk, "
@@ -4167,18 +4073,7 @@ TESTS_ONLY_ORACLE_SQL: dict[str, str] = {
     ),
     "ann_pq_rerank": (
         f"{_PQ_CTE}, "
-        f"q AS (SELECT vec_id AS q_id, m, sv AS qv FROM parts WHERE vec_id < {KNN_QUERY_MAX_ID}), "
-        "lut AS (SELECT q.q_id, q.m, c.code, "
-        "list_dot_product(q.qv, q.qv) + list_dot_product(c.cv, c.cv) "
-        "- 2.0 * list_dot_product(q.qv, c.cv) AS partial "
-        "FROM q JOIN cb c ON q.m = c.cm), "
-        "p AS (SELECT l.q_id, k.vec_id, "
-        "SUM(CASE WHEN k.m = 0 THEN l.partial END) "
-        "+ SUM(CASE WHEN k.m = 1 THEN l.partial END) "
-        "+ SUM(CASE WHEN k.m = 2 THEN l.partial END) "
-        "+ SUM(CASE WHEN k.m = 3 THEN l.partial END) AS adc "
-        "FROM codes k JOIN lut l ON k.m = l.m AND k.code = l.code "
-        "AND l.q_id <> k.vec_id GROUP BY l.q_id, k.vec_id), "
+        f"{_PQ_ADC_CTE}"
         "c2 AS (SELECT q_id, vec_id, "
         "ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adc, vec_id) AS crn FROM p), "
         f"sel AS (SELECT q_id, vec_id FROM c2 WHERE crn <= {PQ_RERANK_CANDIDATES}), "
@@ -4231,21 +4126,13 @@ TESTS_ONLY_ORACLE_SQL: dict[str, str] = {
     ),
     "ann_ivf_search": (
         f"WITH {_EMB_CTE}, "
-        "c AS (SELECT vec_id AS centroid_id, e AS ce, nrm AS cnrm FROM v WHERE vec_id < 16), "
-        "rk AS (SELECT a.vec_id, a.e, a.nrm, c.centroid_id, "
-        "ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY "
-        "list_dot_product(a.e, c.ce) / (sqrt(a.nrm) * sqrt(c.cnrm)) DESC, c.centroid_id) AS crn "
-        "FROM v a, c), "
-        "lists AS (SELECT vec_id, e, nrm, centroid_id FROM rk WHERE crn = 1), "
+        f"{_IVF_LISTS_CTE}"
         "probes AS (SELECT vec_id AS q_id, e AS qe, nrm AS qnrm, centroid_id FROM rk "
         f"WHERE vec_id < {KNN_QUERY_MAX_ID} AND crn <= 2), "
         "p AS (SELECT DISTINCT p.q_id AS query_id, l.vec_id AS neighbor_id, "
         "list_dot_product(p.qe, l.e) / (sqrt(p.qnrm) * sqrt(l.nrm)) AS cos "
         "FROM probes p JOIN lists l USING (centroid_id) WHERE p.q_id <> l.vec_id), "
-        "r AS (SELECT query_id, neighbor_id, cos, "
-        "ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM p) "
-        f"SELECT query_id, CAST(rnk AS INT) AS rnk, neighbor_id, cos FROM r WHERE rnk <= {KNN_K} "
-        "ORDER BY query_id, rnk"
+        + _KNN_TAIL
     ),
     "dedup_containment": (
         f"WITH {_SHINGLE_CTE}, "
@@ -4282,12 +4169,7 @@ TESTS_ONLY_ORACLE_SQL: dict[str, str] = {
     ),
     "semdedup_prune": (
         f"WITH {_EMB_CTE}, "
-        "c AS (SELECT vec_id AS centroid_id, e AS ce, nrm AS cnrm FROM v WHERE vec_id < 16), "
-        "rk AS (SELECT a.vec_id, a.e, a.nrm, c.centroid_id, "
-        "ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY "
-        "list_dot_product(a.e, c.ce) / (sqrt(a.nrm) * sqrt(c.cnrm)) DESC, c.centroid_id) AS crn "
-        "FROM v a, c), "
-        "lists AS (SELECT vec_id, e, nrm, centroid_id FROM rk WHERE crn = 1), "
+        f"{_IVF_LISTS_CTE}"
         "pruned AS (SELECT DISTINCT a.vec_id FROM lists a JOIN lists b "
         "ON a.centroid_id = b.centroid_id AND b.vec_id < a.vec_id "
         "AND list_dot_product(a.e, b.e) / (sqrt(a.nrm) * sqrt(b.nrm)) >= "
@@ -4441,20 +4323,11 @@ TESTS_ONLY_ORACLE_SQL: dict[str, str] = {
 # declared query's oracle verbatim
 TESTS_ONLY_ORACLE_SQL["decontaminate_bloom"] = ORACLE_SQL["decontaminate"]
 TESTS_ONLY_ORACLE_SQL["ann_lsh_search"] = (
-    f"WITH {_EMB_CTE}, {_lsh_nplanes_sql()}, "
-    "bk AS ("
-    + " UNION ALL ".join(
-        f"SELECT vec_id, e, nrm, {t} AS tbl, {_lsh_bucket_sql('e', t)} AS bucket FROM v"
-        for t in range(LSH_TABLES)
-    )
-    + "), "
+    f"{_LSH_BK_CTE}"
     f"p AS (SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id, {_COS} AS cos "
     "FROM bk a JOIN bk b ON a.tbl = b.tbl AND a.bucket = b.bucket "
     "AND b.vec_id <> a.vec_id "
     f"WHERE a.vec_id < {KNN_QUERY_MAX_ID}), "
-    "r AS (SELECT query_id, neighbor_id, cos, "
-    "ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM p) "
-    f"SELECT query_id, CAST(rnk AS INT) AS rnk, neighbor_id, cos FROM r WHERE rnk <= {KNN_K} "
-    "ORDER BY query_id, rnk"
+    + _KNN_TAIL
 )
 

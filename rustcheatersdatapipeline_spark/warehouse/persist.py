@@ -994,7 +994,10 @@ class GoldStore:
         Z-ordered column multiplies the cut. Returns None when the
         manifest carries no stats (legacy entry), meaning "cannot prune,
         read everything"."""
-        files = self._complete_files(self.current_manifest()["tables"][name])
+        return self._pruned(self.current_manifest()["tables"][name], bounds)
+
+    def _pruned(self, entry: dict, bounds: dict) -> list[dict] | None:
+        files = self._complete_files(entry)
         if files is None:
             return None
         return [f for f in files if self._file_may_match(f, bounds)]
@@ -1010,16 +1013,19 @@ class GoldStore:
         reconstructs the partition column for exactly the file list we
         pass — no silent column loss, no full-table fallback. File
         groups from different append txn dirs union by name (the
-        manifest schema already guarantees type compatibility)."""
+        manifest schema already guarantees type compatibility) and are
+        projected onto the entry's recorded schema, so the columns are
+        ``read(name)``'s whichever files survive the pruning."""
         from pyspark.sql import functions as F
 
-        files = self.pruned_files(name, bounds)
+        entry = self.current_manifest()["tables"][name]
+        files = self._pruned(entry, bounds)
         if files is None:
-            base = self.read(name)
+            base = self._read_entry(entry)
         elif not files:
-            base = self.spark.createDataFrame([], self.read(name).schema)
+            base = self.spark.createDataFrame([], self._read_entry(entry).schema)
         else:
-            base = self._read_files(files)
+            base = self._apply_entry_schema(self._read_files(files), entry.get("schema"))
         for col, (lo, hi) in bounds.items():
             base = base.filter((F.col(col) >= lo) & (F.col(col) <= hi))
         return base

@@ -42,7 +42,8 @@ ANNOTATED = {
     ),
     "ann_lsh_search": (
         "bucket equality join — candidates bounded per bucket, no all-pairs; "
-        "signature computed in whole-stage codegen (no Python)"
+        "signature is an interpreted zip_with/aggregate fold in the JVM "
+        "(CodegenFallback, no Python)"
     ),
     "doc_fingerprint": (
         "zero-shuffle winnowing: array expressions only, one Exchange for the "
@@ -50,10 +51,9 @@ ANNOTATED = {
     ),
     "events_sessionize": "one shuffle on user_id shared by both window passes",
     "dedup_ngram_jaccard": (
-        "df(g) as a window count over one g-exchange of the shingle table "
-        "(round-8: replaces the former groupBy+join that shuffled the same "
-        "rows by g twice); per-doc size and prefix rank share one doc_id "
-        "exchange"
+        "df(g) as a groupBy(g) plus join-back (r12: a g-window cannot be "
+        "skew-split by AQE, a join can); per-doc size and prefix rank share "
+        "one doc_id exchange"
     ),
     "dsir_resample": (
         "bucket score table joined back on an equi key; the only non-equi "

@@ -65,6 +65,22 @@ def test_read_pruned_out_of_range_is_empty_with_schema(spark, sf_dir, tmp_path):
     assert out.columns == store.read("events").columns
 
 
+def test_read_pruned_projects_onto_the_entry_schema(spark, tmp_path):
+    """The pruned read has read()'s columns whichever files survive:
+    when only the files of an append that predates an additive column
+    survive, that column reads as NULL instead of vanishing."""
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    v1 = store.publish({"t": spark.range(0, 5).selectExpr("id AS k", "id * 2 AS v")}, 0)
+    store.publish_append(
+        {"t": spark.range(10, 15).selectExpr("id AS k", "id * 2 AS v", "id * 3 AS x")}, v1
+    )
+    bounds = {"k": (0, 4)}
+    assert len(store.pruned_files("t", bounds)) < len(store.pruned_files("t", {}))
+    out = store.read_pruned("t", bounds)
+    assert out.columns == store.read("t").columns == ["k", "v", "x"]
+    assert sorted((r["k"], r["x"]) for r in out.collect()) == [(i, None) for i in range(5)]
+
+
 def test_read_pruned_partitioned_fact_prunes_on_partition_and_stats(
     spark, sf_dir, tmp_path
 ):

@@ -55,11 +55,24 @@ def _registry_owned_rdd_ids(spark) -> set:
     return owned
 
 
+def _keys(spark) -> list:
+    return sorted((key for _, key in plan_cache.registered(spark)), key=repr)
+
+
 def test_repeat_invocation_does_not_double_cache(spark, sf_dir, clean_registry):
     T.dedup_ngram_jaccard(spark, sf_dir).count()
-    n_handles = len(plan_cache.registered(spark))
+    k = T.choose_shingle_k(spark, sf_dir)
+    jaccard_keys = [
+        ("shingle_k",),
+        ("shingles", k, False),
+        ("shingles", k, True),
+        ("shingle_df", k, True),
+        ("ppjoin_prefix", k),
+        ("jacc_cand", "ppjoin", k),
+    ]
+    assert _keys(spark) == sorted(jaccard_keys, key=repr)
     ids = _persistent_rdd_ids(spark)
-    # same builder again: same handle count, and every NEW persistent
+    # same builder again: same keys, and every NEW persistent
     # RDD must be registry-owned (the per-invocation checkpoint
     # REPLACES its previous generation by design, so one new owned id
     # per checkpointed key is expected; an UNOWNED new id is what
@@ -67,13 +80,28 @@ def test_repeat_invocation_does_not_double_cache(spark, sf_dir, clean_registry):
     # ContextCleaner may concurrently drop unrelated leftovers, which
     # made the former == count assert flake in long sessions.
     T.dedup_ngram_jaccard(spark, sf_dir).count()
-    assert len(plan_cache.registered(spark)) == n_handles
+    assert _keys(spark) == sorted(jaccard_keys, key=repr)
     assert _persistent_rdd_ids(spark) - ids <= _registry_owned_rdd_ids(spark)
-    # containment derives from the SAME shingle/df tables — its
-    # invocation must reuse the jaccard entries, not re-cache them
+    # containment derives from the SAME shingle/df/prefix tables — its
+    # invocation must reuse the jaccard entries, not re-cache them; the
+    # only key it adds is its own verify-candidate checkpoint
     T.dedup_containment(spark, sf_dir).count()
-    assert len(plan_cache.registered(spark)) == n_handles
+    assert _keys(spark) == sorted(
+        jaccard_keys + [("jacc_cand", "containment", k)], key=repr
+    )
     assert _persistent_rdd_ids(spark) - ids <= _registry_owned_rdd_ids(spark)
+
+
+def test_mixture_checkpoint_is_registry_owned(spark, sf_dir, clean_registry):
+    """mixture_token_budget_sample's tokenized base is a registry
+    checkpoint: release() drops every persistent RDD the call created."""
+    base_ids = _persistent_rdd_ids(spark)
+    T.mixture_token_budget_sample(spark, sf_dir).count()
+    assert ("mixture_base",) in _keys(spark)
+    created = _persistent_rdd_ids(spark) - base_ids
+    assert created
+    plan_cache.release(spark, sf_dir)
+    assert _persistent_rdd_ids(spark) & created == set()
 
 
 def test_two_sf_sweeps_release_independently(spark, sf_dir, tmp_path, clean_registry):

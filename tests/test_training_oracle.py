@@ -116,13 +116,10 @@ def test_dedup_substrings_exact_boundaries_and_merging(spark):
     assert (3 + 24 - 3) > SUBSTR_W  # first span is LONGER than W: runs merge
 
 
-def test_knn_topk_ranks_zero_norm_vectors_as_the_oracle(spark, sf_dir, tmp_path):
-    """A zero-norm vector's cosine is undefined: numpy's 0/0 is NaN,
-    which Arrow hands to Spark as null, and DuckDB's 0/0 is NULL. Both
-    rank it after every defined cosine, so the per-task top-k prune must
-    too. The corpus has one zero-norm query (3: every cosine undefined,
-    ranked by neighbor_id alone) and one zero-norm corpus vector (100)."""
-    import duckdb
+@pytest.fixture(scope="module")
+def zero_norm_dir(sf_dir, tmp_path_factory):
+    """The test embeddings with vectors 3 (a query and a seed centroid)
+    and 100 (a corpus vector) zeroed — every cosine against them is 0/0."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -134,11 +131,50 @@ def test_knn_topk_ranks_zero_norm_vectors_as_the_oracle(spark, sf_dir, tmp_path)
     ]
     i = t.schema.get_field_index("embedding")
     t = t.set_column(i, t.schema.field(i), pa.array(emb, t.schema.field(i).type))
-    pq.write_table(t, tmp_path / "embeddings.parquet")
-    df = T.embed_knn_bruteforce(spark, str(tmp_path))
+    d = tmp_path_factory.mktemp("zero_norm")
+    pq.write_table(t, d / "embeddings.parquet")
+    return str(d)
+
+
+def _match_zero_norm_oracle(df, zero_norm_dir, sql, name):
+    import duckdb
+
     with duckdb.connect() as con:
-        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'")
-        assert_matches_oracle(df, con, T.ORACLE_SQL["embed_knn_bruteforce"], "zero-norm knn")
+        con.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM '{zero_norm_dir}/embeddings.parquet'"
+        )
+        assert_matches_oracle(df, con, sql, name)
+
+
+def test_knn_topk_ranks_zero_norm_vectors_as_the_oracle(spark, zero_norm_dir):
+    """A zero-norm vector's cosine is undefined: numpy's 0/0 is NaN,
+    which Arrow hands to Spark as null, and DuckDB's 0/0 is NULL. Both
+    rank it after every defined cosine, so the per-task top-k prune must
+    too. The corpus has one zero-norm query (3: every cosine undefined,
+    ranked by neighbor_id alone) and one zero-norm corpus vector (100)."""
+    df = T.embed_knn_bruteforce(spark, zero_norm_dir)
+    _match_zero_norm_oracle(
+        df, zero_norm_dir, T.ORACLE_SQL["embed_knn_bruteforce"], "zero-norm knn"
+    )
     rows = df.collect()
     assert [r["neighbor_id"] for r in rows if r["query_id"] == 3] == [0, 1, 2, 4, 5]
     assert all(r["neighbor_id"] != 100 for r in rows)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ann_lsh_search",
+        "ann_lsh_search_multiprobe",
+        "ann_ivf_assign",
+        "ann_ivf_search",
+        "embed_quantize",
+    ],
+)
+def test_zero_norm_vectors_match_the_oracle(spark, zero_norm_dir, name):
+    """The Spark-SQL cosine and int8 scale divide by a norm: a zero
+    vector yields NULL (try_divide), as DuckDB's x/0 does, instead of
+    failing the query with DIVIDE_BY_ZERO under ANSI mode."""
+    _match_zero_norm_oracle(
+        _ALL_QUERIES[name](spark, zero_norm_dir), zero_norm_dir, _ALL_ORACLES[name], name
+    )
