@@ -36,6 +36,7 @@ from typing import Callable
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from . import plan_cache
 from .pipeline import BatchResult, run_batch
 from .warehouse.persist import GoldStore, publish_with_retry
 
@@ -117,9 +118,11 @@ def run_interval_range(
     rule). A batch that raises outright leaves no progress row and no
     gold change — the rerun picks up exactly there.
 
-    Each interval's bronze caches are released once its publish
-    resolves, and a build that lost the CAS race releases its own before
-    the rebuild, so the rebuild reads the bronze as it is then.
+    Each interval's bronze reads are registered with ``plan_cache``
+    under its bronze dir (``read_bronze``) and released once its publish
+    resolves. A rebuild after a lost CAS race reuses the reads of the
+    endpoint files left unchanged and re-reads the rewritten ones, so it
+    sees the bronze as it is then.
     """
     ran: list[tuple[_dt.datetime, BatchResult, int]] = []
     done = completed_intervals(store)
@@ -127,9 +130,10 @@ def run_interval_range(
         iso = interval_end.isoformat()
         if iso in done:
             continue
+        bronze_dir = bronze_dir_for(interval_end)
         holder: dict[str, BatchResult] = {}
 
-        def build(tables, _iso=iso, _ie=interval_end):
+        def build(tables, _iso=iso, _ie=interval_end, _dir=bronze_dir):
             # re-check on EVERY build attempt: publish_with_retry rebuilds
             # on a lost CAS race, and the winner may have committed this
             # very interval — its progress row is in `tables` now, so the
@@ -144,12 +148,10 @@ def run_interval_range(
                 )
                 if hit:
                     raise _IntervalAlreadyCommitted(_iso)
-            if "res" in holder:
-                holder["res"].release()  # the attempt that lost the CAS race
             existing = {k: v for k, v in tables.items() if k != PROGRESS_TABLE}
             res = run_batch(
                 spark,
-                bronze_dir_for(_ie),
+                _dir,
                 _ie,
                 existing=existing or None,
                 **run_batch_kwargs,
@@ -167,8 +169,7 @@ def run_interval_range(
         except _IntervalAlreadyCommitted:
             continue  # a racing driver committed it — skip, don't re-run
         finally:
-            if "res" in holder:
-                holder["res"].release()
+            plan_cache.release(spark, bronze_dir, blocking=False)
         ran.append((interval_end, holder["res"], version))
     return ran
 

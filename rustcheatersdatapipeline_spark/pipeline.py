@@ -19,6 +19,12 @@ one lazy plan. A batch materializes in three places: the cached bronze
 reads (one corrupt-record count each), one D2/D3 aggregate per silver
 table, and the gold publish.
 
+``plan_cache`` owns the bronze caches: each endpoint's read is
+registered under the ``bronze_dir`` scope, keyed on its ``.json``
+file's identity, and ``backfill.run_interval_range`` releases that
+scope once the interval's publish resolves. A caller of plain
+``run_batch`` releases it with ``plan_cache.release(spark, bronze_dir)``.
+
 Like the reference's parallel task branches, the independent work in
 each of those places runs concurrently, bounded by the core count
 (``session.concurrently``): the bronze endpoint reads, the 16 silver
@@ -39,6 +45,7 @@ from pyspark.sql.utils import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from . import plan_cache
 from .operators.dedup import assert_quality
 from .schemas import BRONZE_SCHEMAS
 from .session import concurrently
@@ -87,32 +94,12 @@ class BatchResult:
     #: branches that failed once and succeeded on the bounded re-attempt
     #: (reference retries: 1, rust_twitter_steam_pipeline.py:40-41)
     retried: list[str] = field(default_factory=list)
-    #: the cached bronze reads behind ``gold``; the caller releases them
-    #: (``release``) once the gold is written
-    cached: list[DataFrame] = field(default_factory=list)
 
     @property
     def succeeded(self) -> bool:
         """The reference's end trigger rule none_failed_min_one_success
         (rust_twitter_steam_pipeline.py:877)."""
         return len(self.gold) > 0 and not self.failed
-
-    def release(self) -> None:
-        """Unpersist the batch's bronze caches. ``gold`` stays readable:
-        its frames recompute from the bronze files."""
-        for df in self.cached:
-            df.unpersist()
-        self.cached = []
-
-
-class BronzeFrames(dict):
-    """Bronze frames by endpoint name. ``cached`` holds the cached reads
-    behind them, which the batch hands to its caller to release; a dict,
-    so ``read_bronze`` keeps its ``(tables, failed)`` return shape."""
-
-    def __init__(self) -> None:
-        super().__init__()
-        self.cached: list[DataFrame] = []
 
 
 def _read_endpoint(spark: SparkSession, bronze_dir: str, name: str) -> DataFrame:
@@ -132,48 +119,52 @@ def _read_endpoint(spark: SparkSession, bronze_dir: str, name: str) -> DataFrame
 
 def read_bronze(
     spark: SparkSession, bronze_dir: str
-) -> tuple[BronzeFrames, dict[str, str]]:
-    """Schema-pinned bronze reads, the endpoints read concurrently.
+) -> tuple[dict[str, DataFrame], dict[str, str]]:
+    """Schema-pinned bronze reads, the corrupt-record counts run
+    concurrently.
 
     - Missing endpoint file → skipped branch (S15 soft-fail semantics).
     - Malformed JSON → FAILED branch, detected via permissive-mode
       ``_corrupt_record`` (SURVEY.md §1.4). Without this check a corrupt
       document parses as one all-null row, explode_outer drops it, and
       the batch reports success with silently-empty tables — worse than
-      the reference's hard json.loads failure. A corrupt read's cache is
-      released at once; the others ride on ``out.cached``.
-    - Any other error releases every cache the call made, then raises.
+      the reference's hard json.loads failure.
+    - Each read is cached (required to filter on the corrupt column
+      alone) and registered with ``plan_cache`` under ``bronze_dir``,
+      keyed on its file's identity, so a repeat call reuses an
+      unchanged endpoint's read and re-reads a rewritten one. The reads
+      are registered here, on the calling thread; only the counts run
+      on the pool. The caller releases the scope once the gold is
+      written.
+    - Any error releases the scope, then raises.
     """
     names = [n for n in BRONZE_SCHEMAS if n != "twitter_timeline"]
-    made: list[DataFrame] = []
-
-    def read(name: str) -> tuple[DataFrame, int] | None:
-        try:
-            # cached: required to filter on the corrupt column alone
-            df = _read_endpoint(spark, bronze_dir, name).cache()
-        except AnalysisException:
-            return None  # sensor-skip semantics
-        made.append(df)
-        return df, df.filter(F.col("_corrupt_record").isNotNull()).count()
-
     try:
-        reads = concurrently(spark, read, names)
+        reads: dict[str, DataFrame] = {}
+        for name in names:
+            try:
+                reads[name] = plan_cache.cached(
+                    spark, bronze_dir, ("bronze", name),
+                    lambda: _read_endpoint(spark, bronze_dir, name),
+                    tables=(f"{name}.json",),
+                )
+            except AnalysisException:
+                pass  # sensor-skip semantics
+        counts = concurrently(
+            spark,
+            lambda name: reads[name].filter(F.col("_corrupt_record").isNotNull()).count(),
+            list(reads),
+        )
     except BaseException:
-        for df in made:
-            df.unpersist()
+        plan_cache.release(spark, bronze_dir, blocking=False)
         raise
-    out = BronzeFrames()
+    out: dict[str, DataFrame] = {}
     failed: dict[str, str] = {}
-    for name, got in zip(names, reads):
-        if got is None:
-            continue
-        df, n_corrupt = got
+    for (name, df), n_corrupt in zip(reads.items(), counts):
         if n_corrupt:
             failed[name] = f"{n_corrupt} corrupt bronze record(s)"
-            df.unpersist()
         else:
             out[name] = df.drop("_corrupt_record")
-            out.cached.append(df)
     return out, failed
 
 
@@ -204,12 +195,12 @@ def run_batch(
     skipped branch holds back only the loads that depend on it —
     build_warehouse carries prior state for those and loads the rest.
 
-    The bronze reads stay cached on ``result.cached`` until the caller
-    calls ``result.release()``, once it has written the gold.
+    The bronze reads stay cached until the caller, once it has written
+    the gold, calls ``plan_cache.release(spark, bronze_dir)``.
     """
     date_end = date_end or (interval_end.date() + _dt.timedelta(days=365))
     bronze, bad_bronze = read_bronze(spark, bronze_dir)
-    result = BatchResult(gold={}, cached=bronze.cached)
+    result = BatchResult(gold={})
     branches = {**DIM_TRANSFORMS, **FACT_TRANSFORMS}
 
     def branch(name: str) -> tuple[DataFrame | None, str | None]:
@@ -252,39 +243,3 @@ def run_batch(
         expected = set(DIM_TRANSFORMS) | set(FACT_TRANSFORMS) | {"date_dim"}
         result.not_loaded = sorted(expected - set(result.gold))
     return result
-
-
-def run_batch_transactional(
-    spark: SparkSession,
-    bronze_dir: str,
-    interval_end: _dt.datetime,
-    store,
-    **kwargs,
-) -> tuple[BatchResult, int]:
-    """``run_batch`` with the reference's ON CONFLICT durability: prior
-    gold state is read from the ``GoldStore``'s current manifest, the
-    batch's gold publishes under compare-and-swap, and a lost race
-    (another interval or a backfill published first) REBUILDS this
-    batch on the winner's state instead of clobbering it — the upserts
-    inside ``build_warehouse`` are key-idempotent, so any interleaving
-    converges to the serial result. Returns (batch result, committed
-    store version)."""
-    from .warehouse.persist import publish_with_retry
-
-    holder: dict[str, BatchResult] = {}
-
-    def build(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        if "res" in holder:
-            holder["res"].release()  # the attempt that lost the CAS race
-        res = run_batch(
-            spark, bronze_dir, interval_end, existing=tables or None, **kwargs
-        )
-        holder["res"] = res
-        return res.gold
-
-    try:
-        version = publish_with_retry(store, build)
-    finally:
-        if "res" in holder:
-            holder["res"].release()
-    return holder["res"], version

@@ -39,6 +39,13 @@ This module gives every such entry an owner and a release path:
   (all scopes when omitted), the explicit end-of-sweep eviction a
   multi-corpus session needs.
 
+The hourly batch registers its bronze reads here too: ``read_bronze``
+caches each endpoint with ``cached(spark, bronze_dir, ("bronze", name),
+..., tables=(f"{name}.json",))``, and ``run_interval_range`` releases
+the interval's ``bronze_dir`` scope once its publish resolves. A
+rebuild after a lost CAS race therefore reuses an unchanged endpoint's
+read and re-reads a rewritten one.
+
 Corpus identity follows ``catalog.table``'s discipline: the scope key
 includes (path, mtime_ns, size) of the tables the entry derives from,
 so a test that rewrites a table in place gets fresh entries — and the
@@ -64,12 +71,13 @@ _REG_ATTR = "_rcdp_plan_cache_registry"
 def _table_identity(sf_dir: str, tables: tuple[str, ...]) -> tuple[Any, ...]:
     """File-system identity of the source tables a cached plan derives
     from (same (path, mtime_ns, size) key as catalog.table's scan
-    memoization). Unstat-able paths contribute their name only — the
-    cache then keys on sf_dir alone, which is still correct for the
-    immutable driver test data."""
+    memoization). A name ending in ``.json`` is that file (a bronze
+    endpoint); any other name is ``<name>.parquet``. Unstat-able paths
+    contribute their name only — the cache then keys on sf_dir alone,
+    which is still correct for the immutable driver test data."""
     ident: list[Any] = []
     for name in tables:
-        path = os.path.join(sf_dir, f"{name}.parquet")
+        path = os.path.join(sf_dir, name if name.endswith(".json") else f"{name}.parquet")
         try:
             st = os.stat(path)
             ident.append((name, st.st_mtime_ns, st.st_size))

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import plan_cache
 from .persist import ConcurrentWriteError, GoldStore
 
 
@@ -107,6 +108,7 @@ class IncrementalAggregateView:
             )
             delta: DataFrame | None
             cdc: DataFrame | None = None
+            ckpt = None  # this attempt's checkpoint, dropped once its publish resolves
             if watermark is None:
                 delta = None  # first build: full aggregation
             else:
@@ -148,7 +150,8 @@ class IncrementalAggregateView:
                         ),
                         neg,
                     ).filter(F.col("n_rows") > 0)
-                    new_view = new_view.localCheckpoint()
+                    ckpt = plan_cache.checkpoint(new_view)
+                    new_view = ckpt.value
                 finally:
                     cdc.unpersist()
             elif delta is None:
@@ -165,7 +168,8 @@ class IncrementalAggregateView:
                         self.store.read(self.view_table), self._aggregate(delta)
                     )
                     # materialize before unpersist: the publish stages it
-                    new_view = new_view.localCheckpoint()
+                    ckpt = plan_cache.checkpoint(new_view)
+                    new_view = ckpt.value
                 finally:
                     delta.unpersist()
             try:
@@ -177,6 +181,9 @@ class IncrementalAggregateView:
                 return n_delta
             except ConcurrentWriteError as e:
                 last_err = e  # the store moved: recompute against new truth
+            finally:
+                if ckpt is not None:
+                    ckpt.unpersist()
         raise last_err
 
 

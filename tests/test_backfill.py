@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from rustcheatersdatapipeline_spark import plan_cache
 from rustcheatersdatapipeline_spark.backfill import (
     PROGRESS_TABLE,
     completed_intervals,
@@ -27,6 +28,17 @@ def bronze(tmp_path):
     (tmp_path / "bronze").mkdir()
     write_fixtures(tmp_path / "bronze")
     return str(tmp_path / "bronze")
+
+
+def _assert_same_gold(store, clean):
+    """Every gold table of ``store`` holds ``clean``'s rows."""
+    for name in store.current_manifest()["tables"]:
+        if name == PROGRESS_TABLE:
+            continue
+        cols = sorted(store.read(name).columns)
+        assert sorted(map(tuple, store.read(name).select(*cols).collect())) == sorted(
+            map(tuple, clean.read(name).select(*cols).collect())
+        ), name
 
 
 def test_interval_schedule_is_airflow_shaped():
@@ -89,13 +101,7 @@ def test_backfill_crash_midrange_resumes_without_duplicates(
     # converged state == an uninterrupted serial run on a fresh store
     clean = GoldStore(spark, str(tmp_path / "gold_clean"))
     run_interval_range(spark, clean, lambda _: bronze, START, START + 3 * STEP)
-    for name in store.current_manifest()["tables"]:
-        if name == PROGRESS_TABLE:
-            continue
-        cols = sorted(store.read(name).columns)
-        assert sorted(map(tuple, store.read(name).select(*cols).collect())) == sorted(
-            map(tuple, clean.read(name).select(*cols).collect())
-        ), name
+    _assert_same_gold(store, clean)
 
 
 def test_progress_commits_atomically_with_gold(spark, tmp_path, bronze):
@@ -199,6 +205,75 @@ def test_backfill_releases_its_bronze_caches(spark, tmp_path, bronze, monkeypatc
     first = store.read_at("player_dim", ran[0][2])
     names = {r["persona_name"] for r in first.collect()}
     assert "renamed" in names and "cheater_one" not in names
+
+
+def test_backfill_bronze_reads_are_registry_owned_per_interval(
+    spark, tmp_path, bronze, monkeypatch
+):
+    """Over a 3-interval backfill the registry holds the 8 bronze reads
+    while an interval publishes and none once it has resolved; after the
+    call no persistent RDD it added is left."""
+    import rustcheatersdatapipeline_spark.backfill as bf
+
+    seen = {"publish": [], "batch": []}
+    real_publish = GoldStore.publish
+    real_run_batch = bf.run_batch
+
+    def publish(self, *a, **k):
+        seen["publish"].append(len(plan_cache.registered(spark, bronze)))
+        return real_publish(self, *a, **k)
+
+    def run_batch(*a, **k):
+        seen["batch"].append(len(plan_cache.registered(spark, bronze)))
+        return real_run_batch(*a, **k)
+
+    monkeypatch.setattr(GoldStore, "publish", publish)
+    monkeypatch.setattr(bf, "run_batch", run_batch)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    ran = bf.run_interval_range(spark, store, lambda _: bronze, START, START + 3 * STEP)
+    assert len(ran) == 3 and all(res.succeeded for _, res, _ in ran)
+    assert seen == {"publish": [8, 8, 8], "batch": [0, 0, 0]}
+    assert plan_cache.registered(spark, bronze) == []
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
+
+
+def test_lost_race_rebuild_reuses_unchanged_bronze_reads(
+    spark, tmp_path, bronze, monkeypatch
+):
+    """A build that loses the CAS race over unchanged bronze is rebuilt
+    on the registry's reads: 8 endpoint reads across both attempts, not
+    16, and the committed gold equals a run without a race."""
+    from rustcheatersdatapipeline_spark import pipeline
+
+    real_publish = GoldStore.publish
+    lost = []
+
+    def publish_losing_once(self, *a, **k):
+        if not lost:
+            lost.append(1)
+            raise ConcurrentWriteError("simulated lost race")
+        return real_publish(self, *a, **k)
+
+    real_read = pipeline._read_endpoint
+    reads = []
+
+    def counting_read(*a):
+        reads.append(a[-1])
+        return real_read(*a)
+
+    monkeypatch.setattr(pipeline, "_read_endpoint", counting_read)
+    clean = GoldStore(spark, str(tmp_path / "gold_clean"))
+    run_interval_range(spark, clean, lambda _: bronze, START, START + STEP)
+    reads.clear()
+    monkeypatch.setattr(GoldStore, "publish", publish_losing_once)
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    ((_, res, _),) = run_interval_range(spark, store, lambda _: bronze, START, START + STEP)
+    assert lost and res.succeeded
+    assert len(reads) == 8 and len(set(reads)) == 8
+    assert plan_cache.registered(spark, bronze) == []
+    _assert_same_gold(store, clean)
 
 
 @pytest.mark.slow

@@ -257,3 +257,39 @@ def test_max_view_still_rebuilds_on_update_merge(spark, tmp_path):
         for r in store.read("stats").collect()
     }
     assert got == {"a": (2, 12, 10)}
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def test_refresh_leaves_no_checkpoint_behind(spark, tmp_path):
+    """The append path and the CDC path each checkpoint the merged view
+    before publishing it; the checkpoint is dropped once the publish
+    resolves, so a refresh adds no persistent RDD."""
+    store = GoldStore(spark, str(tmp_path / "gold"))
+    view = IncrementalAggregateView(
+        store, "docs", "stats", keys=["source"], sums={"total_chars": "n_chars"}
+    )
+    b1 = [(1, "a", 10), (2, "a", 20), (3, "b", 5)]
+    store.publish_append({"docs": _batch(spark, b1)}, store.current_version())
+    view.refresh()
+
+    b2 = [(4, "b", 7)]
+    store.publish_append({"docs": _batch(spark, b2)}, store.current_version())
+    before = _persistent_rdd_ids(spark)
+    assert view.refresh() == 1  # append path
+    assert _persistent_rdd_ids(spark) - before == set()
+
+    store.merge("docs", _batch(spark, [(2, "a", 2)]), ["doc_id"])
+    before = _persistent_rdd_ids(spark)
+    calls = []
+    orig = store.changes_cdc
+    store.changes_cdc = lambda name, v: calls.append(v) or orig(name, v)
+    try:
+        view.refresh()  # CDC path
+    finally:
+        store.changes_cdc = orig
+    assert calls
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert _view_dict(view) == _expected([(1, "a", 10), (2, "a", 2), (3, "b", 5), (4, "b", 7)])

@@ -30,36 +30,39 @@ def test_full_batch_end_to_end(spark, tmp_path):
 
 @pytest.mark.slow
 def test_transactional_batches_through_gold_store(spark, tmp_path):
-    """Full intervals publishing through GoldStore: batch 2 reads batch
-    1's committed state from the manifest (cross-batch upsert
+    """Full intervals publishing through GoldStore: interval 2 reads
+    interval 1's committed state from the manifest (cross-batch upsert
     accumulation), replays are no-ops, versions advance, and the final
     tables equal the plain existing= chaining."""
-    from rustcheatersdatapipeline_spark.pipeline import run_batch_transactional
+    from rustcheatersdatapipeline_spark import plan_cache
+    from rustcheatersdatapipeline_spark.backfill import run_interval_range
     from rustcheatersdatapipeline_spark.warehouse.persist import GoldStore
 
     (tmp_path / "bronze").mkdir()
     write_fixtures(tmp_path / "bronze")
+    bronze = str(tmp_path / "bronze")
     store = GoldStore(spark, str(tmp_path / "gold"))
+    step = datetime.timedelta(hours=1)
+    start = INTERVAL_END - step
 
-    res1, v1 = run_batch_transactional(
-        spark, str(tmp_path / "bronze"), INTERVAL_END, store
-    )
+    ((_, res1, v1),) = run_interval_range(spark, store, lambda _: bronze, start, start + step)
     assert res1.succeeded and v1 == 1
     assert store.read("player_dim").count() == 2
 
     # identical second interval: key-idempotent upserts → same tables
-    res2, v2 = run_batch_transactional(
-        spark, str(tmp_path / "bronze"), INTERVAL_END, store
+    ((ie2, res2, v2),) = run_interval_range(
+        spark, store, lambda _: bronze, start, start + 2 * step
     )
     assert res2.succeeded and v2 == 2
-    plain = run_batch(
-        spark, str(tmp_path / "bronze"), INTERVAL_END, existing=res1.gold
-    )
-    for name in plain.gold:
-        cols = sorted(plain.gold[name].columns)  # partitionBy reorders cols
-        assert sorted(map(tuple, store.read(name).select(*cols).collect())) == sorted(
-            map(tuple, plain.gold[name].select(*cols).collect())
-        ), name
+    plain = run_batch(spark, bronze, ie2, existing=res1.gold)
+    try:
+        for name in plain.gold:
+            cols = sorted(plain.gold[name].columns)  # partitionBy reorders cols
+            assert sorted(map(tuple, store.read(name).select(*cols).collect())) == sorted(
+                map(tuple, plain.gold[name].select(*cols).collect())
+            ), name
+    finally:
+        plan_cache.release(spark, bronze)
 
 
 def test_missing_endpoint_is_skipped_not_fatal(spark, tmp_path):

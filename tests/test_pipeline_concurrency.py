@@ -18,7 +18,7 @@ import warnings
 import pytest
 from pyspark import StorageLevel
 
-from rustcheatersdatapipeline_spark import pipeline
+from rustcheatersdatapipeline_spark import pipeline, plan_cache
 from rustcheatersdatapipeline_spark.pipeline import read_bronze, run_batch
 from rustcheatersdatapipeline_spark.session import concurrently
 from rustcheatersdatapipeline_spark.warehouse.persist import ExpectationError, GoldStore
@@ -133,7 +133,7 @@ def test_batch_result_is_deterministic_under_the_pool(spark, tmp_path, monkeypat
             "game_playtime_fact", "groups_fact",
         ]
     finally:
-        res.release()
+        plan_cache.release(spark, str(tmp_path))
 
 
 def _job_tags(sc, job_id: int) -> list[str]:
@@ -165,7 +165,7 @@ def test_pool_jobs_keep_the_callers_group_and_tags(spark, tmp_path):
             try:
                 store.publish(res.gold, 0)
             finally:
-                res.release()
+                plan_cache.release(spark, str(tmp_path / "bronze"))
         last = last_job()
     finally:
         spark.removeTag(tag)

@@ -9,6 +9,7 @@ import json
 
 import pytest
 
+from rustcheatersdatapipeline_spark import plan_cache
 from rustcheatersdatapipeline_spark.operators.dedup import ValidationError, quality_counts
 from rustcheatersdatapipeline_spark.pipeline import read_bronze, run_batch, validate_silver
 from rustcheatersdatapipeline_spark.transforms.builders import FACT_TRANSFORMS
@@ -106,7 +107,6 @@ def test_fact_validation_is_one_sql_execution(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-        for cached in bronze.cached:
-            cached.unpersist()
+        plan_cache.release(spark, str(tmp_path))
     execs, jobs = _sql_executions(spark, group)
     assert jobs and len(execs) == 1

@@ -200,6 +200,34 @@ def test_inplace_rewrite_evicts_stale_generation(spark, sf_dir, tmp_path, clean_
     assert len(plan_cache.registered(spark, str(d))) == 1
 
 
+def test_rewritten_json_endpoint_evicts_only_its_own_read(spark, tmp_path, clean_registry):
+    """Bronze reads are keyed on their ``.json`` file's identity: a
+    rewritten endpoint gets a fresh entry, a sibling endpoint keeps its
+    memoized read, and releasing the directory drops both."""
+    import os
+
+    d = str(tmp_path)
+    for name in ("a", "b"):
+        with open(os.path.join(d, f"{name}.json"), "w") as fh:
+            fh.write('{"x": 1}')
+
+    def read(name, n):
+        return plan_cache.cached(
+            spark, d, ("bronze", name), lambda: spark.range(n), tables=(f"{name}.json",)
+        )
+
+    a1, b1 = read("a", 1), read("b", 2)
+    assert read("a", 3) is a1 and read("b", 4) is b1
+    with open(os.path.join(d, "a.json"), "w") as fh:
+        fh.write('{"x": 10}')
+    a2 = read("a", 5)
+    assert a2 is not a1 and a2.count() == 5
+    assert read("b", 6) is b1
+    assert len(plan_cache.registered(spark, d)) == 2
+    assert plan_cache.release(spark, d) == 2
+    assert plan_cache.registered(spark, d) == []
+
+
 def test_bm25_and_hybrid_checkpoints_coexist(spark, sf_dir, clean_registry):
     """ADVICE r13 (medium): bm25_search and hybrid_search_rrf used to
     share the "bm25_postq" checkpoint key, so building the second
