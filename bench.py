@@ -144,7 +144,12 @@ _DEFAULT_QUERY_REFS = {
     # (old/new = 1.033; sessions read 0.93/1.14/1.03 — the win grows to
     # 1.14x at the 100x replica where compute dominates overhead)
     "text_metrics": 1.029,
-    "ann_ivf_assign": 0.6273,
+    # re-recorded in the SAME commit as ann_ivf_assign's move to the
+    # vector kernel (one mapInPandas scan against the 16 collected seed
+    # centroids): old ref 0.6273 scaled by the median interleaved-A/B
+    # min ratio over three sf0.1 sessions on 4 cores (old/new = 1.400;
+    # sessions read 1.56/1.40/1.10)
+    "ann_ivf_assign": 0.448,
     "stratified_sample": 0.2197,
 }
 CALIB_QUERY_REFS: dict[str, float] = (

@@ -2,10 +2,20 @@
 
 All constants are fixed literals so Spark and the DuckDB oracle compute
 identical values; see plans/training.py for the paired SQL.
+
+This module owns the vector numeric contract: a dot product folds in
+array order, ``((0 + a0*b0) + a1*b1) + ...`` (DuckDB's
+``list_dot_product`` order), and a zero norm gives a NULL cosine that
+ranks after every defined one. It has two forms. The numpy kernel
+(``seq_dot`` through ``local_topk``) runs inside ``mapInPandas`` and
+serves every embedding search in plans/training.py. The Column form
+(``dot_product``, ``cosine``) serves the SQL-plan folds that have not
+moved to the kernel.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -104,11 +114,94 @@ def simhash_from_votes(bits: int = SIMHASH_BITS) -> Column:
     return F.expr(f"(CAST(0 AS BIGINT) + {terms})")
 
 
+def as_matrix(rows) -> np.ndarray:
+    """Stack equal-length vectors (a pandas column of arrays, a list of
+    lists) into a float64 (n × d) matrix. float32 → float64 widening is
+    exact, the same as ``as_double_array``'s cast."""
+    if len(rows) == 0:
+        return np.zeros((0, 0), dtype=np.float64)
+    return np.stack([np.asarray(r) for r in rows]).astype(np.float64, copy=False)
+
+
+def seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(m × n) dot products of the rows of ``A`` (m × d) against the
+    rows of ``B`` (n × d), accumulated SEQUENTIALLY per dimension: for
+    every cell exactly the fold ``((0 + a0*b0) + a1*b1) + …`` of
+    ``dot_product`` and DuckDB's ``list_dot_product``, so every double
+    is bit-identical to the oracle. (A matmul sums pairwise or blocked
+    and drifts in the last ulp; elementwise numpy ops are IEEE-exact.)
+    """
+    acc = np.zeros((A.shape[0], B.shape[0]), dtype=np.float64)
+    for j in range(A.shape[1]):
+        acc += A[:, j : j + 1] * B[None, :, j]
+    return acc
+
+
+def sq_norms(M: np.ndarray) -> np.ndarray:
+    """Squared norm of each row of ``M``: the same fold as
+    ``seq_dot(M, M)``'s diagonal (``dot_product(e, e)``)."""
+    acc = np.zeros(M.shape[0], dtype=np.float64)
+    for j in range(M.shape[1]):
+        acc += M[:, j] * M[:, j]
+    return acc
+
+
+def block_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(m × n) cosines ``dot / (sqrt(na) * sqrt(nb))`` — the oracle's
+    expression shape. A zero-norm row gives NaN (0/0); Arrow hands a
+    NaN to Spark as null, and DuckDB's 0/0 is NULL, so it stays a NULL
+    cosine in both engines."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return seq_dot(A, B) / (
+            np.sqrt(sq_norms(A))[:, None] * np.sqrt(sq_norms(B))[None, :]
+        )
+
+
+def sign_bits(E: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """Hyperplane signature of each row of ``E``: bit j is set iff
+    ``seq_dot(e, planes[j]) > 0``, as an int64. A dot of exactly 0 sets
+    no bit; a NaN dot (non-finite input) sets it, because both engines
+    order NaN above every number."""
+    dots = seq_dot(E, planes)
+    hit = (dots > 0) | np.isnan(dots)
+    weights = np.left_shift(np.int64(1), np.arange(planes.shape[0], dtype=np.int64))
+    return (hit.astype(np.int64) * weights[None, :]).sum(axis=1, dtype=np.int64)
+
+
+def hamming_within(a: np.ndarray, b: np.ndarray, r: int) -> np.ndarray:
+    """Elementwise ``popcount(a ^ b) <= r`` over int64 signatures
+    (broadcasting): clear the lowest set bit ``r`` times, then test
+    for zero."""
+    d = np.bitwise_xor(a, b)
+    for _ in range(r):
+        d = d & (d - 1)
+    return d == 0
+
+
+def local_topk(scores: np.ndarray, ids: np.ndarray, k: int, mask=None):
+    """Positions ``(rows, cols)`` of each row's top ``k`` columns under
+    (score DESC with NaN last, id ASC) — the global rank window's order,
+    so a task's local top-k keeps every row the window can rank ≤ k.
+    ``ids`` holds one id per column; a column where ``mask`` is False
+    is never chosen."""
+    keys = [np.broadcast_to(ids, scores.shape), -scores]
+    if mask is not None:
+        keys.append(~mask)
+    cols = np.lexsort(keys, axis=-1)[:, :k]
+    rows = np.repeat(np.arange(scores.shape[0]), cols.shape[1])
+    cols = cols.ravel()
+    if mask is not None:
+        keep = mask[rows, cols]
+        rows, cols = rows[keep], cols[keep]
+    return rows, cols
+
+
 def cosine(dot: Column, norm_a: Column, norm_b: Column) -> Column:
     """cos = dot / (sqrt(na) * sqrt(nb)) — expression shape mirrored
     exactly in the DuckDB oracle so doubles stay bit-identical. A
     zero-norm side makes the cosine NULL, as DuckDB's 0/0 is, instead
-    of raising DIVIDE_BY_ZERO under ANSI mode."""
+    of raising DIVIDE_BY_ZERO under ANSI mode. ``block_cosine`` is the
+    kernel form."""
     return F.try_divide(dot, F.sqrt(norm_a) * F.sqrt(norm_b))
 
 
@@ -117,7 +210,9 @@ def dot_product(a: Column, b: Column) -> Column:
 
     zip_with + aggregate keeps it JVM-side; summation order is array
     order in both Spark and DuckDB's list_dot_product, so results are
-    bit-identical doubles.
+    bit-identical doubles. ``seq_dot`` is the kernel form; this one is
+    interpreted per row (CodegenFallback), so the embedding searches
+    use the kernel.
     """
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x

@@ -6,11 +6,11 @@ dup-family clustering:
 
   - while the quotient graph exceeds a fixed edge budget: contract
     every node into its minimum neighborhood label
-    (``l(v) = min(v, min N(v))``) and rewrite edges between labels.
-    Every endpoint of every edge that is not a local minimum disappears,
-    so quotient NODES shrink by at least half per round (worst case —
-    a path; star-shaped dup clusters collapse in one round), giving
-    O(log(n / budget)) rounds of ONE equi-join shuffle each.
+    (``l(v) = min(v, min N(v))``) and rewrite edges between labels,
+    ONE equi-join shuffle per round. Star-shaped dup clusters collapse
+    in one round, but the worst case is O(diameter) rounds: on a path
+    numbered in order every node takes its predecessor's label, so
+    each round contracts a single edge (measured).
   - once the quotient fits the budget, finish with a driver-side
     union-find over ≤ ``CC_FINISH_BYTE_BUDGET`` bytes of (label, label)
     longs (96 MiB of cached blocks ≈ 1M edges) and broadcast the root
@@ -518,16 +518,15 @@ def triangle_counts(
     # each undirected edge appears exactly once
     fwd = F.col("dega") < F.col("degb")
     tie = (F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))
-    # the returned frame reads this checkpoint, so its handle is not
-    # released here
-    o = checkpoint(
-        ed.select(
-            F.when(fwd | tie, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(fwd | tie, F.col("dega")).otherwise(F.col("degb")).alias("du"),
-            F.when(fwd | tie, F.col("b")).otherwise(F.col("a")).alias("v"),
-            F.when(fwd | tie, F.col("degb")).otherwise(F.col("dega")).alias("dv"),
-        )
-    ).value
+    # no checkpoint: the e1, e2 and closing consumers read the
+    # orientation through ReusedExchange (executed plan), so the degree
+    # chain runs once and no persistent RDD outlives the call
+    o = ed.select(
+        F.when(fwd | tie, F.col("a")).otherwise(F.col("b")).alias("u"),
+        F.when(fwd | tie, F.col("dega")).otherwise(F.col("degb")).alias("du"),
+        F.when(fwd | tie, F.col("b")).otherwise(F.col("a")).alias("v"),
+        F.when(fwd | tie, F.col("degb")).otherwise(F.col("dega")).alias("dv"),
+    )
     e1, e2 = o.alias("e1"), o.alias("e2")
     # wedges (u; v, w) with v before w in orientation order — the
     # closing edge, if present, is then oriented exactly v -> w

@@ -176,29 +176,37 @@ def build_embed_index(
 ) -> DataFrame:
     """Persisted embedding index rows: (id, e, nrm, tbl, bucket) — one
     row per (vector, hash table), buckets from the committed seed-42
-    hyperplanes (plans/training.py machinery, same literals as the
-    declared ANN queries). Like the text index, ``nplanes`` is part of
+    hyperplanes through the same sign-bit kernel as the declared ANN
+    queries (plans/training.py ``_lsh_signatures``), in one
+    ``mapInPandas`` pass. Like the text index, ``nplanes`` is part of
     the index contract: store it alongside and reuse it per batch.
 
     The payload IS the embedding (vectors are their own signatures), so
     the index costs L (=4 tables) × the corpus vector bytes — the join
     key that avoids the all-pairs scan, not a compression trick.
     """
-    from ..functions.similarity import as_double_array, dot_product
-    from ..plans.training import LSH_TABLES, _lsh_bucket_col
+    import numpy as np
+    import pandas as pd
 
-    e = as_double_array(vec_col)
-    base = emb.select(
-        F.col(id_col).alias("vec_id"), e.alias("e"), dot_product(e, e).alias("nrm")
-    )
-    sigs = F.array(
-        *[
-            F.struct(F.lit(t).alias("tbl"), _lsh_bucket_col("e", nplanes, t).alias("bucket"))
-            for t in range(LSH_TABLES)
-        ]
-    )
-    return base.select("vec_id", "e", "nrm", F.explode(sigs).alias("tb")).select(
-        "vec_id", "e", "nrm", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
+    from ..functions.similarity import sq_norms
+    from ..plans.training import LSH_TABLES, _embedding_scan, _lsh_signatures
+
+    signatures = _lsh_signatures(nplanes)
+
+    def rows(ids, mat):
+        return pd.DataFrame(
+            {
+                "vec_id": np.repeat(ids, LSH_TABLES),
+                "e": list(np.repeat(mat, LSH_TABLES, axis=0)),
+                "nrm": np.repeat(sq_norms(mat), LSH_TABLES),
+                "tbl": np.tile(np.arange(LSH_TABLES, dtype=np.int32), len(ids)),
+                "bucket": signatures(mat).ravel(),
+            }
+        )
+
+    vecs = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    return _embedding_scan(
+        vecs, rows, "vec_id bigint, e array<double>, nrm double, tbl int, bucket bigint"
     )
 
 

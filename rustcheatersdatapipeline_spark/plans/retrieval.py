@@ -324,9 +324,9 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") != F.col("query_id"))
         .select("query_id", "doc_id", rrf)
     )
-    # dense arm: embed_knn_bruteforce's exact compute (numpy block dots
-    # in mapInPandas, bit-identical doubles — see _knn_topk), with the
-    # query set restricted UP FRONT to the fused probes — per-query
+    # dense arm: embed_knn_bruteforce's exact compute (the vector
+    # kernel in mapInPandas, bit-identical doubles — see _knn_topk),
+    # with the query set restricted UP FRONT to the fused probes — per-query
     # ranks are unchanged (the rank window partitions by query), and
     # the corpus side stops paying dot products for queries the fusion
     # drops

@@ -22,9 +22,13 @@ Scale design notes (the 100 TB story, per operator):
   via 4-band pigeonhole join (provably complete for hamming ≤ 3, so it
   equals the brute-force oracle while staying O(candidates) not O(n²)).
 - Embedding cosine: brute-force is the correctness baseline; the
-  LSH-bucketed variant (random hyperplanes, each sign a sequential
-  ``zip_with`` + ``aggregate`` dot-product fold) is the scale path —
-  bucket-local search only.
+  LSH-bucketed and IVF variants are the scale path — probe-local
+  search only. Every embedding search computes its cosines, hyperplane
+  sign bits and top-k through the numpy kernel of
+  ``functions/similarity.py``, which owns the numeric contract (the
+  array-order dot fold, a zero norm's NULL cosine ranked last): one
+  ``mapInPandas`` scan of the corpus splits against a bounded query or
+  centroid block, local top-k per task, one global rank window.
 """
 
 from __future__ import annotations
@@ -32,6 +36,8 @@ from __future__ import annotations
 import functools
 from collections.abc import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -44,12 +50,18 @@ from ..functions.similarity import (
     MINHASH_PERMS,
     SIMHASH_BITS,
     as_double_array,
+    as_matrix,
+    block_cosine,
     cosine,
     dot_product,
+    hamming_within,
+    local_topk,
     minhash_bands,
     minhash_signature,
+    sign_bits,
     simhash_column,
     simhash_from_votes,
+    sq_norms,
 )
 from ..functions.text import (
     LANG_MARKERS,
@@ -728,47 +740,50 @@ def _simhash_pairs(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 def _vectors(spark, sf_dir, partitions: int | None = None):
-    """Vectors with precomputed squared norms.
-
-    A small parquet reads as ONE partition, which would serialize the
-    downstream nested-loop pair join on a single core — repartition so
-    the O(n²) work spreads across the cluster.
-    """
+    """(vec_id, e) with ``e`` widened to array<double>, for the SQL-plan
+    folds (product and int8 quantization). ``partitions`` spreads their
+    interpreted per-row fold off the single partition a small parquet
+    reads as."""
     emb = table(spark, sf_dir, "embeddings")
     if partitions:
         emb = emb.repartition(partitions)
-    e = as_double_array("embedding")
-    return emb.select("vec_id", e.alias("e"), dot_product(e, e).alias("nrm"))
+    return emb.select("vec_id", as_double_array("embedding").alias("e"))
 
 
-def _seq_dot_blocks(A, B):
-    """Pairwise dot products of the rows of ``A`` (m×d) against the rows
-    of ``B`` (n×d) with SEQUENTIAL per-dimension accumulation.
-
-    ``acc = acc + A[:,j]·B[:,j]`` for j in array order performs, for
-    every (row_a, row_b) cell, exactly the scalar fold
-    ``((0 + a0*b0) + a1*b1) + …`` — the summation order of both the
-    Spark ``aggregate(zip_with(...))`` expression and DuckDB's
-    ``list_dot_product`` — so the doubles stay bit-identical to the
-    oracle. (A matmul would use pairwise/blocked summation and drift in
-    the last ulp.) Elementwise numpy ops are IEEE-exact, so vectorizing
-    across pairs does not change any individual result.
-    """
-    import numpy as np
-
-    acc = np.zeros((A.shape[0], B.shape[0]), dtype=np.float64)
-    for j in range(A.shape[1]):
-        acc += A[:, j : j + 1] * B[None, :, j]
-    return acc
+def _embeddings(spark, sf_dir):
+    return table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
 
-def _seq_sq_norms(M):
-    import numpy as np
+def _embedding_scan(vecs, fn, schema: str):
+    """``fn(ids, mat)`` → pandas rows, per Arrow batch of (vec_id,
+    embedding) rows, through ONE ``mapInPandas`` on the input's NATURAL
+    splits: the per-task work is vectorized kernel code, so no
+    repartition is needed to spread it."""
 
-    acc = np.zeros(M.shape[0], dtype=np.float64)
-    for j in range(M.shape[1]):
-        acc += M[:, j] * M[:, j]
-    return acc
+    def run(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            out = fn(pdf["vec_id"].to_numpy(dtype="int64"), as_matrix(pdf["embedding"]))
+            if len(out):
+                yield out
+
+    return vecs.mapInPandas(run, schema)
+
+
+def _bounded_block(vecs, bound: int):
+    """(ids, matrix) of a query or centroid block — at most ``bound``
+    rows by construction (KNN_QUERY_MAX_ID or BM25_QUERY_MAX_ID
+    queries, IVF_SEEDS centroids) — collected to the driver, sorted by
+    vec_id. It collects ``bound + 1`` rows and raises if it got more,
+    so a filter that stops bounding the block fails here instead of
+    pulling the corpus onto the driver."""
+    rows = vecs.select("vec_id", "embedding").limit(bound + 1).collect()
+    if len(rows) > bound:
+        raise ValueError(f"driver block holds more than its bound of {bound} vectors")
+    rows.sort(key=lambda r: r["vec_id"])
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    return ids, as_matrix([r["embedding"] for r in rows])
 
 
 #: Target rows per matrix block in embed_neardup_cosine. Block-pair count
@@ -785,26 +800,20 @@ def embed_neardup_cosine(spark, sf_dir):
     classic distributed block nested-loop — vectors are packed into
     B ≈ n/512 matrix blocks (one Arrow row per block, ids sorted), the
     B·(B+1)/2 unordered block pairs are formed by two equi-joins against
-    a tiny pair grid, and each pair row runs a numpy block-cosine inside
-    ``mapInPandas``. Driver memory is O(1) (the only driver value is the
-    block count); communication is O(n·B) shuffle — the standard
-    distributed all-pairs cost — and only matching pairs leave the
-    workers. (An earlier revision broadcast the whole corpus from a
-    driver ``toPandas()`` — a driver OOM at 100× data; VERDICT r4 #2.)
+    a tiny pair grid, and each pair row runs the kernel's
+    ``block_cosine`` inside ``mapInPandas``. Driver memory is O(1) (the
+    only driver value is the block count); communication is O(n·B)
+    shuffle — the standard distributed all-pairs cost — and only
+    matching pairs leave the workers. (An earlier revision broadcast
+    the whole corpus from a driver ``toPandas()`` — a driver OOM at
+    100× data; VERDICT r4 #2.)
 
     Each unordered id pair {i, j} lives in exactly one block pair (each
     id is in exactly one block and the grid has blk_a ≤ blk_b once), so
     emitting normalized (min, max) per match yields no duplicates;
     diagonal blocks mask to ids_a < ids_b to avoid self/double pairs.
-
-    Numeric contract: ``_seq_dot_blocks`` keeps the per-pair summation
-    order identical to DuckDB's ``list_dot_product``, so the emitted
-    doubles still hash-match the oracle bit-for-bit.
     """
-    import numpy as np
-    import pandas as pd
-
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = _embeddings(spark, sf_dir)
     # bounded driver transfer: ONE long (like kmeans' k×d centroids),
     # memoized (plan_cache.scalar) so the count job is not re-run per rep
     n_blocks = max(1, -(-_emb_count(spark, sf_dir) // EMBED_BLOCK_ROWS))
@@ -813,7 +822,7 @@ def embed_neardup_cosine(spark, sf_dir):
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf["vec_id"].to_numpy(dtype=np.int64))
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)[order]
-        mat = np.stack(pdf["embedding"].to_list()).astype(np.float64)[order]
+        mat = as_matrix(pdf["embedding"])[order]
         return pd.DataFrame(
             {
                 "blk": [int(pdf["blk"].iloc[0])],
@@ -881,13 +890,7 @@ def embed_neardup_cosine(spark, sf_dir):
             for r in pdf.itertuples(index=False):
                 ids_a = np.asarray(r.ids_a, dtype=np.int64)
                 ids_b = np.asarray(r.ids_b, dtype=np.int64)
-                mat_a = np.array([np.asarray(v) for v in r.mat_a], dtype=np.float64)
-                mat_b = np.array([np.asarray(v) for v in r.mat_b], dtype=np.float64)
-                dots = _seq_dot_blocks(mat_a, mat_b)
-                cos = dots / (
-                    np.sqrt(_seq_sq_norms(mat_a))[:, None]
-                    * np.sqrt(_seq_sq_norms(mat_b))[None, :]
-                )
+                cos = block_cosine(as_matrix(r.mat_a), as_matrix(r.mat_b))
                 if r.blk_a == r.blk_b:
                     keep = (cos >= thr) & (ids_a[:, None] < ids_b[None, :])
                     ra, rb = np.nonzero(keep)
@@ -902,111 +905,68 @@ def embed_neardup_cosine(spark, sf_dir):
     return out.orderBy("vec_a", "vec_b")
 
 
-def _knn_topk(spark, sf_dir, query_max_id: int):
-    """Ranked exact top-KNN_K cosine neighbors (rnk 1..KNN_K, ties by
-    neighbor_id) for query vectors vec_id < query_max_id — the shared
-    brute-force arm behind ``embed_knn_bruteforce`` and
-    ``hybrid_search_rrf``.
-
-    r14 (§4.2): the per-pair cosine used to be the interpreted
-    ``aggregate(zip_with(...))`` fold over a broadcast join of
-    query × corpus — every (query, vector, dimension) step ran the
-    higher-order-lambda interpreter (CodegenFallback), ~q·n·d lambda
-    evaluations per invocation. The same IEEE fold now runs vectorized:
-    the query block — BOUNDED by construction (< query_max_id rows,
-    the kmeans-centroid class of documented bounded driver transfer)
-    — is collected once per invocation (an eager build-time job, like
-    the registry checkpoints) and closed over a ``mapInPandas`` that
-    computes numpy block dots with sequential per-dimension
-    accumulation (``_seq_dot_blocks`` — the embed_neardup_cosine
-    proof: elementwise numpy ops are IEEE-exact and the fold order
-    matches both the old expression and the oracle's
-    list_dot_product, so every emitted double is bit-identical).
-    Each task emits only its local top-KNN_K per query under the
-    global order (cos DESC, neighbor_id ASC) — the global top-K is a
-    subset of the union of per-task top-Ks — so the rank window
-    shuffles O(K · tasks) rows instead of q·n.
-    """
-    import numpy as np
-    import pandas as pd
-
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qrows = emb.filter(F.col("vec_id") < query_max_id).collect()
-    schema = "query_id bigint, neighbor_id bigint, cos double"
-    if not qrows:
-        return spark.createDataFrame([], schema + ", rnk int")
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    # float32 → float64 widening is exact, same as as_double_array's cast
-    qmat = np.array([list(r["embedding"]) for r in qrows], dtype=np.float64)
-    qn = np.sqrt(_seq_sq_norms(qmat))
-    k = KNN_K
-
-    def topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids_b = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mat_b = np.stack(pdf["embedding"].to_list()).astype(np.float64)
-            cos = _seq_dot_blocks(qmat, mat_b) / (
-                qn[:, None] * np.sqrt(_seq_sq_norms(mat_b))[None, :]
-            )
-            out = []
-            for qi in range(len(q_ids)):
-                # self-hit excluded exactly as the old join condition
-                # (a.vec_id != b.vec_id); ranks are unchanged because
-                # the window partitions by query
-                idx = np.nonzero(ids_b != q_ids[qi])[0]
-                if idx.size == 0:
-                    continue
-                # a zero-norm vector's cosine is 0/0 = NaN; lexsort puts
-                # it last, and so does the window: Arrow's pandas
-                # conversion emits NaN as null (DESC NULLS LAST), the
-                # oracle's 0/0 is NULL too
-                order = np.lexsort((ids_b[idx], -cos[qi, idx]))[:k]
-                take = idx[order]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(take.size, q_ids[qi], dtype=np.int64),
-                            "neighbor_id": ids_b[take],
-                            "cos": cos[qi, take],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    # corpus side rides the scan's NATURAL input-split parallelism
-    # (maxPartitionBytes-derived — scale-adaptive, unlike the old
-    # _vectors(partitions=64) round-robin, which existed to spread the
-    # interpreted per-pair fold and cost an exchange plus two Python
-    # task waves here). A single small-corpus task is fine now: the
-    # per-task numpy cost is q·rows·d vectorized (~ms at test scale),
-    # and at 100 TB the file splits supply the parallelism. Only
-    # vec_id + embedding cross the Arrow boundary (§4.1: pass only the
-    # needed columns).
-    pairs = emb.mapInPandas(topk, schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
+def _per_query_topk(pairs, score: str, desc: bool = True):
+    """The per-query top-KNN_K window of every search builder: ``pairs``
+    (query_id, neighbor_id, <score>) ranked per query by ``score``
+    (DESC for a similarity, ASC for a distance; ties → lower
+    neighbor_id; a NULL score last), cut at KNN_K and presented as
+    (query_id, rnk, neighbor_id, <score>)."""
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(order, "neighbor_id")
     return (
-        pairs.select(
-            "query_id", "neighbor_id", "cos", F.row_number().over(w).alias("rnk")
-        )
-        .filter(F.col("rnk") <= k)
+        pairs.select("query_id", "neighbor_id", score, F.row_number().over(w).alias("rnk"))
+        .filter(F.col("rnk") <= KNN_K)
+        .select("query_id", F.col("rnk").cast("int").alias("rnk"), "neighbor_id", score)
     )
+
+
+def _knn_topk(spark, sf_dir, query_max_id: int, candidates=None):
+    """Ranked cosine top-KNN_K neighbors (query_id, rnk, neighbor_id,
+    cos) of the query vectors vec_id < query_max_id — the shape of every
+    embedding search (brute force, hybrid's dense arm, LSH, IVF).
+
+    The query block is collected once per invocation (``_bounded_block``)
+    and closed over one ``_embedding_scan`` of the corpus. Each task
+    computes the kernel's ``block_cosine`` of every query against its
+    vectors and keeps only its ``local_topk`` per query under the
+    window's own order (cos DESC with NULL last, neighbor_id ASC); the
+    global top-K is a subset of the union of the per-task top-Ks, so
+    the rank window shuffles O(K · tasks) rows instead of q·n.
+
+    A vector never neighbors itself. ``candidates``, when given, narrows
+    the neighbors further: ``candidates(q_mat)`` runs once on the
+    driver and returns ``mask(mat)``, the (queries × batch) boolean
+    matrix of allowed pairs — the bucket probe of the LSH search, the
+    probed lists of the IVF search.
+    """
+    q_ids, q_mat = _bounded_block(
+        _embeddings(spark, sf_dir).filter(F.col("vec_id") < query_max_id), query_max_id
+    )
+    allowed = candidates(q_mat) if candidates is not None else None
+
+    def topk(ids, mat):
+        cos = block_cosine(q_mat, mat)
+        mask = ids[None, :] != q_ids[:, None]
+        if allowed is not None:
+            mask &= allowed(mat)
+        rows, cols = local_topk(cos, ids, KNN_K, mask)
+        return pd.DataFrame(
+            {"query_id": q_ids[rows], "neighbor_id": ids[cols], "cos": cos[rows, cols]}
+        )
+
+    pairs = _embedding_scan(
+        _embeddings(spark, sf_dir), topk, "query_id bigint, neighbor_id bigint, cos double"
+    )
+    return _per_query_topk(pairs, "cos")
 
 
 def embed_knn_bruteforce(spark, sf_dir):
     """Brute-force cosine top-k (k=5) for query vectors vec_id < 20.
 
     Exact-ANN baseline; ties broken by neighbor_id for determinism.
-    Compute shape: ``_knn_topk`` (numpy block dots inside mapInPandas,
-    bit-identical doubles — which see).
+    Compute shape: ``_knn_topk`` with no candidate mask.
     """
-    return (
-        _knn_topk(spark, sf_dir, KNN_QUERY_MAX_ID)
-        .select("query_id", F.col("rnk").cast("int").alias("rnk"), "neighbor_id", "cos")
-        .orderBy("query_id", "rnk")
-    )
+    return _knn_topk(spark, sf_dir, KNN_QUERY_MAX_ID).orderBy("query_id", "rnk")
 
 
 #: Target bucket occupancy for the hyperplane LSH index. The plane
@@ -1067,12 +1027,10 @@ def lsh_num_planes(spark, sf_dir) -> int:
 
 def _lsh_planes() -> list[list[float]]:
     """Seed-42 random hyperplanes ((LSH_TABLES · LSH_MAX_PLANES) × 64),
-    shared verbatim by the Spark plan and the DuckDB oracle as
-    full-precision decimal literals (``repr`` round-trips float64
-    exactly in both parsers). Table t uses rows
+    shared verbatim by the kernel and the DuckDB oracle (as
+    full-precision decimal literals: ``repr`` round-trips float64
+    exactly). Table t uses rows
     [t·LSH_MAX_PLANES, t·LSH_MAX_PLANES + nplanes)."""
-    import numpy as np
-
     return [
         [float(x) for x in row]
         for row in np.random.RandomState(42).randn(LSH_TABLES * LSH_MAX_PLANES, 64)
@@ -1084,33 +1042,20 @@ def _table_planes(nplanes: int, tbl: int) -> list[tuple[int, list[float]]]:
     return list(enumerate(_lsh_planes()[base : base + nplanes]))
 
 
-def _lsh_bucket_col(e_col: str, nplanes: int, tbl: int = 0):
-    """nplanes-bit signature for hash table ``tbl``: bit j =
-    sign(e · plane_j), folded to one BIGINT. The dot product is a
-    sequential zip_with+aggregate fold — the exact summation order of
-    DuckDB's ``list_dot_product``, so the sign (and therefore every
-    bucket id) is bit-identical across engines. The fold is a
-    higher-order function, which Spark evaluates interpreted
-    (CodegenFallback) inside the JVM — no Python in the hot path.
+def _lsh_signatures(nplanes: int, tables: int = LSH_TABLES):
+    """``signatures(mat)``: the (n × tables) int64 bucket ids of the
+    rows of ``mat``, column t holding table t's ``sign_bits`` over its
+    ``nplanes`` planes. Bit j is set iff the sequential fold of
+    e · plane_j is > 0 — the fold of DuckDB's ``list_dot_product`` — so
+    every bucket id equals the oracle's ``_lsh_bucket_sql``."""
+    planes = [
+        np.array([p for _, p in _table_planes(nplanes, t)]) for t in range(tables)
+    ]
 
-    Emitted as ONE ``F.expr`` string (single JVM parse): the literal
-    form (64 doubles × nplanes × tables as individual ``F.lit`` calls)
-    cost ~0.3 s of py4j round trips PER TABLE at plan-build time —
-    billed on every bench rep. ``repr`` round-trips float64 exactly in
-    both Python and the SQL parser, so the parsed literals (and every
-    bucket id) are bit-identical to the Column-API form."""
-    terms = []
-    for j, plane in _table_planes(nplanes, tbl):
-        arr = "array(" + ", ".join(f"{v!r}D" for v in plane) + ")"
-        d = (
-            f"aggregate(zip_with({e_col}, {arr}, (x, y) -> x * y), "
-            "0.0D, (acc, x) -> acc + x)"
-        )
-        terms.append(
-            f"(CASE WHEN {d} > 0 THEN CAST({1 << j} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END)"
-        )
-    return F.expr("(CAST(0 AS BIGINT) + " + " + ".join(terms) + ")")
+    def signatures(mat):
+        return np.stack([sign_bits(mat, p) for p in planes], axis=1)
+
+    return signatures
 
 
 def _lsh_nplanes_sql() -> str:
@@ -1142,102 +1087,52 @@ def ann_lsh_buckets(spark, sf_dir):
     """Scale-path ANN index build: random-hyperplane LSH bucketing.
 
     Each vector's signature is sign(e · plane_j) folded into a bucket
-    id; downstream search joins only within buckets (see
-    ann_lsh_search). The hyperplanes are emitted as literal constants
-    into the DuckDB oracle, so the 'approximate' index is still exactly
-    reproducible — same buckets, same counts, hash-verified. The active
-    plane count derives from corpus size (see LSH_TARGET_BUCKET), so
-    bucket occupancy stays ≈ LSH_TARGET_BUCKET at any n.
+    id (``_lsh_signatures``, one kernel pass over the corpus splits);
+    downstream search runs only within buckets (see ann_lsh_search).
+    The hyperplanes are emitted as literal constants into the DuckDB
+    oracle, so the 'approximate' index is still exactly reproducible —
+    same buckets, same counts, hash-verified. The active plane count
+    derives from corpus size (see LSH_TARGET_BUCKET), so bucket
+    occupancy stays ≈ LSH_TARGET_BUCKET at any n.
     """
-    emb = _vectors(spark, sf_dir, partitions=32)
-    np_ = lsh_num_planes(spark, sf_dir)
+    signatures = _lsh_signatures(lsh_num_planes(spark, sf_dir), tables=1)
+    buckets = _embedding_scan(
+        _embeddings(spark, sf_dir),
+        lambda ids, mat: pd.DataFrame({"vec_id": ids, "bucket": signatures(mat)[:, 0]}),
+        "vec_id bigint, bucket bigint",
+    )
     return (
-        emb.select("vec_id", _lsh_bucket_col("e", np_).alias("bucket"))
-        .groupBy("bucket")
+        buckets.groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_vecs"), F.min("vec_id").alias("min_vec_id"))
         .orderBy("bucket")
     )
 
 
-def _per_query_topk(pairs, score: str, desc: bool = True):
-    """The per-query top-KNN_K tail of every search builder: ``pairs``
-    (query_id, neighbor_id, <score>) ranked per query by ``score``
-    (DESC for a similarity, ASC for a distance; ties → lower
-    neighbor_id), cut at KNN_K and presented as (query_id, rnk,
-    neighbor_id, <score>) in (query_id, rnk) order."""
-    order = F.col(score).desc() if desc else F.col(score).asc()
-    w = Window.partitionBy("query_id").orderBy(order, "neighbor_id")
-    return (
-        pairs.select("query_id", "neighbor_id", score, F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= KNN_K)
-        .select("query_id", F.col("rnk").cast("int").alias("rnk"), "neighbor_id", score)
-        .orderBy("query_id", "rnk")
-    )
-
-
 def _lsh_search(spark, sf_dir, multiprobe: bool):
     """Bucket-local cosine top-KNN_K over the LSH_TABLES hash tables for
-    the query set vec_id < KNN_QUERY_MAX_ID. Each query probes its own
-    bucket in every table, plus — with ``multiprobe`` — every bucket
-    at Hamming distance 1 (one of the nplanes signs flipped); the plain
-    search is the same plan with zero flipped bits.
+    the query set vec_id < KNN_QUERY_MAX_ID. A vector is a candidate of
+    a query when, in some table, its bucket is the query's own — or,
+    with ``multiprobe``, one hyperplane sign away (Hamming distance ≤ 1
+    between the signatures): the oracle's probe set, bucket ⊕ one plane
+    bit, expressed as a mask.
 
-    The corpus is bucketed once per table by ``_lsh_bucket_col`` — one
-    row per (vector, table), L× the corpus rows — and the probe
-    expansion happens on the QUERY side only (bounded by construction,
-    so the broadcast hint is safe), as an exploded literal array: the
-    join stays an equi-join and no plan ever forms all pairs."""
-    v = _vectors(spark, sf_dir, partitions=32)
-    np_ = lsh_num_planes(spark, sf_dir)
-    sigs = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"), _lsh_bucket_col("e", np_, t).alias("bucket")
-            )
-            for t in range(LSH_TABLES)
-        ]
-    )
-    b = v.select("vec_id", "e", "nrm", F.explode(sigs).alias("tb")).select(
-        "vec_id", "e", "nrm", "tb.tbl", "tb.bucket"
-    )
-    flips = np_ if multiprobe else 0
-    probes = F.array(
-        F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(flips)]
-    )
-    q = (
-        b.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
-        .select("vec_id", "e", "nrm", "tbl", F.explode(probes).alias("bucket"))
-        .alias("a")
-    )
-    x = b.alias("b")
-    cos = cosine(
-        dot_product(F.col("a.e"), F.col("b.e")), F.col("a.nrm"), F.col("b.nrm")
-    ).alias("cos")
-    pairs = (
-        F.broadcast(q)
-        .join(
-            x,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("query_id"),
-            F.col("b.vec_id").alias("neighbor_id"),
-            cos,
-        )
-        # one hash(query_id) exchange serves the dedup AND the rank
-        # window (guide §2.4): hashpartitioning(query_id) satisfies the
-        # distinct's clustered distribution — query_id is a subset of
-        # its keys — where the distinct's own all-column exchange did
-        # NOT satisfy the window, so a second shuffle followed.
-        # Candidates per query are bounded (≈ LSH_TABLES · (probes) ·
-        # LSH_TARGET_BUCKET), so per-partition state is bounded at any
-        # corpus size. (r13)
-        .repartition("query_id")
-        .distinct()  # a pair found by several tables or probes ranks once
-    )
-    return _per_query_topk(pairs, "cos")
+    The query buckets are computed once, on the driver, by the same
+    sign-bit kernel the corpus scan runs, and the mask joins
+    ``_knn_topk``'s self-exclusion inside the scan: no pair join, no
+    duplicate candidate to drop."""
+    signatures = _lsh_signatures(lsh_num_planes(spark, sf_dir))
+    flips = 1 if multiprobe else 0
+
+    def candidates(q_mat):
+        q_buckets = signatures(q_mat)
+
+        def mask(mat):
+            near = hamming_within(q_buckets[:, None, :], signatures(mat)[None, :, :], flips)
+            return np.any(near, axis=2)
+
+        return mask
+
+    return _knn_topk(spark, sf_dir, KNN_QUERY_MAX_ID, candidates).orderBy("query_id", "rnk")
 
 
 def ann_lsh_search(spark, sf_dir):
@@ -1264,8 +1159,6 @@ def ann_lsh_search_multiprobe(spark, sf_dir):
     table — the buckets a near neighbor most likely fell into when it
     landed on the other side of one plane.
 
-    The probe expansion happens on the QUERY side only, so the corpus
-    side stays bucketed exactly once and the join stays an equi-join.
     Candidates per query ≈ LSH_TABLES · (nplanes + 1) ·
     LSH_TARGET_BUCKET — the (p+1) factor grows logarithmically with
     corpus size, the price of the recall lift over the plain search
@@ -1401,45 +1294,56 @@ def embed_label_centroids(spark, sf_dir):
     )
 
 
-def _seed_centroid_ranks(spark, sf_dir, *carry: str):
-    """Every vector against the 16 seed centroids (vectors vec_id < 16),
-    ranked by cosine (ties → lower centroid id): (vec_id, *carry,
-    centroid_id, rn). ``rn == 1`` is the vector's inverted list; the
-    centroids broadcast, so this is one pass over the corpus. The rule
-    behind ann_ivf_assign, ann_ivf_search and semdedup_prune."""
-    v = _vectors(spark, sf_dir, partitions=32)
-    cc = _vectors(spark, sf_dir).filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cnrm"),
-    )
-    cos = cosine(dot_product(F.col("e"), F.col("ce")), F.col("nrm"), F.col("cnrm"))
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "centroid_id")
-    return (
-        v.join(F.broadcast(cc), how="cross")
-        .select("vec_id", *carry, "centroid_id", cos.alias("cos"))
-        .select("vec_id", *carry, "centroid_id", F.row_number().over(w).alias("rn"))
+#: IVF seed centroids: the vectors vec_id < IVF_SEEDS
+IVF_SEEDS = 16
+
+
+def _ivf_centroids(spark, sf_dir):
+    """(ids, matrix) of the IVF_SEEDS seed centroids, on the driver."""
+    return _bounded_block(
+        _embeddings(spark, sf_dir).filter(F.col("vec_id") < IVF_SEEDS), IVF_SEEDS
     )
 
 
-def _ivf_lists(ranked):
-    """(vec_id, e, nrm, centroid_id): every vector in exactly its
-    nearest list."""
-    return ranked.filter(F.col("rn") == 1).select("vec_id", "e", "nrm", "centroid_id")
+def _nearest_centroids(mat, c_ids, c_mat, n: int):
+    """``local_topk`` positions of each row's ``n`` nearest seed
+    centroids by cosine (a NULL cosine last, ties → lower centroid
+    id): the rule behind ann_ivf_assign, ann_ivf_search and
+    semdedup_prune."""
+    return local_topk(block_cosine(mat, c_mat), c_ids, n)
+
+
+def _ivf_lists(spark, sf_dir, carry: bool = False):
+    """(vec_id, [e, nrm,] centroid_id): every vector in exactly its
+    nearest list — one kernel pass over the corpus splits against the
+    16 centroids closed over the scan. ``carry`` adds the widened
+    vector and its squared norm (the same fold as ``dot_product(e,
+    e)``) for a cosine computed downstream."""
+    c_ids, c_mat = _ivf_centroids(spark, sf_dir)
+
+    def assign(ids, mat):
+        rows, cols = _nearest_centroids(mat, c_ids, c_mat, 1)
+        out = {"vec_id": ids[rows]}
+        if carry:
+            out["e"] = list(mat[rows])
+            out["nrm"] = sq_norms(mat)[rows]
+        out["centroid_id"] = c_ids[cols]
+        return pd.DataFrame(out)
+
+    carried = "e array<double>, nrm double, " if carry else ""
+    return _embedding_scan(
+        _embeddings(spark, sf_dir), assign, f"vec_id bigint, {carried}centroid_id bigint"
+    )
 
 
 def ann_ivf_assign(spark, sf_dir):
     """IVF assignment step: vectors vec_id < 16 act as deterministic seed
     centroids; every vector maps to its nearest centroid by cosine
-    (ties → lower centroid id). Broadcast the 16 centroids; one pass
-    over the corpus — the bucketing that makes IVF probe-local at scale.
+    (ties → lower centroid id). The 16 centroids ride the corpus scan;
+    one pass over the corpus — the bucketing that makes IVF probe-local
+    at scale.
     """
-    return (
-        _seed_centroid_ranks(spark, sf_dir)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "centroid_id")
-        .orderBy("vec_id")
-    )
+    return _ivf_lists(spark, sf_dir).orderBy("vec_id")
 
 
 def ann_ivf_search(spark, sf_dir, nprobe: int = 2):
@@ -1449,31 +1353,25 @@ def ann_ivf_search(spark, sf_dir, nprobe: int = 2):
     (candidates ≈ nprobe/16 of the corpus, never all pairs). Assignment
     reuses ann_ivf_assign's centroid rule exactly, so the oracle
     replicates the identical partition of the corpus and recall drift
-    is impossible by construction.
+    is impossible by construction. The queries' probed lists are
+    computed on the driver; each scan task assigns its vectors and
+    masks out every vector outside them.
     """
-    ranked = _seed_centroid_ranks(spark, sf_dir, "e", "nrm")
-    # query side: probe the nprobe nearest lists
-    probes = ranked.filter(
-        (F.col("vec_id") < KNN_QUERY_MAX_ID) & (F.col("rn") <= nprobe)
-    ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        "centroid_id",
-    )
-    cos_q = cosine(dot_product(F.col("qe"), F.col("e")), F.col("qnrm"), F.col("nrm"))
-    pairs = (
-        F.broadcast(probes)
-        .join(_ivf_lists(ranked), "centroid_id")
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            cos_q.alias("cos"),
-        )
-        .distinct()
-    )
-    return _per_query_topk(pairs, "cos")
+    c_ids, c_mat = _ivf_centroids(spark, sf_dir)
+
+    def candidates(q_mat):
+        probed = np.zeros((q_mat.shape[0], len(c_ids)), dtype=bool)
+        probed[_nearest_centroids(q_mat, c_ids, c_mat, nprobe)] = True
+
+        def mask(mat):
+            if not len(c_ids):
+                return np.zeros((len(probed), len(mat)), dtype=bool)
+            _, lists = _nearest_centroids(mat, c_ids, c_mat, 1)
+            return probed[:, lists]
+
+        return mask
+
+    return _knn_topk(spark, sf_dir, KNN_QUERY_MAX_ID, candidates).orderBy("query_id", "rnk")
 
 
 #: product-quantization geometry: subspaces × codebook entries. The
@@ -1585,7 +1483,7 @@ def ann_pq_search(spark, sf_dir):
     lists (probe-local candidates) — the query here runs corpus-wide
     to exercise the ADC machinery end to end."""
     adc = _pq_adc(spark, sf_dir, _vectors(spark, sf_dir, partitions=32))
-    return _per_query_topk(adc, "adc", desc=False)
+    return _per_query_topk(adc, "adc", desc=False).orderBy("query_id", "rnk")
 
 
 #: ADC candidate budget for the rerank stage (see ann_pq_rerank)
@@ -1620,7 +1518,7 @@ def ann_pq_rerank(spark, sf_dir, candidates: int = PQ_RERANK_CANDIDATES):
             "query_id", "neighbor_id", _pq_sqdist(F.col("qe"), F.col("ne")).alias("dist")
         )
     )
-    return _per_query_topk(exact, "dist", desc=False)
+    return _per_query_topk(exact, "dist", desc=False).orderBy("query_id", "rnk")
 
 
 #: sliding-window chunking geometry (chars per chunk / window stride)
@@ -1945,7 +1843,7 @@ def semdedup_prune(spark, sf_dir):
     never all-pairs. Output: every vector with its cluster and an int
     kept flag (1 = survives), so downstream joins can filter or audit.
     """
-    lists = _ivf_lists(_seed_centroid_ranks(spark, sf_dir, "e", "nrm"))
+    lists = _ivf_lists(spark, sf_dir, carry=True)
     a = lists.alias("a")
     b = lists.alias("b")
     cos_ab = cosine(
@@ -3400,8 +3298,6 @@ def heavy_hitters(spark, sf_dir, m: int = MG_CAPACITY):
     tests/test_heavy_hitters.py): est ≤ true, true − est ≤ n/(m+1), so
     every token with frequency > n/(m+1) is present.
     """
-    import pandas as pd
-
     tok = token_explode(table(spark, sf_dir, "documents"), "text", "doc_id")
 
     def mg(batches):

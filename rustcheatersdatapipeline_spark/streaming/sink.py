@@ -19,8 +19,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.dedup import keyed_dedup
-from ..warehouse.writers import insert_if_absent, upsert_latest_wins
+from ..warehouse.writers import keyed_merge
 
 
 class ParquetMergeSink:
@@ -53,22 +52,10 @@ class ParquetMergeSink:
             return None
         return self.spark.read.parquet(self.path)
 
-    def _collapse(self, batch_df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        order = (
-            [F.col(c).desc() for c in self.order_by] if self.order_by else None
-        )
-        return keyed_dedup(batch_df, self.keys, order_by=order)
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        prior = self.current()
-        if prior is None:
-            merged = self._collapse(batch_df)
-        elif self.mode == "nothing":
-            merged = insert_if_absent(prior, self._collapse(batch_df), self.keys)
-        else:
-            merged = upsert_latest_wins(prior, self._collapse(batch_df), self.keys)
+        merged = keyed_merge(
+            self.current(), batch_df, self.keys, self.mode, self.order_by
+        )
         tmp = f"{self.path}__staging"
         merged.write.mode("overwrite").parquet(tmp)
         final = self.spark.read.parquet(tmp)
@@ -102,27 +89,13 @@ class GoldStoreMergeSink:
         self.order_by = order_by
         self.mode = mode
 
-    def _collapse(self, batch_df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        order = (
-            [F.col(c).desc() for c in self.order_by] if self.order_by else None
-        )
-        return keyed_dedup(batch_df, self.keys, order_by=order)
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..warehouse.persist import publish_with_retry
 
-        collapsed = self._collapse(batch_df)
-
         def build(tables: dict) -> dict:
-            prior = tables.get(self.table)
-            if prior is None:
-                merged = collapsed
-            elif self.mode == "nothing":
-                merged = insert_if_absent(prior, collapsed, self.keys)
-            else:
-                merged = upsert_latest_wins(prior, collapsed, self.keys)
+            merged = keyed_merge(
+                tables.get(self.table), batch_df, self.keys, self.mode, self.order_by
+            )
             return {self.table: merged}
 
         publish_with_retry(self.store, build)

@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.cleaning import time_of_day
-from ..operators.dedup import keyed_dedup
-from .writers import date_dim, insert_if_absent, upsert_latest_wins, with_surrogate_key
+from .writers import date_dim, keyed_merge, upsert_latest_wins, with_surrogate_key
 
 #: dim → (natural-key ordering for D14 surrogate assignment, sk name)
 DIM_KEYS: dict[str, tuple[list[str], str]] = {
@@ -301,14 +300,6 @@ def build_warehouse(
                 gold[fact] = prior
             continue
         batch = loader(silver[fact], gold, dates)
-        prior = existing.get(fact)
-        if prior is None:
-            # first batch: collapse in-batch key duplicates like the
-            # target PK would (first-writer-wins for DO NOTHING)
-            gold[fact] = keyed_dedup(batch, keys)
-        elif mode == "nothing":
-            gold[fact] = insert_if_absent(prior, keyed_dedup(batch, keys), keys)
-        else:
-            gold[fact] = upsert_latest_wins(prior, keyed_dedup(batch, keys), keys)
+        gold[fact] = keyed_merge(existing.get(fact), batch, keys, mode)
 
     return gold

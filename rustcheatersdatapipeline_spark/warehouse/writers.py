@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.dedup import keyed_dedup
+
 
 def with_surrogate_key(
     df: DataFrame, order_cols: list[str], sk_col: str, offset: int = 0
@@ -58,6 +60,29 @@ def upsert_latest_wins(
         .filter(F.col("__rn") == 1)
         .drop("__prio", "__rn")
     )
+
+
+def keyed_merge(
+    prior: DataFrame | None,
+    batch: DataFrame,
+    keys: list[str],
+    mode: str,
+    order_by: list[str] | None = None,
+) -> DataFrame:
+    """Merge one batch into a keyed table — the D11/D12 decision of
+    every fact load and merge sink. The batch first collapses its own
+    key duplicates like the target PK would (``keyed_dedup``; the
+    survivor is the first in descending ``order_by`` when given). With
+    no ``prior`` the collapsed batch is the table; otherwise ``mode``
+    'nothing' is D11 ``insert_if_absent`` and anything else D12
+    ``upsert_latest_wins``."""
+    order = [F.col(c).desc() for c in order_by] if order_by else None
+    collapsed = keyed_dedup(batch, keys, order_by=order)
+    if prior is None:
+        return collapsed
+    if mode == "nothing":
+        return insert_if_absent(prior, collapsed, keys)
+    return upsert_latest_wins(prior, collapsed, keys)
 
 
 def scd2_build(

@@ -41,9 +41,14 @@ ANNOTATED = {
         "(AQE picks the strategy from runtime sizes)"
     ),
     "ann_lsh_search": (
-        "bucket equality join — candidates bounded per bucket, no all-pairs; "
-        "signature is an interpreted zip_with/aggregate fold in the JVM "
-        "(CodegenFallback, no Python)"
+        "one MapInPandas scan of the corpus splits: the vector kernel signs "
+        "each vector into its buckets, masks candidates to the query's own "
+        "bucket per table and keeps a local top-k — no pair join, no "
+        "distinct, no interpreted zip_with/aggregate fold; one Window ranks"
+    ),
+    "ann_ivf_assign": (
+        "one MapInPandas scan: each vector's argmax over the 16 collected "
+        "seed centroids (vector kernel); the only Exchange is the ORDER BY"
     ),
     "doc_fingerprint": (
         "zero-shuffle winnowing: array expressions only, one Exchange for the "
@@ -70,8 +75,9 @@ ANNOTATED = {
     ),
     "hybrid_search_rrf": (
         "union of the two arms' top-k + one per-(query,doc) hash aggregate; "
-        "both BroadcastNestedLoopJoins have bounded broadcast sides (kNN "
-        "query set; 1-row bm25 stats) — never corpus x corpus"
+        "the kNN arm is one MapInPandas kernel scan against the collected "
+        "query block, and the one BroadcastNestedLoopJoin broadcasts bm25's "
+        "1-row stats — never corpus x corpus"
     ),
 }
 

@@ -46,6 +46,18 @@ def test_release_empties_persistent_rdds(spark, sf_dir, clean_registry):
     assert _persistent_rdd_ids(spark) & created == set()
 
 
+def test_graph_triangles_leaves_no_persistent_rdd(spark, sf_dir, clean_registry):
+    """triangle_counts holds no checkpoint (its e1/e2/closing consumers
+    read the orientation through ReusedExchange), so once the registry
+    is released no persistent RDD the query made is left, even while
+    the returned frame is still referenced."""
+    base_ids = _persistent_rdd_ids(spark)
+    df = T.graph_triangles(spark, sf_dir)
+    assert df.count() > 0
+    plan_cache.release(spark)
+    assert _persistent_rdd_ids(spark) - base_ids == set()
+
+
 def _registry_owned_rdd_ids(spark) -> set:
     reg = getattr(spark, plan_cache._REG_ATTR, {})
     owned: set = set()

@@ -178,3 +178,16 @@ def test_zero_norm_vectors_match_the_oracle(spark, zero_norm_dir, name):
     _match_zero_norm_oracle(
         _ALL_QUERIES[name](spark, zero_norm_dir), zero_norm_dir, _ALL_ORACLES[name], name
     )
+
+
+def test_driver_blocks_are_bounded_by_an_assertion(spark, sf_dir):
+    """Every query or centroid block the vector searches collect goes
+    through ``_bounded_block``, which raises instead of collecting more
+    than its bound."""
+    from pyspark.sql import functions as F
+
+    emb = T._embeddings(spark, sf_dir).filter(F.col("vec_id") < 4)
+    ids, mat = T._bounded_block(emb, 4)
+    assert ids.tolist() == [0, 1, 2, 3] and mat.shape[0] == 4
+    with pytest.raises(ValueError, match="bound of 3"):
+        T._bounded_block(emb, 3)
